@@ -162,21 +162,13 @@ def run_bench(
     exec_cores: int = 4,
     exec_mem: str = "3g",
     driver_cpus: str | None = None,
-) -> tuple[float, dict]:
+) -> float:
     env = dict(
         os.environ,
         SPARK_GRAFT_MASTER=MASTER_URL,
         SPARK_GRAFT_CPUS=str(total_cores),
         SPARK_GRAFT_BENCH_ONLY_ER="1",
         SPARK_GRAFT_BENCH_DOCS=n_docs,
-        # clean throughput: the eager per-stage timing adds one count
-        # barrier job per stage — pure fixed latency that lands equally
-        # at N and 4N and so depresses the efficiency ratio; scaling
-        # runs measure the un-instrumented pipeline (per-stage
-        # breakdowns come from diagnostic runs with the flag on)
-        SPARK_GRAFT_BENCH_STAGE_TIMING=os.environ.get(
-            "SPARK_GRAFT_BENCH_STAGE_TIMING", "0"
-        ),
         EL_SPARK_EXTRA_CONF=json.dumps(
             {
                 "spark.executor.cores": exec_cores,
@@ -210,7 +202,7 @@ def run_bench(
         sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:])
         raise RuntimeError("bench produced no JSON")
     rec = json.loads(lines[-1])
-    return float(rec["queries"]["er_pipeline"]), rec.get("er_stages", {})
+    return float(rec["queries"]["er_pipeline"])
 
 
 def _spin(n: int) -> int:
@@ -303,7 +295,6 @@ def main() -> None:
     master = start_master()
     tag_n, tag_4n = f"{nw_n}w", f"{nw_4n}w"
     results = {tag_n: [], tag_4n: []}
-    stages = {tag_n: [], tag_4n: []}
     try:
         for r in range(rounds):
             for tag, nw in ((tag_n, nw_n), (tag_4n, nw_4n)):
@@ -324,7 +315,7 @@ def main() -> None:
                     # this host's 2x run-to-run multi-tenant noise, the
                     # min over many samples is the noise-floor estimate
                     for _ in range(runs_per_fleet):
-                        t, st = run_bench(
+                        t = run_bench(
                             nw * cores,
                             zpath,
                             n_docs,
@@ -333,10 +324,8 @@ def main() -> None:
                             driver_cpus=driver_cpus,
                         )
                         results[tag].append(t)
-                        stages[tag].append(st)
                         print(
-                            f"round {r}: {nw} workers ({nw * cores} cores): "
-                            f"{t:.1f}s stages={st}",
+                            f"round {r}: {nw} workers ({nw * cores} cores): {t:.1f}s",
                             file=sys.stderr,
                         )
                 finally:
@@ -359,11 +348,6 @@ def main() -> None:
         for r in range(rounds)
         if len(results[tag_4n]) > r * runs_per_fleet
     ]
-    # per-stage timings of the fastest run at each level: a serial
-    # choke-point would show as a stage whose seconds do NOT shrink
-    # from N to 4N executors
-    st_n = stages[tag_n][results[tag_n].index(t_n)]
-    st_4n = stages[tag_4n][results[tag_4n].index(t_4n)]
     nd = int(n_docs)
     eff = (t_n / t_4n) / 4
     out = {
@@ -381,13 +365,6 @@ def main() -> None:
         "per_round_efficiency": per_round_eff,
         "efficiency_vs_cpu_ceiling": round(eff / ceil["ceiling"], 4),
         "cpu_ceiling": ceil,
-        "stages_N_sec": st_n,
-        "stages_4N_sec": st_4n,
-        "per_stage_speedup_N_to_4N": {
-            k: round(st_n[k] / st_4n[k], 3)
-            for k in st_n
-            if k in st_4n and st_4n[k]
-        },
         "all_runs": results,
     }
     print(json.dumps(out))

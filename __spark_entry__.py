@@ -96,11 +96,9 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except OSError:
         return df
     if size < _ONE_SPLIT_BYTES:
-        from entity_linking_in_biomedical_spark.session import barrier_level
+        from entity_linking_in_biomedical_spark.session import pin
 
-        df = df.repartition(spark.sparkContext.defaultParallelism).localCheckpoint(
-            eager=False, storageLevel=barrier_level()
-        )
+        df = pin(df.repartition(spark.sparkContext.defaultParallelism))
     return df
 
 

@@ -35,6 +35,22 @@ def _probe_loop(n: int) -> int:
     return s
 
 
+def _membw_probe() -> float:
+    """Memory-bandwidth probe in GB/s: 64 MiB copied twice (256 MB
+    moved). The round-5 session measured this collapsing from ~15 GB/s
+    to **0.03 GB/s** (500x) while the CPU loop stayed healthy — host
+    memory overcommit, and the single variable that explains the
+    inflated-stage ER draws. Bounded size so a degraded window costs
+    ~10 s here, not minutes."""
+    import numpy as np
+
+    buf = np.zeros(2**23)  # 64 MiB of float64
+    t0 = time.time()
+    for _ in range(2):
+        buf = buf.copy()
+    return round(2 * 2 * (2**23 * 8) / (time.time() - t0) / 1e9, 2)
+
+
 def _host_probe(cpus: int) -> dict[str, float]:
     """Fixed-work CPU calibration recorded alongside every bench draw,
     so a reader can normalize wall numbers across host windows: this
@@ -52,23 +68,10 @@ def _host_probe(cpus: int) -> dict[str, float]:
     with mp.Pool(cpus) as pool:
         pool.map(_probe_loop, [10_000_000] * cpus)
     t2 = time.time()
-    # memory-bandwidth probe: 64 MiB copied twice (256 MB moved). The
-    # round-5 session measured this collapsing from ~15 GB/s to
-    # **0.03 GB/s** (500x) while the CPU loop stayed healthy — host
-    # memory overcommit, and the single variable that explains the
-    # inflated-stage ER draws. Bounded size so a degraded window costs
-    # ~10 s here, not minutes.
-    import numpy as np
-
-    buf = np.zeros(2**23)  # 64 MiB of float64
-    t3 = time.time()
-    for _ in range(2):
-        buf = buf.copy()
-    membw = round(2 * 2 * (2**23 * 8) / (time.time() - t3) / 1e9, 2)
     return {
         "probe_1t_sec": round(t1 - t0, 3),
         "probe_mt_sec": round(t2 - t1, 3),
-        "probe_membw_gbps": membw,
+        "probe_membw_gbps": _membw_probe(),
     }
 
 
@@ -193,34 +196,19 @@ def main() -> None:
     warm_res = run_pipeline(spark, warm_docs, ents, embeddings=emb, abbr_map=abbr)
     force(warm_res["linked_documents"])
 
-    # SPARK_GRAFT_BENCH_STAGE_TIMING=0: skip the eager per-stage count
-    # barriers (one extra job per stage — fixed latency that lands
-    # equally at every parallelism level and so depresses scaling
-    # ratios); the cluster scaling harness sets it for clean throughput
-    stage_timing = os.environ.get("SPARK_GRAFT_BENCH_STAGE_TIMING", "1") != "0"
-    er_sec, er_res = None, None
+    # per-stage attribution comes from the traced run report
+    # (perfbench/run.py --trace 1), not from this timed run
+    er_sec = None
     for _ in range(repeats):
         t0 = time.time()
-        res = run_pipeline(
-            spark, docs, ents, embeddings=emb, abbr_map=abbr,
-            eager_stage_timing=stage_timing,
-        )
+        res = run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr)
         force(res["linked_documents"])
         sec = time.time() - t0
-        if er_sec is None or sec < er_sec:
-            er_sec, er_res = sec, res
+        er_sec = sec if er_sec is None else min(er_sec, sec)
     timings["er_pipeline"] = round(er_sec, 3)
     repeats_map["er_pipeline"] = repeats
     docs_per_sec = round(n_docs / er_sec, 2)
-    # per-stage breakdown from the min-total run (eager barriers inside
-    # the same run; the remainder vs er_pipeline is the final
-    # cluster-attach join + sink)
-    er_stages = {
-        m["stage"]: m["sec"] for m in er_res["metrics"] if m.get("sec") is not None
-    }
     print(f"  er_pipeline: {er_sec:.2f}s ({docs_per_sec} docs/s)", file=sys.stderr)
-    for st, sec in er_stages.items():
-        print(f"    {st}: {sec:.2f}s", file=sys.stderr)
 
     # ---- preprocess plan (E1): PubTator corpus -> context/mentions ----
     # (the reference's #1 entry point, medmention_preprocess.py). Corpus
@@ -261,13 +249,6 @@ def main() -> None:
 
     # ---- operator suite over the driver tables ------------------------
     if os.environ.get("SPARK_GRAFT_BENCH_ONLY_ER"):
-        import numpy as np
-
-        buf = np.zeros(2**23)
-        t3 = time.time()
-        for _ in range(2):
-            buf = buf.copy()
-        membw_post = round(2 * 2 * (2**23 * 8) / (time.time() - t3) / 1e9, 2)
         print(
             json.dumps(
                 {
@@ -275,14 +256,13 @@ def main() -> None:
                     "value": docs_per_sec,
                     "unit": "docs/sec",
                     "queries": timings,
-                    "er_stages": er_stages,
                     "sf": sf,
                     "cpus": cpus,
                     "er_corpus_docs": n_docs,
                     "bench_repeats": repeats,
                     "repeats": repeats_map,
                     **host_probe,
-                    "probe_membw_gbps_post": membw_post,
+                    "probe_membw_gbps_post": _membw_probe(),
                 }
             )
         )
@@ -391,13 +371,7 @@ def main() -> None:
     # re-probe memory bandwidth AFTER the suite: the degraded windows on
     # this host shift mid-run (BENCH/BASELINE.md), so a pre/post bracket
     # tells the reader whether the window held for the whole draw
-    import numpy as np
-
-    buf = np.zeros(2**23)
-    t3 = time.time()
-    for _ in range(2):
-        buf = buf.copy()
-    membw_post = round(2 * 2 * (2**23 * 8) / (time.time() - t3) / 1e9, 2)
+    membw_post = _membw_probe()
     print(
         json.dumps(
             {
@@ -405,7 +379,6 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "er_stages": er_stages,
                 "sf": sf,
                 "cpus": cpus,
                 "er_docs_per_sec": docs_per_sec,

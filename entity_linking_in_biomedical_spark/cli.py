@@ -285,13 +285,15 @@ def _cmd_stitch(args: argparse.Namespace) -> int:
     keys stay stable. Prints a one-line summary; writes (id, cluster)
     parquet with inherited ids (fresh clusters namespaced)."""
     from .operators.matching import stable_cluster_ids
+    from .session import pin
 
     spark = _session(args.master)
     old = spark.read.parquet(args.old)
     new = spark.read.parquet(args.new)
-    out = stable_cluster_ids(
-        old, new, id_col=args.id_col, cluster_col=args.cluster_col
-    ).localCheckpoint()
+    out = pin(
+        stable_cluster_ids(old, new, id_col=args.id_col, cluster_col=args.cluster_col),
+        eager=True,
+    )
     n_fresh = out.filter("is_fresh").count()
     (
         out.selectExpr(

@@ -25,7 +25,7 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import Column, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 # universal-hash family over the 60-bit gram hash
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne); a*h' < 2^59 — no overflow
@@ -144,26 +144,9 @@ def with_band_keys(df, grams: Column, num_hashes: int, bands: int, out: str = "b
     then derive band keys from the materialized attribute. Returns df
     with ``out`` = exploded band key."""
     rows = num_hashes // bands
-    sigged = df.withColumn("_sig", minhash_signature(grams, num_hashes)).localCheckpoint(eager=False, storageLevel=barrier_level())
+    sigged = pin(df.withColumn("_sig", minhash_signature(grams, num_hashes)))
     return sigged.withColumn(out, F.explode(lsh_band_keys(F.col("_sig"), bands, rows))).drop(
         "_sig"
-    )
-
-
-def ngram_minhash_bands(
-    col: Column | str,
-    ns: tuple[int, ...] = (2, 3),
-    num_hashes: int = 12,
-    bands: int = 12,
-) -> Column:
-    """Convenience: string column -> array of LSH band keys (1-row
-    bands: for surface-form blocking the miss probability for a typo
-    must be tiny; the downstream scorer + hot-key cap absorb the extra
-    false candidates)."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    return lsh_band_keys(
-        minhash_signature(char_ngrams_multi(col, ns), num_hashes), bands, rows
     )
 
 

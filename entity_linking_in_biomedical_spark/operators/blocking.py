@@ -49,7 +49,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.ngrams import char_ngrams_multi, lsh_band_keys, minhash_signature
 from ..functions.normalize import norm_key
-from ..session import barrier_level
+from ..session import pin
 
 
 def entity_names(entities: DataFrame) -> DataFrame:
@@ -256,7 +256,7 @@ def surface_blocking_keys(
     # stage at every scale.
     par = mentions.sparkSession.sparkContext.defaultParallelism
     surfaces = mentions.select("norm").distinct().repartition(par)
-    return surfaces.withColumn(
+    return pin(surfaces.withColumn(
         "bk",
         F.explode(
             blocking_keys(
@@ -264,7 +264,7 @@ def surface_blocking_keys(
                 del2_max_len, word_num_hashes, phonetic,
             )
         ),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
 
 
 def blocking_skew_bound(
@@ -368,7 +368,7 @@ def block_candidates(
         # surface_blocking_keys (the synonym frame arrives on the
         # byte-coalesced tail of entity_names' dedup exchange)
         df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        return df.withColumn(
+        return pin(df.withColumn(
             "bk",
             F.explode(
                 blocking_keys(
@@ -376,7 +376,7 @@ def block_candidates(
                     del2_max_len, word_num_hashes, phonetic,
                 )
             ),
-        ).localCheckpoint(eager=False, storageLevel=barrier_level())
+        ))
 
     m_keys = (
         surface_keys

@@ -34,7 +34,7 @@ Scale shape at 10^12 docs:
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 # C4 (Raffel et al. 2020, "Exploring the Limits of Transfer Learning
 # with a Unified Text-to-Text Transformer", §2.2) line/page rules.
@@ -331,7 +331,7 @@ def dedup_lines_batch(
     keep-first aggregate runs only over fresh-line occurrences —
     O(batch) rows end to end.
     """
-    occ = _line_occurrences(batch, id_col, text_col).localCheckpoint(eager=False, storageLevel=barrier_level())
+    occ = pin(_line_occurrences(batch, id_col, text_col))
     batch_keys = occ.select(F.col("h")).distinct()
     # indexed hashes that actually occur in this batch: map-side scan
     # of the index, batch-sized result

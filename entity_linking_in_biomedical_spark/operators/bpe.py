@@ -40,7 +40,7 @@ import re
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.text_metrics import tokens
-from ..session import barrier_level
+from ..session import pin
 
 _SYMBOL_RE = re.compile(r"^[a-z0-9]+$")
 
@@ -108,10 +108,9 @@ def bpe_fit(
     corpus-too-small condition, not a runtime state to paper over)."""
     if merges < 1:
         raise ValueError(f"merges must be >= 1, got {merges}")
-    words = (
+    words = pin(
         word_freq(docs, text_col)
         .select("freq", _padded_chars(F.col("word")).alias("seq"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     out: list[tuple[int, str, str, int]] = []
     for rank in range(1, merges + 1):
@@ -132,9 +131,9 @@ def bpe_fit(
         # replay all r-1 prior merge projections from the base (O(k^2)
         # regexp work across a long fit); with it each round is one
         # projection over materialized blocks
-        words = words.select(
+        words = pin(words.select(
             "freq", apply_merge(F.col("seq"), a, b).alias("seq")
-        ).localCheckpoint(eager=False, storageLevel=barrier_level())
+        ))
     return out
 
 

@@ -25,7 +25,7 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 
 def _canon(e: DataFrame) -> DataFrame:
@@ -120,11 +120,11 @@ def connected_components(
         raise ValueError(f"digest_every must be >= 1, got {digest_every}")
     # lazy checkpoints: the digest action materializes the iteration's
     # edge set AND computes the convergence digest in one job
-    e = _canon(edges).localCheckpoint(eager=False, storageLevel=barrier_level())
+    e = pin(_canon(edges))
     prev = None
     iters = 0
     for iters in range(1, max_iter + 1):
-        e = _canon(_small_star(_large_star(e))).localCheckpoint(eager=False, storageLevel=barrier_level())
+        e = pin(_canon(_small_star(_large_star(e))))
         if iters % digest_every != 0 and iters != max_iter:
             continue
         d = _digest(e)
@@ -194,9 +194,8 @@ def merge_into_clusters(
     # probe is snapshot-sized, so the semi-join broadcasts it and the
     # state is only SCANNED; `hit` is snapshot-sized from here on and
     # materialized once (lazy localCheckpoint) for its three consumers.
-    hit = (
+    hit = pin(
         assignments.join(F.broadcast(probe), "node", "left_semi")
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     hit_nodes = hit.select("node")
     rep = ends.join(F.broadcast(hit), "node", "left").select(
@@ -306,24 +305,19 @@ def retract_from_clusters(
 
     Returns (updated assignments, CC iterations on the subgraph).
     """
-    r = _canon(retracted).localCheckpoint(
-        eager=False, storageLevel=barrier_level()
-    )
+    r = pin(_canon(retracted))
     r_ends = (
         r.select(F.col("src").alias("node"))
         .unionByName(r.select(F.col("dst").alias("node")))
         .distinct()
     )
-    aff = (
+    aff = pin(
         assignments.join(F.broadcast(r_ends), "node", "left_semi")
         .select("cluster_id")
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     members = assignments.join(F.broadcast(aff), "cluster_id", "left_semi")
-    aff_nodes = members.select("node").localCheckpoint(
-        eager=False, storageLevel=barrier_level()
-    )
+    aff_nodes = pin(members.select("node"))
     sub = (
         _canon(edges)
         .join(aff_nodes.withColumnRenamed("node", "src"), "src", "left_semi")
@@ -412,7 +406,7 @@ def edge_triangle_support(
     (closing edges still count wedges centered elsewhere). None (the
     default) is exact.
     """
-    e = _canon(edges).localCheckpoint(eager=False, storageLevel=barrier_level())
+    e = pin(_canon(edges))
     deg = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -425,13 +419,13 @@ def edge_triangle_support(
     # direct lower (deg, id) -> higher; carry the head's order key so
     # wedge endpoints can be compared without a global rank pass
     lo_first = F.struct(F.col("ds"), F.col("src")) < F.struct(F.col("dd"), F.col("dst"))
-    o = ed.select(
+    o = pin(ed.select(
         F.when(lo_first, F.col("src")).otherwise(F.col("dst")).alias("u"),
         F.when(lo_first, F.col("dst")).otherwise(F.col("src")).alias("v"),
         F.when(lo_first, F.struct(F.col("dd").alias("d"), F.col("dst").alias("n")))
         .otherwise(F.struct(F.col("ds").alias("d"), F.col("src").alias("n")))
         .alias("vkey"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     centers = o
     if max_out_degree is not None:
         ok = (
@@ -541,7 +535,7 @@ def closure_sensitivity(
     # _canon would drop the score column, so canonicalize inline:
     # undirected orientation, no self-loops, duplicate pairs collapse
     # to their best score, everything below min(ts) pruned up front
-    e = (
+    e = pin(
         scored_edges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -550,7 +544,6 @@ def closure_sensitivity(
         .filter((F.col("src") != F.col("dst")) & (F.col("score") >= min(ts)))
         .groupBy("src", "dst")
         .agg(F.max("score").alias("score"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     # per-threshold admitted-edge counts: ONE pass, k conditional sums
     counts = e.agg(
@@ -573,7 +566,7 @@ def closure_sensitivity(
                 (F.col("score") >= t) & (F.col("score") < prev_t)
             ).select("src", "dst")
             assign, _ = merge_into_clusters(assign, band)
-        assign = assign.localCheckpoint(eager=False, storageLevel=barrier_level())
+        assign = pin(assign)
         stats = (
             assign.groupBy("cluster_id")
             .agg(F.count("*").alias("sz"))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.lambdas import let_bound
 from ..functions.text_metrics import tokens
+from ..session import pin
 
 
 def word_ngrams(col, n: int):
@@ -160,13 +161,12 @@ def scrub_contamination(
     through as a row-local projection.
     """
     from .dedup import rebuild_minus_positions
-    from ..session import barrier_level
 
     maybe_b = F.broadcast if broadcast_test else (lambda df: df)
     t_hashes = _test_gram_hashes(test, text_col, n)
-    base = corpus.select(
+    base = pin(corpus.select(
         F.col(id_col).cast("string").alias("doc_id"), tokens(text_col).alias("toks")
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     drops = _collision_drops(base, maybe_b(t_hashes), n, margin, ["doc_id"])
     return rebuild_minus_positions(base, drops)
 
@@ -258,21 +258,20 @@ def scrub_interleaved(
     never carries through the token shuffle.
     """
     from .dedup import rebuild_minus_positions
-    from ..session import barrier_level
 
     maybe_b = F.broadcast if broadcast_test else (lambda df: df)
     t_hashes = _test_gram_hashes(test, "text", n)
-    ex = docs.select(
+    ex = pin(docs.select(
         F.col(id_col).cast("string").alias("doc_id"),
         F.posexplode(spans_col).alias("si", "sp"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
-    txt = ex.filter(F.col("sp.kind") == "text").select(
+    ))
+    txt = pin(ex.filter(F.col("sp.kind") == "text").select(
         "doc_id",
         "si",
         F.col("sp.text").alias("orig_text"),
         F.col("sp.offset").alias("offset"),
         tokens(F.col("sp.text")).alias("toks"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     keys = ["doc_id", "si"]
     drops = _collision_drops(txt, maybe_b(t_hashes), n, margin, keys)
     scr = rebuild_minus_positions(txt.select(*keys, "toks"), drops, tuple(keys))

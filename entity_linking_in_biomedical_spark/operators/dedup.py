@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.ngrams import lsh_band_keys, minhash_signature, with_band_keys
 from ..functions.text_metrics import fingerprint, simhash64, tokens
-from ..session import barrier_level
+from ..session import pin
 
 # Shared LSH parameters for minhash_near_duplicates — the DuckDB oracle
 # (__spark_entry__._oracle_minhash_dedup) MUST band identically, or it
@@ -116,11 +116,10 @@ def minhash_near_duplicates(
     otherwise produce O(n^2) pairs.
     Returns (a_id, b_id, jaccard) with a_id < b_id, deduped across bands.
     """
-    sh = _shingled(docs, id_col, text_col, shingle_k).localCheckpoint(eager=False, storageLevel=barrier_level())
-    banded = (
+    sh = pin(_shingled(docs, id_col, text_col, shingle_k))
+    banded = pin(
         with_band_keys(sh, F.col("shingles"), num_hashes, bands)
         .select("doc_id", "bk")
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     banded = _drop_big_buckets(banded, "bk", max_bucket)
     # id-only pair join + dedup FIRST; the shingle arrays re-attach
@@ -172,7 +171,7 @@ def ngram_jaccard_pairs(
     from pyspark.sql import Window
 
     t = jaccard_threshold
-    sh = _shingled(docs, id_col, text_col, shingle_k).localCheckpoint(eager=False, storageLevel=barrier_level())
+    sh = pin(_shingled(docs, id_col, text_col, shingle_k))
     # carry |shingles| through the explode (an int per row) instead of
     # re-attaching a sizes frame by doc_id later — one join/exchange
     # fewer (guide §2.4); document frequency as a whole-partition window
@@ -289,10 +288,10 @@ def simhash_near_duplicates(
     # materialize the simhash before fanning out into block keys: the
     # block projection references `sh` n_blocks+1 times and Catalyst's
     # projection collapse would re-evaluate the aggregate per reference
-    h = docs.select(
+    h = pin(docs.select(
         F.col(id_col).cast("string").alias("doc_id"), simhash64(text_col).alias("sh")
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
-    blocked = h.select(
+    ))
+    blocked = pin(h.select(
         "doc_id",
         "sh",
         F.explode(
@@ -308,7 +307,7 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("blk"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     blocked = _drop_big_buckets(blocked, "blk", max_bucket)
     pairs = (
         blocked.alias("x")
@@ -352,13 +351,13 @@ def embedding_near_duplicates(
     from ..functions.vectors import cosine_sim
     from .similarity import srp_table_keys_udf
 
-    base = embeddings.select(
+    base = pin(embeddings.select(
         F.col(id_col).cast("string").alias("vec_id"), F.col(vec_col).alias("v")
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
-    b = base.select(
+    ))
+    b = pin(base.select(
         "vec_id",
         F.explode(srp_table_keys_udf(F.col("v"), n_tables, bits)).alias("bkt"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     b = _drop_big_buckets(b, "bkt", max_bucket)
     pairs = (
         b.alias("x")
@@ -418,9 +417,9 @@ def remove_duplicate_passages(
     """
     k = window_k
     toks_e = tokens(text_col)
-    base = docs.select(
+    base = pin(docs.select(
         F.col(id_col).cast("string").alias("doc_id"), toks_e.alias("toks")
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     n = F.size("toks")
     windows = F.when(
         n >= k,
@@ -484,7 +483,7 @@ def rebuild_minus_positions(
     # drops feeds three consumers (semi, anti, kept anti-join); its
     # lineage re-runs the caller's window-collision detection, so pin
     # the (removal-proportional, small) frame once
-    drops = drops.localCheckpoint(eager=False, storageLevel=barrier_level())
+    drops = pin(drops)
     touched_keys = drops.select(*keys).distinct()
     touched = base.join(touched_keys, keys, "left_semi")
     untouched = base.join(touched_keys, keys, "left_anti")
@@ -582,10 +581,10 @@ def duplicate_passage_stats(
             ),
         ).otherwise(F.array().cast("array<string>"))
 
-    base = docs.select(
+    base = pin(docs.select(
         F.col(id_col).cast("string").alias("doc_id"),
         let_bound(tokens(text_col), _windows).alias("ws"),
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     wdf = base.select("doc_id", F.posexplode("ws").alias("pos", "w"))
     dup_w = (
         wdf.groupBy("w").agg(F.count("*").alias("c")).filter(F.col("c") >= 2)
@@ -794,9 +793,7 @@ def semantic_dedup(
     from ..functions.vectors import cosine_sim
     from .kmeans import kmeans_fit, kmeans_score
 
-    base = embeddings.select(F.col(id_col), F.col(vec_col)).localCheckpoint(
-        eager=False, storageLevel=barrier_level()
-    )
+    base = pin(embeddings.select(F.col(id_col), F.col(vec_col)))
     centroids = kmeans_fit(base, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     assigned = kmeans_score(base, centroids, vec_col=vec_col, out_col="__cl")
     pairable = assigned

@@ -31,7 +31,7 @@ No pair explosion anywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 
 def _singleton(id_col: str):
@@ -88,10 +88,9 @@ def cluster_pair_metrics(
     # plans/pipeline.py): cells' five consumers (sizes x2, join, both
     # scalar pair sums) all plan over the one materialized RDD instead
     # of re-running the corpus aggregation per consumer.
-    cells = (
+    cells = pin(
         a.groupBy("_p", "_g")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     psz = cells.groupBy("_p").agg(F.sum("c").alias("p_n"))
     gsz = cells.groupBy("_g").agg(F.sum("c").alias("g_n"))

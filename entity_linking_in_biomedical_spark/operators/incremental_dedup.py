@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.ngrams import lsh_band_keys, minhash_signature
 from ..functions.text_metrics import tokens
-from ..session import barrier_level
+from ..session import pin
 from .dedup import (
     MINHASH_DEDUP_BANDS,
     MINHASH_DEDUP_MAX_BUCKET,
@@ -128,10 +128,10 @@ def flag_against_index(
     index must not flag every doc against itself)."""
     if num_hashes % bands:
         raise ValueError(f"bands must divide num_hashes ({num_hashes}/{bands})")
-    bidx = build_dedup_index(
+    bidx = pin(build_dedup_index(
         batch, id_col=id_col, text_col=text_col, shingle_k=shingle_k,
         num_hashes=num_hashes,
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
 
     # The batch side of every index join is BROADCAST-hinted and the
     # index side is pre-pruned by broadcast semi-joins on the batch's
@@ -147,7 +147,7 @@ def flag_against_index(
         .select("doc_id", "dup_of", F.lit("exact").alias("kind"), F.lit(1.0).alias("score"))
     )
 
-    bkeys = _banded(bidx, bands, num_hashes).localCheckpoint(eager=False, storageLevel=barrier_level())
+    bkeys = pin(_banded(bidx, bands, num_hashes))
     # prune the banded index to the batch's band keys BEFORE the
     # hot-bucket count: the semi-join keeps every index row of a probed
     # key, so per-key counts (and the cap's effect) are identical to
@@ -157,7 +157,9 @@ def flag_against_index(
         F.broadcast(bkeys.select("bk").distinct()), "bk", "left_semi"
     )
     ib = _drop_big_buckets(ib, "bk", max_bucket)
-    cand = (
+    # materialized once: consumed as both the est left side and the
+    # broadcast probe that prunes the index's signature re-attach
+    cand = pin(
         F.broadcast(bkeys.alias("b"))
         .join(ib.alias("i"), "bk")
         .filter(F.col("b.doc_id") != F.col("i.doc_id"))
@@ -165,9 +167,6 @@ def flag_against_index(
             F.col("b.doc_id").alias("doc_id"), F.col("i.doc_id").alias("i_id")
         )
         .dropDuplicates(["doc_id", "i_id"])
-        # materialized once: consumed as both the est left side and the
-        # broadcast probe that prunes the index's signature re-attach
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     # est jaccard = fraction of agreeing signature components; sigs
     # re-attach by id AFTER the id-only pair dedup (the corpus minhash

@@ -36,11 +36,11 @@ count and the oracle replay corpus-independent, like classifier.lr_fit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.vectors import _dbl, dot_product
+from ..functions.vectors import _dbl
 from .classifier import _round9
-from ..session import barrier_level
+from ..session import pin
 
 
 def _self_dot(cent: list[float]) -> float:
@@ -81,18 +81,6 @@ def _assign_sql(vcol: str, centroids: list[list[float]]) -> str:
     return f"array_min(array({','.join(parts)})).c"
 
 
-def _assign_expr(v: Column, centroids: list[list[float]]) -> Column:
-    """Column form of :func:`_assign_sql` for an arbitrary vector
-    expression (kept for API compatibility; the hot paths stage the
-    doubles column and use the SQL form directly)."""
-    scores = []
-    for c, cent in enumerate(centroids):
-        lit = F.lit([float(a) for a in cent])
-        score = F.lit(_self_dot(cent)) - F.lit(2.0) * dot_product(v, lit)
-        scores.append(F.struct(score.alias("s"), F.lit(c).alias("c")))
-    return F.array_min(F.array(*scores)).getField("c")
-
-
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -106,7 +94,7 @@ def kmeans_fit(
     :func:`kmeans_score` as plan literals)."""
     if k < 1 or iters < 1:
         raise ValueError(f"k and iters must be >= 1, got k={k} iters={iters}")
-    base = df.select(F.col(id_col), _dbl(vec_col).alias("__v")).localCheckpoint(eager=False, storageLevel=barrier_level())
+    base = pin(df.select(F.col(id_col), _dbl(vec_col).alias("__v")))
     init_rows = base.orderBy(id_col).limit(k).collect()
     centroids = [[float(x) for x in r["__v"]] for r in init_rows]
     if not centroids:

@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.text_metrics import tokens
-from ..session import barrier_level
+from ..session import pin
 
 UNK = "<unk>"
 
@@ -181,11 +181,11 @@ def fit_bigram_lm(
         .select("w")
     )
     if materialize:
-        vocab = vocab.localCheckpoint(eager=True, storageLevel=barrier_level())
+        vocab = pin(vocab, eager=True)
     bg = doc_bigram_counts(corpus, vocab, id_col=id_col, text_col=text_col)
     bigrams = bg.groupBy("w1", "w2").agg(F.sum("k").alias("cb"))
     if materialize:
-        bigrams = bigrams.localCheckpoint(eager=True, storageLevel=barrier_level())
+        bigrams = pin(bigrams, eager=True)
     contexts = bigrams.groupBy("w1").agg(F.sum("cb").alias("cu"))
     # V = distinct mapped types over bigram-participating tokens; every
     # token of a >=2-token doc participates (first as w1, last as w2),
@@ -196,8 +196,8 @@ def fit_bigram_lm(
         .agg(F.countDistinct("w").alias("v_size"))
     )
     if materialize:
-        contexts = contexts.localCheckpoint(eager=True, storageLevel=barrier_level())
-        vsize = vsize.localCheckpoint(eager=True, storageLevel=barrier_level())
+        contexts = pin(contexts, eager=True)
+        vsize = pin(vsize, eager=True)
     return BigramLM(vocab=vocab, bigrams=bigrams, contexts=contexts, vsize=vsize, alpha=alpha)
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..session import barrier_level
+from ..session import pin
 from .clustering import connected_components, edge_triangle_support
 
 
@@ -52,7 +52,7 @@ def one_to_one_match(
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    pool = (
+    pool = pin(
         scored_pairs.select(
             F.col(left_col).cast("string").alias("left_id"),
             F.col(right_col).cast("string").alias("right_id"),
@@ -60,29 +60,26 @@ def one_to_one_match(
         )
         .groupBy("left_id", "right_id")
         .agg(F.max("score").alias("score"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     wl = Window.partitionBy("left_id").orderBy(F.desc("score"), F.asc("right_id"))
     wr = Window.partitionBy("right_id").orderBy(F.desc("score"), F.asc("left_id"))
     matched: list[DataFrame] = []
     rounds = 0
     for rounds in range(1, max_rounds + 1):
-        mutual = (
+        mutual = pin(
             pool.withColumn("rl", F.row_number().over(wl))
             .withColumn("rr", F.row_number().over(wr))
             .filter((F.col("rl") == 1) & (F.col("rr") == 1))
             .select("left_id", "right_id", "score", F.lit(rounds).alias("round"))
-            .localCheckpoint(eager=False, storageLevel=barrier_level())
         )
         if mutual.limit(1).count() == 0:
             rounds -= 1
             break
         matched.append(mutual)
-        pool = (
+        pool = pin(
             pool.join(mutual.select("left_id"), "left_id", "left_anti")
             .join(mutual.select("right_id"), "right_id", "left_anti")
             .select("left_id", "right_id", "score")
-            .localCheckpoint(eager=False, storageLevel=barrier_level())
         )
     if not matched:
         out = pool.sparkSession.createDataFrame(
@@ -300,7 +297,7 @@ def repair_bridged_clusters(
     join, see there): one join to re-attach scores and the contracted
     re-closure, which runs on the kept-edge set only.
     """
-    e = (
+    e = pin(
         scored_edges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -309,7 +306,6 @@ def repair_bridged_clusters(
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.max("score").alias("score"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     supp = edge_triangle_support(
         e.select("src", "dst"), max_out_degree=max_out_degree

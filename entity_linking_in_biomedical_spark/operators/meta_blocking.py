@@ -28,7 +28,7 @@ Stages (each one shuffle, no uncapped explosion):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 
 def meta_block_prune(
@@ -56,18 +56,17 @@ def meta_block_prune(
     # discipline): without them the self-join's two sides each re-run
     # the caller's (often expensive) key derivation — e.g. a shingle
     # explode — and CNP's union re-runs the whole edge aggregation.
-    b = (
+    b = pin(
         blocks.select(
             F.col(id_col).cast("string").alias("id"), F.col(key_col).alias("bk")
         )
         .dropDuplicates(["id", "bk"])
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     sizes = b.groupBy("bk").agg(F.count("*").alias("n"))
-    kept = b.join(
+    kept = pin(b.join(
         sizes.filter((F.col("n") >= 2) & (F.col("n") <= max_block)).select("bk"),
         "bk",
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())
+    ))
     edges = (
         kept.alias("x")
         .join(kept.alias("y"), "bk")
@@ -107,7 +106,7 @@ def meta_block_prune(
     elif scheme != "cbs":
         raise ValueError(f"unknown meta-blocking scheme: {scheme!r}")
     if top_k is not None:
-        edges = edges.localCheckpoint(eager=False, storageLevel=barrier_level())
+        edges = pin(edges)
         # CNP: keep each node's top_k heaviest edges (an edge survives
         # if EITHER endpoint retains it — the standard redefined-CNP).
         per = edges.select(F.col("a_id").alias("node"), *cols).unionByName(

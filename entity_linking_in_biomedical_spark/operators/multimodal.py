@@ -16,7 +16,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 MEDIA_FEATURES_SCHEMA = (
     "doc_id string, span_seq int, media_ref string, "
@@ -243,13 +243,13 @@ def dedup_media_batch(batch: DataFrame, index: DataFrame) -> DataFrame:
     anti-join remainder (fresh refs); both fold back to one
     drop-position array per affected doc and the rewrite is the shared
     row-local filter."""
-    media = _media_spans(batch).localCheckpoint(eager=False, storageLevel=barrier_level())
+    media = pin(_media_spans(batch))
     # prune the corpus-sized index to the batch's refs first (broadcast
     # semi-join = map-side index scan, snapshot-sized result), then run
     # both membership tests against the broadcast pruned set — the
     # index is never shuffled and the batch never exchanges either
     # (same discipline as flag_against_index / merge_into_clusters)
-    iref = (
+    iref = pin(
         index.select(F.col("media_ref").alias("__iref"))
         .join(
             F.broadcast(
@@ -258,7 +258,6 @@ def dedup_media_batch(batch: DataFrame, index: DataFrame) -> DataFrame:
             "__iref",
             "left_semi",
         )
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     on = media["s.media_ref"] == F.col("__iref")
     indexed = media.join(F.broadcast(iref), on, "semi").select("doc_id", "pos")

@@ -22,7 +22,7 @@ doc-level train/val/test assignment.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 # 12 hex chars = 48 bits of the md5: rate granularity 2^-48 (~3.6e-15),
 # far below any meaningful sampling-rate precision, while staying well
@@ -320,7 +320,7 @@ def dsir_weights(
         .agg(F.count(F.lit(1)).alias("k"))
     )
     if reuse:
-        feat = feat.localCheckpoint(eager=False, storageLevel=barrier_level())
+        feat = pin(feat)
     tgt = feat.filter(F.col("__t")).groupBy("b").agg(F.sum("k").alias("ct"))
     pool = feat.filter(~F.col("__t"))
     poolb = pool.groupBy("b").agg(F.sum("k").alias("cq"))

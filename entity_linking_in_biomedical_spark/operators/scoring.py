@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.strings import jaro_winkler_batch, pack_vocab, tfidf_cosine_batch
-from ..session import barrier_level
+from ..session import pin
 
 
 @dataclass(frozen=True)
@@ -52,13 +52,13 @@ def fit_idf(names: DataFrame, ngram: int = 3, vocab_cap: int = 400_000) -> dict[
     from ..functions.ngrams import char_ngrams
 
     n_docs = names.count()
-    agg = (
+    # lazy barrier: if the limit probe below overflows the cap, the
+    # sorted re-collect reuses the materialized aggregate instead of
+    # recomputing it
+    agg = pin(
         names.select("norm", F.explode(F.array_distinct(char_ngrams("norm", ngram))).alias("g"))
         .groupBy("g")
         .agg(F.count("*").alias("df"))
-        .localCheckpoint(eager=False, storageLevel=barrier_level())  # lazy barrier: if the limit
-        # probe below overflows the cap, the sorted re-collect reuses
-        # the materialized aggregate instead of recomputing it
     )
     # TakeOrderedAndProject keeps a vocab_cap-sized heap PER TASK and
     # merge-sorts cap*partitions rows on the driver — pure overhead when

@@ -79,28 +79,6 @@ def srp_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
     return F.concat(*[bit(p) for p in range(n_planes)])
 
 
-def srp_bucket_udf(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Arrow pandas-UDF variant of srp_bucket: one numpy matmul per
-    ~10k-row batch against the same deterministic hyperplane matrix.
-    Sign agreement with srp_bucket holds except at
-    |projection| < float-epsilon (measure zero)."""
-    planes = np.array(_plane_coeffs(n_planes, dim))  # (p, d)
-
-    @F.pandas_udf("string")
-    def _bucket(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=str)
-        mat = np.zeros((len(vs), dim))
-        for i, v in enumerate(vs):
-            a = np.asarray(v, dtype=float)[:dim]
-            mat[i, : len(a)] = a
-        proj = mat @ planes.T  # (n, p)
-        bits = (proj >= 0).astype(np.uint8)
-        return pd.Series(["".join("1" if b else "0" for b in row) for row in bits])
-
-    return _bucket(vec)
-
-
 def srp_table_keys_udf(
     vec: Column,
     n_tables: int = 8,

@@ -34,7 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.text_metrics import quality_score
-from ..session import barrier_level
+from ..session import pin
 
 
 @dataclass
@@ -85,7 +85,7 @@ def curate_corpus(
     funnel: list[tuple[str, int]] = [("input", cur.count())]
 
     def gate(name: str, frame: DataFrame) -> DataFrame:
-        frame = frame.localCheckpoint(eager=False, storageLevel=barrier_level())
+        frame = pin(frame)
         funnel.append((name, frame.count()))
         return frame
 
@@ -323,7 +323,7 @@ def curate_interleaved(
     media_spans = None
     if media_dedup:
         before = docs.select(F.sum(F.size(spans_col))).first()[0] or 0
-        cur = drop_duplicate_media(cur).localCheckpoint(eager=False, storageLevel=barrier_level())
+        cur = pin(drop_duplicate_media(cur))
         after = cur.select(F.sum(F.size(spans_col))).first()[0] or 0
         media_spans = (int(before), int(after))
 
@@ -367,12 +367,11 @@ def curate_interleaved(
         ).select(
             F.col("doc_id").alias("__sid"), F.col(spans_col).alias("__newspans")
         )
-        clean = (
+        clean = pin(
             clean.drop(spans_col)
             .join(surv, F.col(id_col).cast("string") == F.col("__sid"))
             .withColumnRenamed("__newspans", spans_col)
             .drop("__sid")
-            .localCheckpoint(eager=False, storageLevel=barrier_level())
         )
         funnel = funnel + [("decontam_scrub", clean.count())]
     return {"clean": clean, "funnel": funnel, "media_spans": media_spans}

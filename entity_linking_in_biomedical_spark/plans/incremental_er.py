@@ -43,7 +43,7 @@ from ..operators.blocking import entity_names, surface_blocking_keys
 from ..operators.clustering import merge_into_clusters
 from ..operators.scoring import fit_idf, score_pairs
 from .pipeline import PipelineConfig, run_pipeline
-from ..session import barrier_level
+from ..session import pin
 
 
 def build_surface_index(
@@ -138,7 +138,7 @@ def _cross_snapshot_edges(
     # arrival: prune it to the snapshot's band keys first (broadcast
     # semi-join — keeps every index row of a probed key, so the hot-key
     # frequencies below are identical to full-index counts), then cap
-    new_keys = new_keys.localCheckpoint(eager=False, storageLevel=barrier_level())
+    new_keys = pin(new_keys)
     old = (
         surface_index.filter(~F.col("linked"))
         .select(F.col("norm").alias("b_norm"), "bk")
@@ -152,12 +152,11 @@ def _cross_snapshot_edges(
         .select("bk")
     )
     old = old.join(F.broadcast(hot), "bk", "left_anti")
-    pairs = (
+    pairs = pin(
         F.broadcast(new_keys).join(old, "bk")
         .filter(F.col("norm") != F.col("b_norm"))
         .select(F.col("norm").alias("a_norm"), "b_norm")
         .dropDuplicates(["a_norm", "b_norm"])
-        .localCheckpoint(eager=False, storageLevel=barrier_level())
     )
     w_cap = Window.partitionBy("a_norm").orderBy(F.md5("b_norm"), F.col("b_norm"))
     pairs = (

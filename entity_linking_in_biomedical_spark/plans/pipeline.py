@@ -30,6 +30,7 @@ from ..operators.blocking import block_candidates, entity_names, surface_blockin
 from ..operators.clustering import connected_components
 from ..operators.mentions import extract_mentions
 from ..operators.scoring import ScoringConfig, fit_idf, score_pairs
+from ..session import pin
 from .resume import make_stage_store, stage_signature
 
 
@@ -85,7 +86,6 @@ def run_pipeline(
     split_ids: DataFrame | None = None,
     cfg: PipelineConfig = PipelineConfig(),
     out_dir: str | None = None,
-    eager_stage_timing: bool = False,
 ) -> dict:
     """Returns dict with DataFrames: mentions, candidates, me_scores,
     mm_scores, assignments, mention_clusters, linked_documents — plus
@@ -99,7 +99,7 @@ def run_pipeline(
     stage as an Iceberg table (north-rule storage contract) when the
     session has an Iceberg catalog configured.
     """
-    store = make_stage_store(spark, out_dir, eager_timing=eager_stage_timing)
+    store = make_stage_store(spark, out_dir)
     p = cfg.params()
     # input-identity fingerprints (semanticHash of each source plan:
     # covers paths + upstream transformations) fold into every stage
@@ -141,11 +141,7 @@ def run_pipeline(
     # dropDuplicates exchange and is consumed by fit_idf (count + agg),
     # blocking (keys + top-k representative) and both scoring stages —
     # without the barrier each consumer re-ran the explode + dedup
-    from ..session import barrier_level
-
-    names = entity_names(entities).localCheckpoint(
-        eager=False, storageLevel=barrier_level()
-    )
+    names = pin(entity_names(entities))
 
     # the surface keying frame is shared by blocking (stage 2) and the
     # mention-mention channel (stage 3b) — one keying pass for the job.
@@ -191,16 +187,7 @@ def run_pipeline(
     )
 
     # ---- stage 3: pairwise scoring -----------------------------------
-    if eager_stage_timing:
-        import time as _time
-
-        _t0 = _time.time()
-        idf = fit_idf(names, ngram=cfg.ngram, vocab_cap=cfg.scoring.vocab_cap)
-        store.metrics.append(
-            {"stage": "idf_fit", "rows": len(idf), "sec": round(_time.time() - _t0, 3)}
-        )
-    else:
-        idf = fit_idf(names, ngram=cfg.ngram, vocab_cap=cfg.scoring.vocab_cap)
+    idf = fit_idf(names, ngram=cfg.ngram, vocab_cap=cfg.scoring.vocab_cap)
 
     # Attach-join strategy for the embedding lookup (guide §3.1:
     # broadcast the side that fits, decided by size, not by hope): the

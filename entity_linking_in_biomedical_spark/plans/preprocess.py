@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.mentions import _sweep
 from ..sources.context_files import write_context, write_mention_txt
 from ..sources.pubtator import read_pubtator
-from ..session import barrier_level
+from ..session import pin
 
 # words/numbers keep internal dots ("0.06", "p.Tyr263Cys"); any other
 # non-space char is its own token — matches the shipped corpus style
@@ -177,9 +177,8 @@ def pubtator_to_context(
             }
         )
 
-    res = docs.select(
-        "doc_id", _udf("spans", "mention_cuis").alias("r")
-    ).localCheckpoint(eager=False, storageLevel=barrier_level())  # two sinks below: compute the UDF once
+    # two sinks below: compute the UDF once
+    res = pin(docs.select("doc_id", _udf("spans", "mention_cuis").alias("r")))
     ctx = res.select("doc_id", F.explode("r.blocks").alias("b")).select(
         "doc_id",
         F.col("b.sent_seq").alias("sent_seq"),

@@ -25,7 +25,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 
 def stage_signature(
@@ -51,20 +51,14 @@ class StageStore:
         self,
         spark: SparkSession,
         out_dir: str | None,
-        eager_timing: bool = False,
         n_buckets: int = 32,
     ):
-        """``eager_timing``: force (count) each stage at commit time and
-        record wall seconds in metrics — the bench's per-stage breakdown.
-        Off by default: eager materialization adds one job per stage
-        (driver-side fixed cost that hurts scaling efficiency).
-        ``n_buckets``: bucket count for stages committed with
+        """``n_buckets``: bucket count for stages committed with
         ``bucket_by`` keys (see :meth:`commit`); both sides of a
         co-located join must agree on it. At 10^12 docs size so buckets
         land 100-500 MB (table_bytes / 256 MB, power of two)."""
         self.spark = spark
         self.out_dir = out_dir
-        self.eager_timing = eager_timing
         self.n_buckets = n_buckets
         self.metrics: list[dict] = []
 
@@ -150,13 +144,10 @@ class StageStore:
         stage: str,
         signature: str,
         df: DataFrame,
-        record_metrics: bool = True,
         bucket_by: list[str] | None = None,
     ) -> DataFrame:
         """Write snapshot, record per-partition metrics, commit manifest,
         return the re-read (physically materialized) DataFrame.
-        ``record_metrics=False``: the caller records its own entry (the
-        eager-timing path), so skip this one to avoid duplicates.
         ``bucket_by``: hash-bucket + sort the snapshot by these keys
         (sources/bucketed.py) so every downstream equi-join/groupBy on
         them — in this run or a resumed one — plans without an Exchange;
@@ -166,11 +157,8 @@ class StageStore:
             # downstream action materializes it; an eager checkpoint +
             # count here would add two extra jobs per stage (driver-side
             # fixed cost that caps scaling efficiency)
-            out = df.localCheckpoint(eager=False, storageLevel=barrier_level())
-            if record_metrics:
-                self.metrics.append(
-                    {"stage": stage, "rows": None, "partitions": None}
-                )
+            out = pin(df)
+            self.metrics.append({"stage": stage, "rows": None, "partitions": None})
             return out
         dpath, mpath = self._paths(stage)
         # invalidate any previous commit BEFORE touching the data: a
@@ -216,14 +204,9 @@ class StageStore:
         with open(tmp, "w") as f:
             json.dump(manifest, f, sort_keys=True)
         os.replace(tmp, mpath)  # atomic commit
-        if record_metrics:
-            self.metrics.append(
-                {
-                    "stage": stage,
-                    "rows": manifest["rows"],
-                    "partitions": len(part_rows),
-                }
-            )
+        self.metrics.append(
+            {"stage": stage, "rows": manifest["rows"], "partitions": len(part_rows)}
+        )
         return out
 
     def get_or_compute(
@@ -236,18 +219,6 @@ class StageStore:
         if self.committed(stage, signature):
             out = self.load(stage)
             self.metrics.append({"stage": stage, "rows": None, "resumed": True})
-            return out
-        if self.eager_timing:
-            import time
-
-            t0 = time.time()
-            out = self.commit(
-                stage, signature, compute(), record_metrics=False, bucket_by=bucket_by
-            )
-            rows = out.count()  # force materialization inside the timer
-            self.metrics.append(
-                {"stage": stage, "rows": rows, "sec": round(time.time() - t0, 3)}
-            )
             return out
         return self.commit(stage, signature, compute(), bucket_by=bucket_by)
 
@@ -277,12 +248,9 @@ class IcebergStageStore(StageStore):
         self,
         spark: SparkSession,
         ref: str,
-        eager_timing: bool = False,
         n_buckets: int = 32,
     ):
-        super().__init__(
-            spark, out_dir=ref, eager_timing=eager_timing, n_buckets=n_buckets
-        )
+        super().__init__(spark, out_dir=ref, n_buckets=n_buckets)
         self.ref = ref
         catalog = ref.split(".", 1)[0]
         impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
@@ -328,7 +296,6 @@ class IcebergStageStore(StageStore):
         stage: str,
         signature: str,
         df: DataFrame,
-        record_metrics: bool = True,
         bucket_by: list[str] | None = None,
     ) -> DataFrame:
         tbl = self._table(stage)
@@ -346,16 +313,14 @@ class IcebergStageStore(StageStore):
             )
         w.createOrReplace()  # one atomic snapshot: data + signature
         out = self.spark.read.table(tbl)
-        if record_metrics:  # eager-timing caller counts (and records) itself
-            rows = out.count()
-            self.metrics.append({"stage": stage, "rows": rows, "table": tbl})
+        rows = out.count()
+        self.metrics.append({"stage": stage, "rows": rows, "table": tbl})
         return out
 
 
 def make_stage_store(
     spark: SparkSession,
     out_dir: str | None,
-    eager_timing: bool = False,
     n_buckets: int = 32,
 ) -> StageStore:
     """Pick the stage-store backend from the out_dir spec:
@@ -373,7 +338,5 @@ def make_stage_store(
                 "runtime is not on this session's classpath (add the "
                 "iceberg-spark-runtime jar via spark.jars.packages)"
             )
-        return IcebergStageStore(
-            spark, ref, eager_timing=eager_timing, n_buckets=n_buckets
-        )
-    return StageStore(spark, out_dir, eager_timing=eager_timing, n_buckets=n_buckets)
+        return IcebergStageStore(spark, ref, n_buckets=n_buckets)
+    return StageStore(spark, out_dir, n_buckets=n_buckets)

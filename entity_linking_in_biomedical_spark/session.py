@@ -10,42 +10,40 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-# ---- engine-wide barrier storage policy ------------------------------------
-# Every operator's materialization barrier (localCheckpoint) stores its
-# blocks at this level. Default is serialized + lz4 (MEMORY_AND_DISK is
-# PySpark's serialized variant; spark.rdd.compress below turns on lz4
-# for serialized blocks): barrier blocks are written once and re-read
-# by every consumer stage, so their format is pure memory-bandwidth
-# load, and serialized+compressed trades linearly-scaling CPU for
-# non-scaling DRAM bandwidth — the same call Spark SQL's own cache
-# makes (compressed columnar batches). Measured on this host
-# (BENCH/ab_barrier_level.json, interleaved A/B at 20k docs in a
-# bandwidth-starved window): serialized won all three rounds, min-of-3
-# 6.5% on the full ER pipeline, with a 14.5x smaller block footprint
-# on long-typed data. EL_SPARK_BARRIER_LEVEL=deser restores the
-# deserialized default; =disk spills barriers entirely (memory-starved
-# executors).
-_BARRIER_LEVELS: dict[str, StorageLevel | None] = {
-    "ser": StorageLevel.MEMORY_AND_DISK,
-    "deser": None,  # pyspark default: MEMORY_AND_DISK_DESER
-    "disk": StorageLevel.DISK_ONLY,
-}
+# ---- engine-wide materialization policy -----------------------------------
+# Every lineage barrier in the package goes through pin(), and every
+# barrier stores its blocks at barrier_level(): serialized + lz4
+# (MEMORY_AND_DISK is PySpark's serialized variant; spark.rdd.compress
+# below turns on lz4 for serialized blocks). Barrier blocks are written
+# once and re-read by every consumer stage, so their format is pure
+# memory-bandwidth load, and serialized+compressed trades
+# linearly-scaling CPU for non-scaling DRAM bandwidth — the same call
+# Spark SQL's own cache makes (compressed columnar batches). Measured on
+# a shared 32-vCPU VM (BENCH/ab_barrier_level.json, interleaved A/B at
+# 20k docs on local[32] in a bandwidth-starved window): serialized won
+# all three rounds, min-of-3 6.5% on the full ER pipeline, with a 14.5x
+# smaller block footprint on long-typed data.
 
 
-def barrier_level() -> StorageLevel | None:
-    """Storage level for lineage barriers, selected by
-    EL_SPARK_BARRIER_LEVEL (ser | deser | disk; default ser)."""
-    name = os.environ.get("EL_SPARK_BARRIER_LEVEL", "ser")
-    try:
-        return _BARRIER_LEVELS[name]
-    except KeyError:
-        raise ValueError(
-            f"EL_SPARK_BARRIER_LEVEL={name!r}: expected one of "
-            f"{sorted(_BARRIER_LEVELS)}"
-        ) from None
+def barrier_level() -> StorageLevel:
+    """Storage level of every lineage barrier :func:`pin` places."""
+    return StorageLevel.MEMORY_AND_DISK
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage behind a local checkpoint stored at
+    :func:`barrier_level`, so every consumer plans as a scan of one
+    existing RDD instead of re-running ``df``'s plan.
+
+    Lazy by default: the first downstream action materializes the
+    blocks. A narrow ``df`` runs no job here; under AQE, shuffle stages
+    inside ``df`` do run here, because building the barrier's RDD plans
+    the final stage. ``eager=True`` also materializes the blocks now
+    (one more job), for callers that must not defer the work."""
+    return df.localCheckpoint(eager=eager, storageLevel=barrier_level())
 
 
 def get_spark(

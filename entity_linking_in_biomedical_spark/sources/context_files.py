@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from ..session import barrier_level
+from ..session import pin
 
 
 def read_context(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -179,7 +179,7 @@ def context_to_documents(ctx: DataFrame) -> DataFrame:
     # plan barrier: without it Catalyst's projection collapse feeds the
     # raw nested-lambda expression (as an ExpressionProxy) straight into
     # downstream pandas UDFs, which Python eval rejects (INTERNAL_ERROR)
-    return doc.select("doc_id", spans.alias("spans")).localCheckpoint(eager=False, storageLevel=barrier_level())
+    return pin(doc.select("doc_id", spans.alias("spans")))
 
 
 def render_context(ctx: DataFrame) -> DataFrame:

@@ -14,7 +14,6 @@ stage in the engine.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -176,23 +175,3 @@ def minhash_doc_flags(band_rows: DataFrame) -> DataFrame:
             )
         ).alias("matched_ids"),
     )
-
-
-def batch_exact_dedup_flags(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> list[tuple[Any, ...]]:
-    """Single-node oracle for tests: (text_hash, doc_id, is_duplicate)
-    with the same doc_id arrival order, computed in pandas."""
-    pdf = (
-        docs.select(
-            F.col(id_col).cast("string").alias("doc_id"),
-            F.md5(F.col(text_col)).alias("text_hash"),
-        )
-        .toPandas()
-        .sort_values("doc_id")
-    )
-    seen: dict[str, int] = {}
-    rows = []
-    for _, r in pdf.iterrows():
-        h = r["text_hash"]
-        rows.append((h, r["doc_id"], seen.get(h, 0) > 0))
-        seen[h] = seen.get(h, 0) + 1
-    return sorted(rows)
