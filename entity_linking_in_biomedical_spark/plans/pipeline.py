@@ -107,12 +107,16 @@ def run_pipeline(
     # out_dir recomputes instead of serving stale snapshots. Signatures
     # are only consulted when snapshots persist, so skip the (possibly
     # count-bearing) fingerprints entirely when out_dir is None.
+    emb_rows = None
     if out_dir is not None:
+        emb_fp = _input_fingerprint(embeddings) if embeddings is not None else None
         p["input_fp"] = [
-            _input_fingerprint(df)
+            emb_fp if df is embeddings else _input_fingerprint(df)
             for df in (documents, entities, embeddings, abbr_map, split_ids)
             if df is not None
         ]
+        if emb_fp is not None and emb_fp[0] == "schema":
+            emb_rows = emb_fp[3]  # the broadcast gate below reuses it
     tau = cfg.scoring.threshold
 
     if split_ids is not None:
@@ -193,12 +197,13 @@ def run_pipeline(
     # broadcast the side that fits, decided by size, not by hope): the
     # checkpointed lookup hides its statistics from the planner, so
     # without the hint every attach was a sort-merge join that shuffled
-    # the pair frame. One cheap count gates the hint; at corpus scale
-    # (per-surface embeddings) the count exceeds the cap and the joins
-    # stay shuffled — identical results either way.
-    emb_bcast = (
-        embeddings is not None and embeddings.count() <= 200_000
-    )
+    # the pair frame. One cheap count gates the hint (the fingerprint's,
+    # when it took one); at corpus scale (per-surface embeddings) the
+    # count exceeds the cap and the joins stay shuffled — identical
+    # results either way.
+    if embeddings is not None and emb_rows is None:
+        emb_rows = embeddings.count()
+    emb_bcast = emb_rows is not None and emb_rows <= 200_000
 
     def _emb_side(key: str, out: str) -> DataFrame:
         e = embeddings.select(F.col("norm").alias(key), F.col("embedding").alias(out))

@@ -9,7 +9,8 @@ in this sandbox the same semantics are emulated on plain Parquet:
   <out_dir>/<stage>/_MANIFEST.json       commit record: stage signature
                                          (md5 over params + parent
                                          signatures), total rows, and
-                                         per-partition row counts
+                                         per-bucket (or per-file) row
+                                         counts from the Parquet footers
 
 A stage is *committed* iff the manifest exists and its signature matches
 the requested computation; committed stages are read back instead of
@@ -23,9 +24,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..session import pin
+
+# Spark's bucketed-file naming (BucketingUtils.bucketIdToString)
+_BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?$")
 
 
 def stage_signature(
@@ -46,20 +51,39 @@ def stage_signature(
     return hashlib.md5(payload.encode()).hexdigest()
 
 
+def _footer_rows(dpath: str, bucketed: bool) -> dict:
+    """Rows per written Parquet file, read from the footers. A bucketed
+    write names each file after its bucket (``part-..._00003.c000...``);
+    those entries are keyed by bucket id, summed should a bucket span
+    several files."""
+    import pyarrow.parquet as pq
+
+    rows: dict = {}
+    for name in sorted(os.listdir(dpath)):
+        if not name.endswith(".parquet"):  # skips _SUCCESS and .crc files
+            continue
+        n = pq.read_metadata(os.path.join(dpath, name)).num_rows
+        key = int(_BUCKET_ID.match(name).group(1)) if bucketed else name
+        rows[key] = rows.get(key, 0) + n
+    return rows
+
+
 class StageStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str | None,
-        n_buckets: int = 32,
-    ):
-        """``n_buckets``: bucket count for stages committed with
-        ``bucket_by`` keys (see :meth:`commit`); both sides of a
-        co-located join must agree on it. At 10^12 docs size so buckets
-        land 100-500 MB (table_bytes / 256 MB, power of two)."""
+    def __init__(self, spark: SparkSession, out_dir: str | None):
+        """Stages committed with ``bucket_by`` keys (see :meth:`commit`)
+        are bucketed at the session's shuffle width,
+        ``spark.sql.shuffle.partitions``, read once here: a commit then
+        writes one task per shuffle partition, and later scans and joins
+        of the snapshot run at the width every other shuffle of the job
+        does. Sizing the store for a cluster therefore happens where
+        shuffle sizing already happens (``get_spark`` sets max(2 x
+        cores, 8): 8 on local[4], 64 on local[32]). Every stage of one
+        run shares the count, so co-located joins agree on it; a
+        snapshot written at another width keeps the count its manifest
+        records (:meth:`load`)."""
         self.spark = spark
         self.out_dir = out_dir
-        self.n_buckets = n_buckets
+        self.n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.metrics: list[dict] = []
 
     def _paths(self, stage: str) -> tuple[str, str]:
@@ -146,8 +170,11 @@ class StageStore:
         df: DataFrame,
         bucket_by: list[str] | None = None,
     ) -> DataFrame:
-        """Write snapshot, record per-partition metrics, commit manifest,
-        return the re-read (physically materialized) DataFrame.
+        """Write snapshot, record row counts, commit manifest, return the
+        re-read (physically materialized) DataFrame. The counts come
+        from the Parquet footers of the files just written, so they cost
+        no Spark job: ``partition_rows`` is keyed by bucket id for a
+        bucketed stage and by file name for a plain one.
         ``bucket_by``: hash-bucket + sort the snapshot by these keys
         (sources/bucketed.py) so every downstream equi-join/groupBy on
         them — in this run or a resumed one — plans without an Exchange;
@@ -186,16 +213,11 @@ class StageStore:
         else:
             df.write.mode("overwrite").parquet(dpath)
             out = self.spark.read.parquet(dpath)
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        part_rows = {int(r["pid"]): int(r["rows"]) for r in per_part}
+        part_rows = _footer_rows(dpath, bucketed=bucket_meta is not None)
         manifest = {
             "stage": stage,
             "signature": signature,
-            "rows": int(sum(part_rows.values())),
+            "rows": sum(part_rows.values()),
             "partition_rows": part_rows,
         }
         if bucket_meta:
@@ -244,13 +266,8 @@ class IcebergStageStore(StageStore):
 
     SIG_PROP = "el.stage.signature"
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        ref: str,
-        n_buckets: int = 32,
-    ):
-        super().__init__(spark, out_dir=ref, n_buckets=n_buckets)
+    def __init__(self, spark: SparkSession, ref: str):
+        super().__init__(spark, out_dir=ref)
         self.ref = ref
         catalog = ref.split(".", 1)[0]
         impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
@@ -318,11 +335,7 @@ class IcebergStageStore(StageStore):
         return out
 
 
-def make_stage_store(
-    spark: SparkSession,
-    out_dir: str | None,
-    n_buckets: int = 32,
-) -> StageStore:
+def make_stage_store(spark: SparkSession, out_dir: str | None) -> StageStore:
     """Pick the stage-store backend from the out_dir spec:
 
     - ``None`` → no persistence (lazy localCheckpoint barriers)
@@ -338,5 +351,5 @@ def make_stage_store(
                 "runtime is not on this session's classpath (add the "
                 "iceberg-spark-runtime jar via spark.jars.packages)"
             )
-        return IcebergStageStore(spark, ref, n_buckets=n_buckets)
-    return StageStore(spark, out_dir, n_buckets=n_buckets)
+        return IcebergStageStore(spark, ref)
+    return StageStore(spark, out_dir)

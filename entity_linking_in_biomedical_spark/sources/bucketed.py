@@ -24,10 +24,18 @@ deployment. Iceberg note: its ``write.distribution-mode`` + hidden
 iceberg:// stage store (``IcebergStageStore.commit`` applies it);
 this wrapper covers the classic Parquet/Hive layout.
 
-Sizing at 10^12 docs: buckets should land 100-500 MB each, so
-n_buckets ≈ table_bytes / 256 MB, rounded to a power of two; both
-sides of a co-located join must use the SAME bucket count (or an exact
-multiple, with spark.sql.bucketing.coalesceBucketsInJoin.enabled).
+Sizing: the stage store buckets at the session's shuffle width,
+``spark.sql.shuffle.partitions`` (read once per store), so a cluster is
+sized for its stage snapshots where its shuffles are already sized:
+``get_spark`` sets max(2 x cores, 8), which is 8 buckets on local[4]
+and 64 on local[32]. A fixed count wider than the shuffle width only
+adds tasks: every commit writes one task per bucket, and every later
+scan or join of the snapshot widens to the bucket count. At 10^12 docs
+raise the shuffle width until buckets land 100-500 MB each. Both sides
+of a co-located join must use the SAME bucket count (or an exact
+multiple, with spark.sql.bucketing.coalesceBucketsInJoin.enabled); a
+snapshot keeps the count its manifest records, so a run resumed at
+another width re-attaches it as written.
 """
 
 from __future__ import annotations
