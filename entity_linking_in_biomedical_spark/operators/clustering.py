@@ -96,7 +96,6 @@ def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
     max_iter: int = 25,
-    digest_every: int = 1,
 ) -> tuple[DataFrame, int]:
     """edges(src string, dst string) -> (assignments(node, cluster_id),
     iterations).
@@ -104,20 +103,10 @@ def connected_components(
     ``nodes`` (single column ``node``) optionally adds isolated nodes,
     which become singleton clusters (cluster_id = node).
 
-    ``digest_every``: convergence is checked every this-many star
-    rounds; >1 chains consecutive rounds lazily into one job per
-    digest, trading star rounds for driver barriers. The round-5
-    default of 2 regressed every CC query (its own bench record):
-    checking each round runs exactly true_rounds+1 rounds (the +1 is
-    the unavoidable no-op that proves stability), while cadence k runs
-    up to true_rounds+2k-1 — and a star round (3 exchanges over the
-    edge set) costs far more than a digest's O(1)-row driver action at
-    any scale, so 1 is the right default off-cluster too. The fixpoint
-    is unchanged either way: star rounds applied to a converged edge
-    set are identity.
+    Convergence is checked after every star round: a star round (3
+    exchanges over the edge set) costs far more than a digest's
+    O(1)-row driver action, so checking less often only adds rounds.
     """
-    if digest_every < 1:
-        raise ValueError(f"digest_every must be >= 1, got {digest_every}")
     # lazy checkpoints: the digest action materializes the iteration's
     # edge set AND computes the convergence digest in one job
     e = pin(_canon(edges))
@@ -125,8 +114,6 @@ def connected_components(
     iters = 0
     for iters in range(1, max_iter + 1):
         e = pin(_canon(_small_star(_large_star(e))))
-        if iters % digest_every != 0 and iters != max_iter:
-            continue
         d = _digest(e)
         if d == prev:
             break

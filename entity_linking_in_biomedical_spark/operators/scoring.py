@@ -12,7 +12,7 @@ with the north star's feature set:
     dot      dense-embedding dot product (JVM zip_with/aggregate)
 
 combined by a fixed calibrated logistic:  score = sigmoid(w·f + b).
-The Python boundary is exactly one scalar pandas UDF per pair batch
+The Python boundary is exactly one iterator pandas UDF per pair batch
 (Arrow transfer, float32 internals — the reference keeps float32 too,
 candidate_generator.py:36,42).
 """
@@ -20,14 +20,14 @@ candidate_generator.py:36,42).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import Iterator, Tuple
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.strings import jaro_winkler_batch, pack_vocab, tfidf_cosine_batch
-from ..session import pin
 
 
 @dataclass(frozen=True)
@@ -52,27 +52,19 @@ def fit_idf(names: DataFrame, ngram: int = 3, vocab_cap: int = 400_000) -> dict[
     from ..functions.ngrams import char_ngrams
 
     n_docs = names.count()
-    # lazy barrier: if the limit probe below overflows the cap, the
-    # sorted re-collect reuses the materialized aggregate instead of
-    # recomputing it
-    agg = pin(
+    # one aggregate, ordered and capped on the way out: the aggregate
+    # holds each gram once, so the per-task top-k heaps together hold at
+    # most the vocabulary, and no probe or re-collect is needed when the
+    # cap does not bind (char-3-gram vocab over entity names is ~50k;
+    # the 400k cap matches the reference's max_features)
+    df = (
         names.select("norm", F.explode(F.array_distinct(char_ngrams("norm", ngram))).alias("g"))
         .groupBy("g")
         .agg(F.count("*").alias("df"))
+        .orderBy(F.desc("df"), F.asc("g"))
+        .limit(vocab_cap)
+        .collect()
     )
-    # TakeOrderedAndProject keeps a vocab_cap-sized heap PER TASK and
-    # merge-sorts cap*partitions rows on the driver — pure overhead when
-    # the vocabulary is under the cap (the common case: char-3-gram
-    # vocab over entity names is ~50k; the 400k cap matches the
-    # reference's max_features and only binds on far larger
-    # dictionaries). Sort only when the cap actually binds. The cap
-    # probe is a limit(cap+1) collect, NOT a count: an unordered limit
-    # early-terminates, and when the vocab is under the cap (it almost
-    # always is) the probe already IS the full collect — one job
-    # instead of count + collect.
-    df = agg.limit(vocab_cap + 1).collect()
-    if len(df) > vocab_cap:
-        df = agg.orderBy(F.desc("df"), F.asc("g")).limit(vocab_cap).collect()
     return {r["g"]: math.log((n_docs + 1) / (r["df"] + 1)) + 1.0 for r in df}
 
 
@@ -93,26 +85,25 @@ def score_pairs(
     value 0.5 (so the calibration doesn't shift)."""
     idf_bc = spark.sparkContext.broadcast(idf)
     ngram = cfg.ngram
-    # packed-vocab cache: built once per Python worker on first batch
-    # (pack_vocab over 400k grams is ~0.1s — not per-batch work)
-    _vocab_cache: list = []
 
     @F.pandas_udf("struct<jw: double, cos: double>")
-    def _jw_cos(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        # fully vectorized numpy kernels over the whole Arrow batch —
-        # no per-row Python (see functions/strings.py batch kernels;
-        # equality with the scalar reference is unit-tested)
-        if not _vocab_cache:
-            _vocab_cache.append(pack_vocab(idf_bc.value))
-        vocab_codes, vocab_idf = _vocab_cache[0]
-        xs = ["" if x is None else x for x in a.tolist()]
-        ys = ["" if y is None else y for y in b.tolist()]
-        return pd.DataFrame(
-            {
-                "jw": jaro_winkler_batch(xs, ys),
-                "cos": tfidf_cosine_batch(xs, ys, vocab_codes, vocab_idf, n=ngram),
-            }
-        )
+    def _jw_cos(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
+        # the packed vocabulary is built once per task, before its first
+        # Arrow batch (pack_vocab over 400k grams is ~0.1s — not
+        # per-batch work); the kernels are fully vectorized numpy over
+        # the whole batch — no per-row Python (see functions/strings.py
+        # batch kernels; equality with the scalar reference is
+        # unit-tested)
+        vocab_codes, vocab_idf = pack_vocab(idf_bc.value)
+        for a, b in batches:
+            xs = ["" if x is None else x for x in a.tolist()]
+            ys = ["" if y is None else y for y in b.tolist()]
+            yield pd.DataFrame(
+                {
+                    "jw": jaro_winkler_batch(xs, ys),
+                    "cos": tfidf_cosine_batch(xs, ys, vocab_codes, vocab_idf, n=ngram),
+                }
+            )
 
     # Compute the dot FIRST and drop the vector columns immediately:
     # a 64-dim double pair is ~1 KB/row, and everything downstream

@@ -37,13 +37,20 @@ divergence vs with-index batch equality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.blocking import entity_names, surface_blocking_keys
+from ..operators.blocking import surface_blocking_keys
 from ..operators.clustering import merge_into_clusters
-from ..operators.scoring import fit_idf, score_pairs
-from .pipeline import PipelineConfig, run_pipeline
+from ..operators.scoring import score_pairs
 from ..session import pin
+from .pipeline import (
+    PipelineConfig,
+    best_partner_edges,
+    cap_partners,
+    drop_hot_keys,
+    relabel_mentions,  # re-exported: callers import it from this module
+    run_pipeline,
+)
 
 
 def build_surface_index(
@@ -71,42 +78,30 @@ def build_surface_index(
         F.expr("substring(node, 3)").alias("norm"),
         F.col("cluster_id").startswith("e|").alias("linked"),
     )
-    keys = surface_blocking_keys(
-        surf,
-        ns=cfg.block_ngrams,
-        num_hashes=cfg.num_hashes,
-        bands=cfg.bands,
-        del_max_len=cfg.del_max_len,
-        lsh_min_len=cfg.lsh_min_len,
-        del2_max_len=cfg.del2_max_len,
-        word_num_hashes=cfg.word_num_hashes,
-    )
-    return keys.join(surf, "norm")
+    return surface_blocking_keys(surf, **cfg.keying()).join(surf, "norm")
 
 
 def _cross_snapshot_edges(
     spark: SparkSession,
-    mentions: DataFrame,
     snap_assignments: DataFrame,
-    entities: DataFrame,
     surface_index: DataFrame,
     embeddings: DataFrame | None,
     cfg: PipelineConfig,
-    idf=None,
-    surface_keys: DataFrame | None = None,
+    idf: dict[str, float],
+    surface_keys: DataFrame,
 ) -> DataFrame:
     """s|—s| edges pairing the snapshot's UNLINKED surfaces with
     unlinked surfaces from EARLIER snapshots that share a blocking key:
-    the same candidate generation, hot-key cap, deterministic partner
-    cap, Arrow-batched scoring, and attach-to-single-best-partner rule
-    as the batch mm channel (plans/pipeline.py compute_mm /
-    compute_assign), with the prior corpus side served by the index
-    instead of a corpus scan. Decisions are monotonic: earlier
-    surfaces' attachments stand, and each NEW surface attaches to its
-    single best CROSS partner (threshold-gated) on top of whatever
-    internal attachment the snapshot's own clustering made — so a new
-    surface can carry up to TWO attachment edges where the batch run's
-    single-best rule emits one. Both are individually above
+    the batch mm channel's hot-key cap, partner cap, Arrow-batched
+    scoring and attach-to-single-best-partner rule (plans/pipeline.py),
+    with the prior corpus side served by the index instead of a corpus
+    scan. ``idf`` and ``surface_keys`` are the snapshot run's fitted
+    IDF table and (norm, bk) keying frame. Decisions are monotonic:
+    earlier surfaces' attachments stand, and each NEW surface attaches
+    to its single best CROSS partner (threshold-gated) on top of
+    whatever internal attachment the snapshot's own clustering made —
+    so a new surface can carry up to TWO attachment edges where the
+    batch run's single-best rule emits one. Both are individually above
     mm_threshold, so the deviation can only merge clusters the batch
     scorer itself rated as matches (bounded extra transitivity, never a
     missed pair); exact single-best-over-the-union semantics would
@@ -118,52 +113,25 @@ def _cross_snapshot_edges(
     ).select(F.expr("substring(node, 3)").alias("norm"))
     # keying is a pure per-norm projection, so the snapshot run's
     # already-materialized (norm, bk) frame restricted to the unlinked
-    # surfaces is identical to re-keying them — reuse it when the caller
-    # has one (link_snapshot always does) instead of paying the most
-    # expensive projection of the job a second time per arrival
-    if surface_keys is not None:
-        new_keys = surface_keys.join(new_unlinked, "norm", "left_semi")
-    else:
-        new_keys = surface_blocking_keys(
-            mentions.join(new_unlinked, "norm", "left_semi"),
-            ns=cfg.block_ngrams,
-            num_hashes=cfg.num_hashes,
-            bands=cfg.bands,
-            del_max_len=cfg.del_max_len,
-            lsh_min_len=cfg.lsh_min_len,
-            del2_max_len=cfg.del2_max_len,
-            word_num_hashes=cfg.word_num_hashes,
-        )
-    # the index is only ever SCANNED map-side, never shuffled per
-    # arrival: prune it to the snapshot's band keys first (broadcast
-    # semi-join — keeps every index row of a probed key, so the hot-key
-    # frequencies below are identical to full-index counts), then cap
-    new_keys = pin(new_keys)
+    # surfaces is identical to re-keying them. The index is only ever
+    # SCANNED map-side, never shuffled per arrival: prune it to the
+    # snapshot's band keys first (broadcast semi-join — keeps every
+    # index row of a probed key, so the hot-key frequencies below are
+    # identical to full-index counts), then cap
+    new_keys = pin(surface_keys.join(new_unlinked, "norm", "left_semi"))
     old = (
         surface_index.filter(~F.col("linked"))
         .select(F.col("norm").alias("b_norm"), "bk")
         .join(F.broadcast(new_keys.select("bk").distinct()), "bk", "left_semi")
     )
-    # hot-key cap on the index side (same skew control as blocking)
-    hot = (
-        old.groupBy("bk")
-        .agg(F.count("*").alias("kf"))
-        .filter(F.col("kf") > cfg.max_key_freq)
-        .select("bk")
-    )
-    old = old.join(F.broadcast(hot), "bk", "left_anti")
+    old = drop_hot_keys(old, cfg.max_key_freq)
     pairs = pin(
         F.broadcast(new_keys).join(old, "bk")
         .filter(F.col("norm") != F.col("b_norm"))
         .select(F.col("norm").alias("a_norm"), "b_norm")
         .dropDuplicates(["a_norm", "b_norm"])
     )
-    w_cap = Window.partitionBy("a_norm").orderBy(F.md5("b_norm"), F.col("b_norm"))
-    pairs = (
-        pairs.withColumn("rk", F.row_number().over(w_cap))
-        .filter(F.col("rk") <= cfg.mm_pair_cap)
-        .drop("rk")
-    )
+    pairs = cap_partners(pairs, cfg.mm_pair_cap)
     if embeddings is not None:
         # embeddings may be dictionary-scale: prune to the pair keys
         # (broadcast semi) so the left join's right side is
@@ -173,12 +141,6 @@ def _cross_snapshot_edges(
                 F.col("norm").alias(key), F.col("embedding").alias(out)
             ).join(F.broadcast(pairs.select(key).distinct()), key, "left_semi")
             pairs = pairs.join(F.broadcast(e), key, "left")
-    if idf is None:
-        # same fit the batch pipeline runs — callers composing with
-        # run_pipeline pass its fitted table to skip the duplicate job
-        idf = fit_idf(
-            entity_names(entities), ngram=cfg.ngram, vocab_cap=cfg.scoring.vocab_cap
-        )
     scored = score_pairs(
         spark,
         pairs,
@@ -187,15 +149,8 @@ def _cross_snapshot_edges(
         a_emb="a_emb" if embeddings is not None else None,
         b_emb="b_emb" if embeddings is not None else None,
     )
-    w_top = Window.partitionBy("a_norm").orderBy(F.desc("score"), F.asc("b_norm"))
-    return (
-        scored.filter(F.col("score") >= cfg.mm_threshold)
-        .withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") == 1)
-        .select(
-            F.concat(F.lit("s|"), "a_norm").alias("src"),
-            F.concat(F.lit("s|"), "b_norm").alias("dst"),
-        )
+    return best_partner_edges(
+        scored.filter(F.col("score") >= cfg.mm_threshold), "a_norm", "b_norm"
     )
 
 
@@ -245,9 +200,8 @@ def link_snapshot(
     if surface_index is not None:
         edges = edges.unionByName(
             _cross_snapshot_edges(
-                spark, res["mentions"], snap, entities, surface_index,
-                embeddings, cfg,
-                idf=res.get("idf"), surface_keys=res.get("surface_keys"),
+                spark, snap, surface_index, embeddings, cfg,
+                idf=res["idf"], surface_keys=res["surface_keys"],
             )
         )
     merged, iters = merge_into_clusters(
@@ -262,36 +216,3 @@ def link_snapshot(
     )
     return res
 
-
-def relabel_mentions(
-    mentions: DataFrame,
-    assignments: DataFrame,
-    snapshot_scale: bool = False,
-) -> DataFrame:
-    """(doc_id, span_seq, surface, norm, cluster_id) under corpus-level
-    ``assignments`` — the same e|->CUI / NIL_<root> mapping the batch
-    pipeline applies (plans/pipeline.py), against the merged state.
-
-    ``snapshot_scale=True`` declares that ``mentions`` is snapshot-sized
-    while ``assignments`` is corpus-sized (the link_snapshot fold): the
-    surface map is first semi-join-pruned by a BROADCAST of the
-    snapshot's distinct norms — a map-side scan of the corpus state
-    instead of shuffling all of it — and the pruned (snapshot-sized)
-    map is broadcast into the label join, so the relabel moves zero
-    corpus-sized bytes. Leave False when ``mentions`` itself is
-    corpus-scale (its norm set would not fit a broadcast)."""
-    surf = assignments.filter(F.col("node").startswith("s|")).select(
-        F.expr("substring(node, 3)").alias("norm"),
-        F.when(
-            F.col("cluster_id").startswith("e|"),
-            F.expr("substring(cluster_id, 3)"),
-        )
-        .otherwise(F.concat(F.lit("NIL_"), F.expr("substring(cluster_id, 3)")))
-        .alias("cluster_id"),
-    )
-    if snapshot_scale:
-        keys = mentions.select("norm").distinct()
-        surf = F.broadcast(surf.join(F.broadcast(keys), "norm", "left_semi"))
-    return mentions.join(surf, "norm", "left").select(
-        "doc_id", "span_seq", "surface", "norm", "cluster_id"
-    )

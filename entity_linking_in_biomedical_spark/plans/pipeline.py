@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators.blocking import block_candidates, entity_names, surface_blocking_keys
 from ..operators.clustering import connected_components
@@ -56,6 +56,96 @@ class PipelineConfig:
         d = dict(self.__dict__)
         d["scoring"] = dict(self.scoring.__dict__)
         return d
+
+    def keying(self) -> dict:
+        """The blocking-key parameters, as keyword arguments of every
+        keying call (surface_blocking_keys, block_candidates): one list,
+        so no keying path can leave a channel out."""
+        return {
+            "ns": self.block_ngrams,
+            "num_hashes": self.num_hashes,
+            "bands": self.bands,
+            "del_max_len": self.del_max_len,
+            "lsh_min_len": self.lsh_min_len,
+            "del2_max_len": self.del2_max_len,
+            "word_num_hashes": self.word_num_hashes,
+            "phonetic": self.phonetic,
+        }
+
+
+# ---- match rules shared by the batch run and the snapshot fold ----
+
+
+def drop_hot_keys(keys: DataFrame, max_key_freq: int) -> DataFrame:
+    """Drop the rows of blocking keys shared by more than
+    ``max_key_freq`` rows of ``keys`` (the surface-side skew cap; a key
+    that common discriminates nothing)."""
+    hot = (
+        keys.groupBy("bk").agg(F.count("*").alias("kf"))
+        .filter(F.col("kf") > max_key_freq)
+        .select("bk")
+    )
+    return keys.join(F.broadcast(hot), "bk", "left_anti")
+
+
+def cap_partners(pairs: DataFrame, cap: int) -> DataFrame:
+    """Keep at most ``cap`` partners ``b_norm`` per surface ``a_norm``,
+    chosen by md5 order so that the choice is deterministic and the
+    pandas oracle reproduces it; bounds the scoring fan-out on hot
+    surfaces."""
+    w = Window.partitionBy("a_norm").orderBy(F.md5("b_norm"), F.col("b_norm"))
+    return pairs.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= cap
+    ).drop("rk")
+
+
+def best_partner_edges(pairs: DataFrame, node: str, partner: str) -> DataFrame:
+    """One ``s|node -> s|partner`` edge per ``node``: its best-scoring
+    partner, ties to the smaller norm. ``pairs`` holds only the pairs
+    that may attach (threshold-gated, unlinked nodes)."""
+    w = Window.partitionBy(node).orderBy(F.desc("score"), F.asc(partner))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select(
+            F.concat(F.lit("s|"), node).alias("src"),
+            F.concat(F.lit("s|"), partner).alias("dst"),
+        )
+    )
+
+
+def relabel_mentions(
+    mentions: DataFrame,
+    assignments: DataFrame,
+    snapshot_scale: bool = False,
+) -> DataFrame:
+    """(doc_id, span_seq, surface, norm, cluster_id) under
+    ``assignments``: an entity-rooted surface takes its CUI, any other
+    surface ``NIL_<root norm>``.
+
+    ``snapshot_scale=True`` declares that ``mentions`` is snapshot-sized
+    while ``assignments`` is corpus-sized (the link_snapshot fold): the
+    surface map is first semi-join-pruned by a BROADCAST of the
+    snapshot's distinct norms — a map-side scan of the corpus state
+    instead of shuffling all of it — and the pruned (snapshot-sized)
+    map is broadcast into the label join, so the relabel moves zero
+    corpus-sized bytes. Leave False when ``mentions`` itself is
+    corpus-scale (its norm set would not fit a broadcast)."""
+    surf = assignments.filter(F.col("node").startswith("s|")).select(
+        F.expr("substring(node, 3)").alias("norm"),
+        F.when(
+            F.col("cluster_id").startswith("e|"),
+            F.expr("substring(cluster_id, 3)"),
+        )
+        .otherwise(F.concat(F.lit("NIL_"), F.expr("substring(cluster_id, 3)")))
+        .alias("cluster_id"),
+    )
+    if snapshot_scale:
+        keys = mentions.select("norm").distinct()
+        surf = F.broadcast(surf.join(F.broadcast(keys), "norm", "left_semi"))
+    return mentions.join(surf, "norm", "left").select(
+        "doc_id", "span_seq", "surface", "norm", "cluster_id"
+    )
 
 
 def _input_fingerprint(df: DataFrame) -> list:
@@ -155,17 +245,7 @@ def run_pipeline(
     # and compute_mm's three references (hot cap + both self-join sides)
     # all plan as Scan ExistingRDD — verified by
     # test_plans.py::test_surface_keys_shared_frame_single_evaluated
-    surf_keys = surface_blocking_keys(
-        mentions,
-        ns=cfg.block_ngrams,
-        num_hashes=cfg.num_hashes,
-        bands=cfg.bands,
-        del_max_len=cfg.del_max_len,
-        lsh_min_len=cfg.lsh_min_len,
-        del2_max_len=cfg.del2_max_len,
-        word_num_hashes=cfg.word_num_hashes,
-        phonetic=cfg.phonetic,
-    )
+    surf_keys = surface_blocking_keys(mentions, **cfg.keying())
 
     # ---- stage 2: blocking -------------------------------------------
     sig_cands = stage_signature("candidates", p, [sig_mentions])
@@ -175,17 +255,10 @@ def run_pipeline(
         lambda: block_candidates(
             mentions,
             names,
-            ns=cfg.block_ngrams,
-            num_hashes=cfg.num_hashes,
-            bands=cfg.bands,
-            del_max_len=cfg.del_max_len,
-            lsh_min_len=cfg.lsh_min_len,
-            del2_max_len=cfg.del2_max_len,
+            **cfg.keying(),
             max_key_freq=cfg.max_key_freq,
             top_k=cfg.top_k,
             surface_keys=surf_keys,
-            word_num_hashes=cfg.word_num_hashes,
-            phonetic=cfg.phonetic,
         ),
         bucket_by=["norm"],
     )
@@ -262,14 +335,7 @@ def run_pipeline(
         # variants cluster together without an entity bridge.
         # Reuses the stage-2 keying frame (surf_keys) — the identical
         # blocking_keys explode was previously derived twice per job.
-        b = surf_keys
-        # hot-band cap on the surface side (same skew control as blocking)
-        hot = (
-            b.groupBy("bk").agg(F.count("*").alias("kf"))
-            .filter(F.col("kf") > cfg.max_key_freq)
-            .select("bk")
-        )
-        b = b.join(F.broadcast(hot), "bk", "left_anti")
+        b = drop_hot_keys(surf_keys, cfg.max_key_freq)
         pairs = (
             b.alias("x")
             .join(b.alias("y"), "bk")
@@ -281,15 +347,7 @@ def run_pipeline(
             )
             .dropDuplicates(["a_norm", "b_norm"])
         )
-        # cap partners per surface (deterministic by hash order) to bound
-        # the scoring fan-out on hot surfaces; md5 order so the pandas
-        # oracle reproduces the identical partner choice
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("a_norm").orderBy(F.md5("b_norm"), F.col("b_norm"))
-        pairs = pairs.withColumn("rk", F.row_number().over(w)).filter(
-            F.col("rk") <= cfg.mm_pair_cap
-        ).drop("rk")
+        pairs = cap_partners(pairs, cfg.mm_pair_cap)
         pairs = with_emb(pairs, "a_norm", "a_emb")
         pairs = with_emb(pairs, "b_norm", "b_emb")
         scored = score_pairs(
@@ -309,8 +367,6 @@ def run_pipeline(
 
     # ---- stage 4: transitive clustering ------------------------------
     def compute_assign() -> DataFrame:
-        from pyspark.sql import Window
-
         # Entity linking is argmax over candidates (the reference scores
         # candidates and takes the top, dataset.py:448-450 + batch top-k):
         # each surface links to at most ONE entity — linking to every
@@ -343,15 +399,7 @@ def run_pipeline(
         unlinked_pairs = both_dirs.join(
             linked.withColumnRenamed("norm", "s_norm"), "s_norm", "left_anti"
         )
-        w_mm = Window.partitionBy("s_norm").orderBy(F.desc("score"), F.asc("p_norm"))
-        mm_edges = (
-            unlinked_pairs.withColumn("rk", F.row_number().over(w_mm))
-            .filter(F.col("rk") == 1)
-            .select(
-                F.concat(F.lit("s|"), "s_norm").alias("src"),
-                F.concat(F.lit("s|"), "p_norm").alias("dst"),
-            )
-        )
+        mm_edges = best_partner_edges(unlinked_pairs, "s_norm", "p_norm")
         all_surface_nodes = mentions.select(
             F.concat(F.lit("s|"), "norm").alias("node")
         ).distinct()
@@ -369,17 +417,7 @@ def run_pipeline(
     )
 
     # ---- attach clusters back to mentions and documents ---------------
-    surf_clusters = assignments.filter(F.col("node").startswith("s|")).select(
-        F.expr("substring(node, 3)").alias("norm"),
-        F.when(
-            F.col("cluster_id").startswith("e|"), F.expr("substring(cluster_id, 3)")
-        )
-        .otherwise(F.concat(F.lit("NIL_"), F.expr("substring(cluster_id, 3)")))
-        .alias("cluster_id"),
-    )
-    mention_clusters = mentions.join(surf_clusters, "norm", "left").select(
-        "doc_id", "span_seq", "surface", "norm", "cluster_id"
-    )
+    mention_clusters = relabel_mentions(mentions, assignments)
 
     per_doc = mention_clusters.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("span_seq", "cluster_id"))).alias(

@@ -23,70 +23,74 @@ def read_pubtator(spark: SparkSession, path: str) -> DataFrame:
     carried in ``mention_cuis`` alongside, since the authoritative span
     struct has no cui field).
     """
-    lines = spark.read.text(path).filter(F.length("value") > 0)
-    title = lines.filter(F.col("value").rlike(r"^\d+\|t\|")).select(
-        F.regexp_extract("value", r"^(\d+)\|t\|(.*)$", 1).alias("doc_id"),
-        F.regexp_extract("value", r"^(\d+)\|t\|(.*)$", 2).alias("title"),
+    # one pass: classify each line once, then one aggregate per PMID
+    # that keeps only documents with a title line. The first projection
+    # runs each regex and the split once per line; folded into the
+    # second, they would re-run inside every CASE branch.
+    v = F.col("value")
+    text_re = r"^(\d+)\|([ta])\|(.*)$"
+    lines = spark.read.text(path).select(
+        F.regexp_extract(v, text_re, 1).alias("text_id"),
+        F.regexp_extract(v, text_re, 2).alias("kind"),
+        F.regexp_extract(v, text_re, 3).alias("body"),
+        F.when(v.rlike(r"^\d+\t"), F.split(v, "\t")).alias("c"),
     )
-    abstract = lines.filter(F.col("value").rlike(r"^\d+\|a\|")).select(
-        F.regexp_extract("value", r"^(\d+)\|a\|(.*)$", 1).alias("doc_id"),
-        F.regexp_extract("value", r"^(\d+)\|a\|(.*)$", 2).alias("abstract"),
-    )
-    # annotation projection (P5): cols 1:4 + split(col5, ':')[-1] -> CUI
-    # (medmention_preprocess.py:30-32)
-    ann = (
-        lines.filter(F.col("value").rlike(r"^\d+\t"))
-        .select(F.split("value", "\t").alias("c"))
-        .select(
-            F.col("c")[0].alias("doc_id"),
-            F.col("c")[1].cast("int").alias("begin"),
-            F.col("c")[2].cast("int").alias("end"),
-            F.col("c")[3].alias("surface"),
-            F.col("c")[4].alias("sem_type"),
-            F.element_at(F.split(F.col("c")[5], ":"), -1).alias("cui"),
-        )
-    )
-    ann_agg = ann.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("begin", "end", "surface", "cui"))
-        ).alias("anns")
-    )
-    docs = (
-        title.join(abstract, "doc_id", "left")
-        .join(ann_agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.concat(
-                F.array(
-                    F.struct(
-                        F.lit("text").alias("kind"),
-                        F.col("title").alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        F.lit(0).alias("offset"),
-                    ),
-                    F.struct(
-                        F.lit("text").alias("kind"),
-                        F.coalesce(F.col("abstract"), F.lit("")).alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        (F.length("title") + F.lit(1)).alias("offset"),
-                    ),
-                ),
-                F.transform(
-                    F.coalesce(F.col("anns"), F.array()),
-                    lambda a: F.struct(
-                        F.lit("mention").alias("kind"),
-                        a["surface"].alias("text"),
-                        F.lit(None).cast("string").alias("media_ref"),
-                        a["begin"].alias("offset"),
-                    ),
-                ),
-            ).alias("spans"),
-            F.transform(F.coalesce(F.col("anns"), F.array()), lambda a: a["cui"]).alias(
-                "mention_cuis"
+    c, kind, body = F.col("c"), F.col("kind"), F.col("body")
+    lines = lines.select(
+        F.coalesce(c[0], "text_id").alias("doc_id"),
+        F.when(kind == "t", body).alias("title"),
+        F.when(kind == "a", body).alias("abstract"),
+        # annotation projection (P5): cols 1:4 + split(col5, ':')[-1] ->
+        # CUI (medmention_preprocess.py:30-32)
+        F.when(
+            c.isNotNull(),
+            F.struct(
+                c[1].cast("int").alias("begin"),
+                c[2].cast("int").alias("end"),
+                c[3].alias("surface"),
+                F.element_at(F.split(c[5], ":"), -1).alias("cui"),
             ),
-        )
+        ).alias("ann"),
     )
-    return docs
+    per_doc = (
+        lines.filter(F.col("doc_id") != "")
+        .groupBy("doc_id")
+        .agg(
+            F.max("title").alias("title"),
+            F.max("abstract").alias("abstract"),
+            F.array_sort(F.collect_list("ann")).alias("anns"),
+        )
+        .filter(F.col("title").isNotNull())
+    )
+    return per_doc.select(
+        "doc_id",
+        F.concat(
+            F.array(
+                F.struct(
+                    F.lit("text").alias("kind"),
+                    F.col("title").alias("text"),
+                    F.lit(None).cast("string").alias("media_ref"),
+                    F.lit(0).alias("offset"),
+                ),
+                F.struct(
+                    F.lit("text").alias("kind"),
+                    F.coalesce(F.col("abstract"), F.lit("")).alias("text"),
+                    F.lit(None).cast("string").alias("media_ref"),
+                    (F.length("title") + F.lit(1)).alias("offset"),
+                ),
+            ),
+            F.transform(
+                "anns",
+                lambda a: F.struct(
+                    F.lit("mention").alias("kind"),
+                    a["surface"].alias("text"),
+                    F.lit(None).cast("string").alias("media_ref"),
+                    a["begin"].alias("offset"),
+                ),
+            ),
+        ).alias("spans"),
+        F.transform("anns", lambda a: a["cui"]).alias("mention_cuis"),
+    )
 
 
 def read_mrconso(spark: SparkSession, path: str) -> DataFrame:

@@ -13,26 +13,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.normalize import norm_key
 from ..operators.blocking import entity_names
-from ..operators.mentions import surviving_span_seqs
+from ..operators.mentions import extract_mentions
 
 
 def link_stream_exact(stream_docs: DataFrame, entities: DataFrame) -> DataFrame:
     """Streaming documents(doc_id, spans) -> linked mentions via the
     exact surface channel. Stateless (no watermark needed): explode +
     stream-static broadcast join, so it runs with any trigger and scales
-    linearly with input rate."""
-    mentions = (
-        stream_docs.withColumn("keep", surviving_span_seqs("spans"))
-        .select("doc_id", "keep", F.posexplode("spans").alias("span_seq", "span"))
-        .filter(
-            (F.col("span.kind") == "mention")
-            & F.array_contains("keep", F.col("span_seq"))
-        )
-        .select("doc_id", "span_seq", F.col("span.text").alias("surface"))
-        .withColumn("norm", norm_key("surface"))
-    )
+    linearly with input rate. Mentions are the batch pipeline's
+    (``extract_mentions``), so a mention with an empty norm is dropped."""
+    mentions = extract_mentions(stream_docs)
     names = entity_names(entities).select("norm", "cui")
     return mentions.join(F.broadcast(names), "norm", "left").select(
         "doc_id", "span_seq", "surface", "norm", "cui"

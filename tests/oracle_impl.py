@@ -143,6 +143,17 @@ def lev(a: str, b: str) -> int:
     return prev[-1]
 
 
+def fit_idf_py(norms: list[str], ngram: int, vocab_cap: int) -> dict:
+    """IDF fit on entity names (same rule as fit_idf): document
+    frequency per char n-gram, the vocab_cap most frequent grams (ties
+    by gram), idf = ln((N+1)/(df+1))+1."""
+    dfc = Counter()
+    for n in norms:
+        dfc.update(set(g for g in grams(n, ngram) if g))
+    top = sorted(dfc.items(), key=lambda kv: (-kv[1], kv[0]))[:vocab_cap]
+    return {g: math.log((len(norms) + 1) / (d + 1)) + 1.0 for g, d in top}
+
+
 def score(a: str, b: str, idf: dict, emb: dict, cfg: ScoringConfig) -> float:
     jw = jaro_winkler(a, b)
     ls = 1.0 - lev(a, b) / max(len(a), len(b), 1)
@@ -182,13 +193,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
                 seen.add((e["cui"], n))
                 names.append((e["cui"], n))
 
-    # IDF fit on entity names (same formula as fit_idf)
-    n_names = len(names)
-    dfc = Counter()
-    for _, n in names:
-        dfc.update(set(g for g in grams(n, cfg.ngram) if g))
-    top = sorted(dfc.items(), key=lambda kv: (-kv[1], kv[0]))[: sc.vocab_cap]
-    idf = {g: math.log((n_names + 1) / (d + 1)) + 1.0 for g, d in top}
+    idf = fit_idf_py([n for _, n in names], cfg.ngram, sc.vocab_cap)
 
     # stage 2: blocking (unified exact + deletion + LSH keys)
     ent_by_norm = defaultdict(set)

@@ -54,43 +54,6 @@ def test_entity_prefix_pins_cluster(spark):
     assert set(got.values()) == {"e|C0025202"}
 
 
-def test_digest_every_2_halves_driver_barriers(spark, monkeypatch):
-    """Each _digest is one driver-blocking job; at digest_every=2 the
-    convergence loop must issue roughly half as many as at 1, while the
-    assignments themselves are identical (the fixpoint doesn't move)."""
-    from entity_linking_in_biomedical_spark.operators import clustering
-
-    n = 40
-    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)]
-    e = spark.createDataFrame(edges, "src string, dst string")
-
-    counts = {}
-
-    def run(every):
-        calls = {"n": 0}
-        orig = clustering._digest
-
-        def counting(df):
-            calls["n"] += 1
-            return orig(df)
-
-        monkeypatch.setattr(clustering, "_digest", counting)
-        assign, iters = connected_components(e, digest_every=every)
-        got = {r["node"]: r["cluster_id"] for r in assign.collect()}
-        monkeypatch.setattr(clustering, "_digest", orig)
-        counts[every] = calls["n"]
-        return got, iters
-
-    got1, iters1 = run(1)
-    got2, iters2 = run(2)
-    assert got1 == got2
-    assert set(got1.values()) == {"n000"}
-    # stride-2 checks at most ceil(rounds/2)+1 times; the per-round
-    # form checks once per round — the barrier count must drop
-    assert counts[2] < counts[1]
-    assert counts[2] <= iters2 // 2 + 1
-
-
 def _edges_df(spark, edges):
     e = spark.createDataFrame(edges or [("x", "x")], "src string, dst string")
     return e.limit(0) if not edges else e

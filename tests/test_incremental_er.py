@@ -194,3 +194,37 @@ def test_snapshot_scale_relabel_is_shuffle_free(spark):
         for r in relabel_mentions(mentions, assignments).collect()
     }
     assert got == want == {("d1", 0): "C1", ("d1", 1): "NIL_asa"}
+
+
+def test_surface_index_keys_match_batch_keying(spark):
+    """The durable surface index is keyed with every batch keying
+    parameter: under phonetic=True it holds the same (norm, bk) set as
+    the batch keying frame, 'p|' Soundex keys included."""
+    from entity_linking_in_biomedical_spark.operators.blocking import (
+        surface_blocking_keys,
+    )
+    from entity_linking_in_biomedical_spark.plans.incremental_er import (
+        build_surface_index,
+    )
+    from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
+
+    cfg = PipelineConfig(phonetic=True)
+    assignments = spark.createDataFrame(
+        [
+            ("s|smith syndrome", "e|C1"),
+            ("s|smyth syndrome", "e|C1"),
+            ("s|aspirin", "s|aspirin"),
+            ("e|C1", "e|C1"),
+        ],
+        "node string, cluster_id string",
+    )
+    surf = assignments.filter(F.col("node").startswith("s|")).select(
+        F.expr("substring(node, 3)").alias("norm")
+    )
+    want = {tuple(r) for r in surface_blocking_keys(surf, **cfg.keying()).collect()}
+    got = {
+        (r["norm"], r["bk"])
+        for r in build_surface_index(assignments, cfg).collect()
+    }
+    assert got == want
+    assert any(bk.startswith("p|") for _, bk in got)

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig, run_pipeline
-from tests.oracle_impl import run_oracle
+from tests.oracle_impl import fit_idf_py, run_oracle
 
 
 @pytest.fixture(scope="module")
@@ -109,3 +109,19 @@ def test_determinism_across_parallelism(spark, corpus):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert r2 == r13
+
+
+def test_fit_idf_cap_keeps_most_frequent_grams(spark, corpus):
+    """With the vocabulary over the cap, fit_idf keeps the cap's most
+    frequent grams (ties by gram), as the oracle's rule does."""
+    from entity_linking_in_biomedical_spark.operators.blocking import entity_names
+    from entity_linking_in_biomedical_spark.operators.scoring import fit_idf
+
+    _, ents, *_ = corpus.to_spark(spark)
+    names = entity_names(ents)
+    norms = [r["norm"] for r in names.collect()]
+    full = fit_idf_py(norms, 3, 10**9)
+    assert len(full) > 50  # the cap binds
+    got = fit_idf(names, ngram=3, vocab_cap=50)
+    assert got == fit_idf_py(norms, 3, 50)
+    assert len(got) == 50

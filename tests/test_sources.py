@@ -47,10 +47,22 @@ AB3P = """\
 
 def test_read_pubtator(spark, tmp_path):
     p = tmp_path / "corpus.txt"
-    p.write_text(PUBTATOR)
+    # plus a title-only document and annotation lines with no title line
+    p.write_text(
+        PUBTATOR
+        + "\n103|t|Title only\n"
+        + "\n104\t0\t3\tfoo\tGene\tT028:C0000001\n"
+        + "104\t4\t7\tbar\tGene\tT028:C0000002\n"
+    )
     docs = read_pubtator(spark, str(p)).orderBy("doc_id")
     rows = {r["doc_id"]: r for r in docs.collect()}
-    assert set(rows) == {"101", "102"}
+    assert set(rows) == {"101", "102", "103"}
+    t = rows["103"]["spans"]
+    assert [(s["kind"], s["text"], s["offset"]) for s in t] == [
+        ("text", "Title only", 0),
+        ("text", "", len("Title only") + 1),
+    ]
+    assert rows["103"]["mention_cuis"] == []
     d = rows["101"]
     kinds = [s["kind"] for s in d["spans"]]
     assert kinds == ["text", "text", "mention", "mention"]
@@ -58,6 +70,50 @@ def test_read_pubtator(spark, tmp_path):
     assert d["spans"][3]["text"] == "breast cancer" and d["spans"][3]["offset"] == 19
     assert d["mention_cuis"] == ["C0376571", "C0006142"]
     assert rows["102"]["mention_cuis"] == []
+
+
+def _parse_pubtator_py(lines: list[str]) -> dict:
+    """Single-node reference parse: doc_id -> (spans, mention_cuis)."""
+    import re
+
+    docs: dict = {}
+    for line in lines:
+        m = re.match(r"^(\d+)\|([ta])\|(.*)$", line)
+        if m:
+            docs.setdefault(m[1], {"t": None, "a": None, "ann": []})[m[2]] = m[3]
+        elif re.match(r"^\d+\t", line):
+            c = line.split("\t")
+            docs.setdefault(c[0], {"t": None, "a": None, "ann": []})["ann"].append(
+                (int(c[1]), int(c[2]), c[3], c[5].split(":")[-1])
+            )
+    out = {}
+    for d, v in docs.items():
+        if v["t"] is None:
+            continue
+        anns = sorted(v["ann"])
+        spans = [
+            ("text", v["t"], None, 0),
+            ("text", v["a"] or "", None, len(v["t"]) + 1),
+        ] + [("mention", surf, None, b) for b, _, surf, _ in anns]
+        out[d] = (spans, [cui for *_, cui in anns])
+    return out
+
+
+def test_read_pubtator_matches_python_parse(spark, tmp_path):
+    from entity_linking_in_biomedical_spark.sources.synthetic import (
+        synth_pubtator_lines,
+    )
+
+    lines = synth_pubtator_lines(n_docs=200)
+    p = tmp_path / "synth.txt"
+    p.write_text("\n".join(lines) + "\n")
+    got = {
+        r["doc_id"]: ([tuple(s) for s in r["spans"]], list(r["mention_cuis"]))
+        for r in read_pubtator(spark, str(p)).collect()
+    }
+    want = _parse_pubtator_py(lines)
+    assert len(want) == 200
+    assert got == want
 
 
 def test_umls_scans_and_dictionary(spark, tmp_path):
