@@ -230,6 +230,40 @@ def channel_of(bk: Column) -> Column:
     )
 
 
+def _with_keys(
+    df: DataFrame,
+    ns: tuple[int, ...],
+    num_hashes: int,
+    bands: int,
+    del_max_len: int,
+    lsh_min_len: int,
+    del2_max_len: int,
+    word_num_hashes: int,
+    phonetic: bool,
+) -> DataFrame:
+    """``df`` with one row per blocking key ``bk`` of its ``norm``,
+    materialized once (lazy localCheckpoint): the key expression (12
+    md5 minhashes over multigrams) is the most expensive projection of
+    the job and every keyed frame is consumed more than once."""
+    # re-spread before the keying explode: a dedup exchange upstream
+    # AQE-coalesces by BYTES (a few MB of norms fits one partition),
+    # while the projection that follows is the job's most expensive
+    # per-row work — measured running as a single task on 32 cores
+    # (guide §2.5). One extra round-robin exchange of the pre-explode
+    # frame (far smaller than the exploded key frame the next join
+    # shuffles anyway) buys a fully-wide keying stage at every scale.
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    return pin(df.withColumn(
+        "bk",
+        F.explode(
+            blocking_keys(
+                F.col("norm"), ns, num_hashes, bands, del_max_len, lsh_min_len,
+                del2_max_len, word_num_hashes, phonetic,
+            )
+        ),
+    ))
+
+
 def surface_blocking_keys(
     mentions: DataFrame,
     ns: tuple[int, ...] = (2, 3),
@@ -241,30 +275,13 @@ def surface_blocking_keys(
     word_num_hashes: int = 4,
     phonetic: bool = False,
 ) -> DataFrame:
-    """(norm, bk) for every distinct mention surface — the single most
-    expensive projection of the job (12 md5 minhashes over multigrams
-    per surface), materialized once (lazy localCheckpoint) and SHARED by
-    the mention-entity blocking join and the mention-mention self-join
-    (previously each re-derived it — the keying pass paid twice)."""
-    # re-spread the distinct output before the keying explode: the
-    # dedup exchange AQE-coalesces by BYTES (a few MB of norms fits one
-    # partition), while the projection that follows is the job's most
-    # expensive per-row work — measured running as a single task on 32
-    # cores (guide §2.5). One extra round-robin exchange of the
-    # pre-explode surface frame (far smaller than the exploded key
-    # frame the next join shuffles anyway) buys a fully-wide keying
-    # stage at every scale.
-    par = mentions.sparkSession.sparkContext.defaultParallelism
-    surfaces = mentions.select("norm").distinct().repartition(par)
-    return pin(surfaces.withColumn(
-        "bk",
-        F.explode(
-            blocking_keys(
-                F.col("norm"), ns, num_hashes, bands, del_max_len, lsh_min_len,
-                del2_max_len, word_num_hashes, phonetic,
-            )
-        ),
-    ))
+    """(norm, bk) for every distinct mention surface, materialized once
+    and SHARED by the mention-entity blocking join and the
+    mention-mention self-join (the keying pass is paid once)."""
+    return _with_keys(
+        mentions.select("norm").distinct(), ns, num_hashes, bands, del_max_len,
+        lsh_min_len, del2_max_len, word_num_hashes, phonetic,
+    )
 
 
 def blocking_skew_bound(
@@ -360,30 +377,16 @@ def block_candidates(
     expensive projection runs once for the whole job.
     """
 
-    def with_keys(df: DataFrame) -> DataFrame:
-        # the key expression (12 md5 minhashes over multigrams) is the
-        # most expensive projection in the stage and each keyed frame is
-        # consumed more than once -> materialize once; re-spread first
-        # for the same single-task-keying reason as
-        # surface_blocking_keys (the synonym frame arrives on the
-        # byte-coalesced tail of entity_names' dedup exchange)
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        return pin(df.withColumn(
-            "bk",
-            F.explode(
-                blocking_keys(
-                    F.col("norm"), ns, num_hashes, bands, del_max_len, lsh_min_len,
-                    del2_max_len, word_num_hashes, phonetic,
-                )
-            ),
-        ))
-
+    keying = (ns, num_hashes, bands, del_max_len, lsh_min_len, del2_max_len,
+              word_num_hashes, phonetic)
     m_keys = (
         surface_keys
         if surface_keys is not None
-        else with_keys(mentions.select("norm").distinct())
+        else surface_blocking_keys(mentions, *keying)
     )
-    e_keys = with_keys(names.select("cui", "norm")).dropDuplicates(["cui", "bk"])
+    # the synonym frame arrives on the byte-coalesced tail of
+    # entity_names' dedup exchange: _with_keys re-spreads it
+    e_keys = _with_keys(names.select("cui", "norm"), *keying).dropDuplicates(["cui", "bk"])
 
     # hot-key cap (explicit skew control / max_df analogue)
     key_freq = e_keys.groupBy("bk").agg(F.count_distinct("cui").alias("kf"))

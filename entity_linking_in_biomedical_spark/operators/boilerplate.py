@@ -363,29 +363,3 @@ def dedup_lines_batch(
         for c in batch.columns
     ]
     return joined.select(*out_cols)
-
-
-def line_dedup_foreach_batch(
-    index: DataFrame,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Streaming face: replay the exact batch operator per micro-batch
-    against the persisted index (the contamination/dsir foreachBatch
-    pattern — value-equal to batch by construction).
-    ``sink(cleaned_df, batch_id)`` receives each micro-batch's rewrite.
-    Wire as::
-
-        stream.writeStream.foreachBatch(
-            line_dedup_foreach_batch(index, sink)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            dedup_lines_batch(batch_df, index, id_col=id_col, text_col=text_col),
-            batch_id,
-        )
-
-    return _apply

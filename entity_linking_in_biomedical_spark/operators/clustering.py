@@ -223,29 +223,6 @@ def merge_into_clusters(
     return updated, iters
 
 
-def merge_clusters_foreach_batch(load, save, edge_cols=("src", "dst")):
-    """Streaming face of :func:`merge_into_clusters` (foreachBatch
-    pattern — unlike the dedup indexes, the cluster state EVOLVES per
-    batch, so this takes ``load() -> assignments DF`` and
-    ``save(updated DF, batch_id)`` callables; save must persist before
-    the next micro-batch loads, e.g. an Iceberg MERGE or an
-    overwrite-by-snapshot). Each micro-batch of edge rows is folded
-    into the persisted assignments with snapshot-sized work::
-
-        edges.writeStream.foreachBatch(
-            merge_clusters_foreach_batch(load, save)
-        ).start()
-    """
-    s, d = edge_cols
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        edges = batch_df.select(F.col(s).alias("src"), F.col(d).alias("dst"))
-        updated, _ = merge_into_clusters(load(), edges)
-        save(updated, batch_id)
-
-    return _apply
-
-
 def retract_from_clusters(
     assignments: DataFrame,
     edges: DataFrame,
@@ -320,29 +297,6 @@ def retract_from_clusters(
         "node", "cluster_id"
     )
     return kept.unionByName(relinked), iters
-
-
-def retract_clusters_foreach_batch(load_state, load_edges, save):
-    """Streaming face of :func:`retract_from_clusters` (same
-    foreachBatch contract as merge_clusters_foreach_batch): each
-    micro-batch of (src, dst) retraction rows — e.g. the reviewed-as-
-    non-match stream off the clerical queue — splits the persisted
-    assignments. ``load_edges() -> DataFrame`` supplies the surviving
-    edge table; ``save`` must ALSO persist the edge deletions before
-    the next batch loads (an Iceberg DELETE on the edge table plus a
-    MERGE on assignments)::
-
-        rejects.writeStream.foreachBatch(
-            retract_clusters_foreach_batch(load_state, load_edges, save)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        r = batch_df.select("src", "dst")
-        updated, _ = retract_from_clusters(load_state(), load_edges(), r)
-        save(updated, r, batch_id)
-
-    return _apply
 
 
 def cluster_size_histogram(assignments: DataFrame) -> DataFrame:

@@ -336,103 +336,20 @@ def scrub_interleaved(
 DEFAULT_MAX_BROADCAST_GRAMS = 10_000_000
 
 
-def contamination_foreach_batch(
-    test: DataFrame,
-    sink,
-    n: int = 13,
-    min_overlap: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    test_id_col: str = "test_id",
-    broadcast_test: bool = False,
-):
-    """The big-eval-set path :func:`stream_contamination` cannot take:
-    a ``foreachBatch`` callback that runs the BATCH operator on each
-    micro-batch, so the test side is never folded into per-row arrays
-    or broadcast-crossed — with ``broadcast_test=False`` (the default
-    here, since this path exists for oversized test sides) the per-batch
-    gram join shuffles both sides on the 8-byte hash.
-
-    ``sink(result_df, batch_id)`` receives each micro-batch's flagged
-    pairs (same schema as the batch operator). Wire it as::
-
-        stream.writeStream.foreachBatch(
-            contamination_foreach_batch(test, sink, n=13)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            ngram_contamination(
-                batch_df,
-                test,
-                n=n,
-                min_overlap=min_overlap,
-                id_col=id_col,
-                text_col=text_col,
-                test_id_col=test_id_col,
-                broadcast_test=broadcast_test,
-            ),
-            batch_id,
-        )
-
-    return _apply
-
-
-def scrub_foreach_batch(
-    test: DataFrame,
-    sink,
-    n: int = 13,
-    margin: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_test: bool = False,
-):
-    """The big-eval-set path :func:`scrub_stream` cannot take (its
-    broadcast gram array is bounded by the guard): a ``foreachBatch``
-    callback that runs the BATCH scrub on each micro-batch — with
-    ``broadcast_test=False`` (the default here, since this path exists
-    for oversized test sides) the per-batch gram join shuffles both
-    sides on the 8-byte hash. ``sink(result_df, batch_id)`` receives
-    each micro-batch's scrubbed docs (same schema as the batch
-    operator). Wire it as::
-
-        stream.writeStream.foreachBatch(
-            scrub_foreach_batch(test, sink, n=13)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            scrub_contamination(
-                batch_df,
-                test,
-                n=n,
-                margin=margin,
-                id_col=id_col,
-                text_col=text_col,
-                broadcast_test=broadcast_test,
-            ),
-            batch_id,
-        )
-
-    return _apply
-
-
 def _guard_gram_broadcast(
     test: DataFrame,
     text_col: str,
     n: int,
     max_broadcast_grams: int | None,
     caller: str,
-    fallback: str = "contamination_foreach_batch",
+    fallback: str = "ngram_contamination",
 ) -> None:
     """Shared broadcast budget for the streaming forms: the static test
     side is counted ONCE at stream-construction time (one tiny batch
     job), and a total distinct-gram count above the budget raises
-    ``ValueError`` naming the caller's foreachBatch ``fallback`` —
-    instead of silently OOMing executors mid-stream. ``None`` disables
-    the guard."""
+    ``ValueError`` naming the batch operator (``fallback``) to run per
+    micro-batch instead — rather than silently OOMing executors
+    mid-stream. ``None`` disables the guard."""
     if max_broadcast_grams is None:
         return
     total_grams = (
@@ -445,10 +362,10 @@ def _guard_gram_broadcast(
         raise ValueError(
             f"{caller}: test side has {total_grams} distinct "
             f"grams (> max_broadcast_grams={max_broadcast_grams}); the "
-            "broadcast-cross-join form would risk executor OOM. Use "
-            f"{fallback}(test, sink, ...) with "
-            "writeStream.foreachBatch to run the shuffling batch operator "
-            "per micro-batch, or raise max_broadcast_grams explicitly."
+            "broadcast-cross-join form would risk executor OOM. Run the "
+            f"shuffling batch operator {fallback} per micro-batch "
+            f"(writeStream.foreachBatch(lambda df, i: sink({fallback}(df, "
+            "test, ...), i))), or raise max_broadcast_grams explicitly."
         )
 
 
@@ -480,14 +397,14 @@ def scrub_stream(
     2.3 s vs 11.6 s at sf0.1/18.5k grams) — use :func:`scrub_contamination`
     there. Same broadcast budget/guard as :func:`stream_contamination`;
     the shuffling batch operator per micro-batch
-    (``contamination_foreach_batch`` pattern) remains the path for
-    oversized eval sets.
+    (:func:`scrub_contamination` under ``foreachBatch``) remains the
+    path for oversized eval sets.
     """
     from ..functions.lambdas import let_bound
 
     _guard_gram_broadcast(
         test, text_col, n, max_broadcast_grams, "scrub_stream",
-        fallback="scrub_foreach_batch",
+        fallback="scrub_contamination",
     )
     tg = _test_gram_hashes(test, text_col, n).agg(
         F.array_sort(F.collect_list("g")).alias("t_grams")
@@ -627,9 +544,9 @@ def stream_contamination(
     ``max_broadcast_grams`` bounds the broadcast: the static test side
     is counted ONCE at stream-construction time (one tiny batch job),
     and a total distinct-gram count above the budget raises
-    ``ValueError`` naming the ``contamination_foreach_batch`` fallback
-    — instead of silently OOMing executors mid-stream. ``None``
-    disables the guard."""
+    ``ValueError`` naming :func:`ngram_contamination` as the operator
+    to run per micro-batch — instead of silently OOMing executors
+    mid-stream. ``None`` disables the guard."""
     _guard_gram_broadcast(test, text_col, n, max_broadcast_grams, "stream_contamination")
     # clamp to >= 1: the batch operator's inner join on gram hash can
     # only produce pairs with at least one shared gram, so min_overlap=0

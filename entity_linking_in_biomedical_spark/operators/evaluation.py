@@ -395,48 +395,3 @@ def cluster_impurity_report(
         .orderBy(F.desc("wrong_pairs"), F.asc("pred_cluster"))
         .limit(top_k)
     )
-
-
-def evaluation_foreach_batch(
-    gold_assign: DataFrame,
-    sink,
-    id_col: str = "doc_id",
-    pred_col: str = "pred",
-    gold_col: str = "gold",
-    top_k_impurity: int | None = None,
-):
-    """Streaming face of the report card (the repo's foreachBatch-twin
-    convention, operators/contamination.py:140): each micro-batch of
-    predicted assignments (id, pred) is joined to the static gold map
-    and scored with the BATCH metrics — iterative/scalar aggregation
-    cannot run inside a streaming plan, so the batch operator runs per
-    micro-batch. ``sink(card_row_dict, impurity_df_or_None, batch_id)``
-    receives the one-row card (as a dict) and, when ``top_k_impurity``
-    is set, the offender report frame. Wire it as::
-
-        stream.writeStream.foreachBatch(
-            evaluation_foreach_batch(gold, sink)
-        ).start()
-
-    Per-batch cost is the batch operator's: one batch-sized shuffle to
-    cells plus an equi-join against the gold map on the item id.
-    """
-    g = gold_assign.select(
-        F.col(id_col).cast("string").alias(id_col),
-        F.col(gold_col).cast("string").alias(gold_col),
-    )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        assign = batch_df.select(
-            F.col(id_col).cast("string").alias(id_col),
-            F.col(pred_col).alias(pred_col),
-        ).join(g, id_col, "left")
-        card = cluster_pair_metrics(assign, id_col, pred_col, gold_col).collect()[0]
-        imp = None
-        if top_k_impurity is not None:
-            imp = cluster_impurity_report(
-                assign, id_col, pred_col, gold_col, top_k=top_k_impurity
-            )
-        sink(card.asDict(), imp, batch_id)
-
-    return _apply

@@ -217,57 +217,3 @@ def flag_against_index(
     # 'exact' row, not one of each
     near = est.join(F.broadcast(exact.select("doc_id")), "doc_id", "left_anti")
     return exact.unionByName(near)
-
-
-def flag_foreach_batch(
-    index: DataFrame,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kw,
-):
-    """Streaming face of :func:`flag_against_index`: the flag plan
-    needs dropDuplicates + groupBy over each arriving document's
-    candidates, which append-mode streaming treats as unbounded
-    stateful aggregation — per-batch semantics wants the BATCH
-    operator per micro-batch (the contamination/dsir foreachBatch
-    pattern). ``sink(flags_df, batch_id)`` receives each micro-batch's
-    flags. Wire as::
-
-        stream.writeStream.foreachBatch(
-            flag_foreach_batch(index, sink)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            flag_against_index(
-                batch_df, index, id_col=id_col, text_col=text_col, **kw
-            ),
-            batch_id,
-        )
-
-    return _apply
-
-
-def dedup_against_index(
-    batch: DataFrame,
-    index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kw,
-) -> DataFrame:
-    """The transform form: batch rows (original columns) that survive
-    the index check — anti-join on the flags. Append
-    ``build_dedup_index(survivors)`` to the index table afterwards to
-    absorb the snapshot."""
-    flags = flag_against_index(batch, index, id_col=id_col, text_col=text_col, **kw)
-    return batch.join(
-        F.broadcast(
-            flags.select(F.col("doc_id").alias(id_col)).withColumn(
-                id_col, F.col(id_col).cast(batch.schema[id_col].dataType)
-            )
-        ),
-        id_col,
-        "left_anti",
-    )

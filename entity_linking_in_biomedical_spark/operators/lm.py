@@ -273,48 +273,6 @@ def bigram_lm_nll(
     )
 
 
-def lm_score_foreach_batch(
-    lm: BigramLM,
-    sink,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_model: bool = True,
-):
-    """Streaming perplexity filtering: score each arriving micro-batch
-    against a pre-fitted model. Per-doc NLL needs a groupBy over the
-    doc's bigrams, which a streaming plan would treat as stateful
-    continuous aggregation — the per-batch semantics a quality filter
-    wants is the BATCH operator per micro-batch, so this follows the
-    repo's foreachBatch pattern (contamination_foreach_batch). The
-    model frames are materialized at fit time (model-sized), so each
-    batch pays only the batch's own explode + joins; with
-    ``broadcast_model=True`` (default — a capped-vocab model fits in
-    memory) the whole per-batch plan is shuffle-free after the per-doc
-    aggregate.
-
-    ``sink(scored_df, batch_id)`` receives (id, n_bigrams, oov_ratio,
-    avg_nll) per micro-batch. Wire it as::
-
-        stream.writeStream.foreachBatch(
-            lm_score_foreach_batch(lm, sink)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            score_bigram_nll(
-                batch_df,
-                lm,
-                id_col=id_col,
-                text_col=text_col,
-                broadcast_model=broadcast_model,
-            ),
-            batch_id,
-        )
-
-    return _apply
-
-
 def perplexity_buckets(
     docs: DataFrame,
     lm: "BigramLM | None" = None,

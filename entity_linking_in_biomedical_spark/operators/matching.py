@@ -240,36 +240,6 @@ def stitch_churn_stats(
     )
 
 
-def stable_ids_foreach_batch(load, save, id_col="doc_id", cluster_col="cluster_id"):
-    """Streaming face of :func:`stable_cluster_ids` (the evolving-state
-    foreachBatch pattern of clustering.merge_clusters_foreach_batch):
-    each micro-batch is a freshly-computed clustering snapshot —
-    (id, cluster) rows — stitched against the persisted assignment from
-    ``load() -> DF(id_col, cluster_col)`` so entity ids stay stable
-    across re-clustering runs; ``save(stitched DF, batch_id)`` persists
-    (id_col, cluster_col) with the inherited ids before the next batch
-    loads. Work per batch: the batch-operator's — overlap cells +
-    cluster-count-sized matching, never a corpus re-label::
-
-        snapshots.writeStream.foreachBatch(
-            stable_ids_foreach_batch(load, save)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        stitched = stable_cluster_ids(
-            load(), batch_df, id_col=id_col, cluster_col=cluster_col
-        )
-        save(
-            stitched.select(
-                F.col(id_col), F.col("stable_id").alias(cluster_col)
-            ),
-            batch_id,
-        )
-
-    return _apply
-
-
 def repair_bridged_clusters(
     scored_edges: DataFrame,
     min_bridge_score: float = 0.95,

@@ -126,3 +126,18 @@ def extract_mentions(documents: DataFrame, abbr_map: DataFrame | None = None) ->
             .drop("long_form")
         )
     return exploded.withColumn("norm", norm_key("surface")).filter(F.col("norm") != "")
+
+
+def mention_stats(documents: DataFrame) -> DataFrame:
+    """A5: mention/media/text span counts per doc — pure JVM column
+    aggregates over the span array (no explode, no shuffle)."""
+    def n_of(kind: str):
+        return F.size(F.filter("spans", lambda s: s["kind"] == kind))
+
+    return documents.select(
+        "doc_id",
+        n_of("mention").alias("n_mentions"),
+        n_of("media").alias("n_media"),
+        n_of("text").alias("n_text"),
+        F.size("spans").alias("n_spans"),
+    )

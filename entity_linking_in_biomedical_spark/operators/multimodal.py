@@ -39,15 +39,6 @@ def fake_decoder(media_ref: str, payload: bytes | None) -> dict:
     }
 
 
-def unsupported_decoder(media_ref: str, payload: bytes | None) -> dict:
-    """Explicit stub for real decoding: the container ships no codec
-    libraries."""
-    raise NotImplementedError(
-        "media decoding requires an image/audio library not present in "
-        "this environment; inject a decoder callable"
-    )
-
-
 def extract_media_features(
     documents: DataFrame,
     decoder: Callable[[str, bytes | None], dict] = fake_decoder,
@@ -284,25 +275,6 @@ def dedup_media_batch(batch: DataFrame, index: DataFrame) -> DataFrame:
         .agg(F.collect_set("pos").alias("__drop"))
     )
     return _drop_span_positions(batch, drops)
-
-
-def media_dedup_foreach_batch(index: DataFrame, sink):
-    """Streaming face of :func:`dedup_media_batch` (the
-    flag_foreach_batch pattern): per micro-batch, replay the exact
-    batch operator against the persisted index and hand the cleaned
-    span docs to ``sink(clean_df, batch_id)`` — which should also
-    append ``build_media_index(clean_df)`` to the index table so the
-    next snapshot sees this one's assets. Wire as::
-
-        stream.writeStream.foreachBatch(
-            media_dedup_foreach_batch(index, sink)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(dedup_media_batch(batch_df, index), batch_id)
-
-    return _apply
 
 
 def interleaved_profile(

@@ -486,36 +486,3 @@ def dsir_score(
             F.round(F.col("__w").cast("double"), 6).alias("weight"),
         )
     )
-
-
-def dsir_score_foreach_batch(
-    model: DataFrame,
-    sink,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_hex: int = DSIR_BUCKET_HEX,
-):
-    """Streaming target-likeness scoring: per-doc weights need a
-    groupBy over the doc's grams, which a streaming plan would treat as
-    stateful continuous aggregation — per-batch semantics wants the
-    BATCH scorer per micro-batch (the lm_score_foreach_batch pattern).
-    The model is 16^bucket_hex rows, always broadcast. Wire as::
-
-        stream.writeStream.foreachBatch(
-            dsir_score_foreach_batch(model, sink)
-        ).start()
-    """
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sink(
-            dsir_score(
-                batch_df,
-                model,
-                text_col=text_col,
-                id_col=id_col,
-                bucket_hex=bucket_hex,
-            ),
-            batch_id,
-        )
-
-    return _apply

@@ -27,8 +27,7 @@ a cross join:
   never the |L|x|R| of the naive theta join Catalyst would otherwise
   plan (BroadcastNestedLoop/cartesian).
 - ``sessionize``: gap-based session ids via lag + running sum of
-  boundary flags — the batch twin of the streaming session windows in
-  ``streaming/windows.py``. One shuffle on the user key.
+  boundary flags. One shuffle on the user key.
 - ``funnel``: earliest strictly-ordered completion of an event-step
   sequence (view -> click -> purchase). One aggregate per step, every
   join key-partitioned on the user key; step frames shrink

@@ -37,7 +37,6 @@ from .resume import make_stage_store, stage_signature
 @dataclass(frozen=True)
 class PipelineConfig:
     scoring: ScoringConfig = ScoringConfig()
-    ngram: int = 3  # scoring tf-idf gram size
     block_ngrams: tuple[int, ...] = (2, 3)  # LSH gram sizes (no 1-grams:
     # a min-hash over 1-grams is dominated by common letters -> mega-buckets)
     num_hashes: int = 12
@@ -264,7 +263,7 @@ def run_pipeline(
     )
 
     # ---- stage 3: pairwise scoring -----------------------------------
-    idf = fit_idf(names, ngram=cfg.ngram, vocab_cap=cfg.scoring.vocab_cap)
+    idf = fit_idf(names, ngram=cfg.scoring.ngram, vocab_cap=cfg.scoring.vocab_cap)
 
     # Attach-join strategy for the embedding lookup (guide §3.1:
     # broadcast the side that fits, decided by size, not by hope): the

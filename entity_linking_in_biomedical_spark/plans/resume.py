@@ -33,18 +33,17 @@ from ..session import pin
 _BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?$")
 
 
-def stage_signature(
-    stage: str, params: dict, parents: list[str], inputs: list[int] | None = None
-) -> str:
-    """``inputs``: identity fingerprints of the stage's source
-    DataFrames (df.semanticHash() — hashes the canonicalized logical
-    plan, i.e. source paths + transformations). Without them, re-running
-    into the same out_dir with *different inputs* but identical params
-    would silently serve the stale committed snapshot. semanticHash does
-    not see in-place content changes under an unchanged path — for that,
-    use a fresh out_dir per dataset version (documented contract)."""
+def stage_signature(stage: str, params: dict, parents: list[str]) -> str:
+    """md5 of the stage name, its parameters and its parents'
+    signatures. Input identity belongs in ``params``: run_pipeline
+    folds each source DataFrame's fingerprint into
+    ``params["input_fp"]``, so re-running into the same out_dir with
+    *different inputs* but identical settings recomputes instead of
+    serving the stale committed snapshot. A fingerprint does not see
+    in-place content changes under an unchanged path — for that, use a
+    fresh out_dir per dataset version (documented contract)."""
     payload = json.dumps(
-        {"stage": stage, "params": params, "parents": parents, "inputs": inputs or []},
+        {"stage": stage, "params": params, "parents": parents},
         sort_keys=True,
         default=str,
     )

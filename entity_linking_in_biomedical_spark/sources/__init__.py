@@ -1,4 +1,4 @@
 from .synthetic import synth_corpus
-from .loaders import load_table, load_documents_flat, wrap_flat_documents
+from .loaders import wrap_flat_documents
 
-__all__ = ["synth_corpus", "load_table", "load_documents_flat", "wrap_flat_documents"]
+__all__ = ["synth_corpus", "wrap_flat_documents"]

@@ -100,12 +100,6 @@ def register_bucketed(
     return spark.table(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back; the catalog carries the layout, so
-    joins/aggregations on the bucket keys plan without an Exchange."""
-    return spark.table(table)
-
-
 def join_is_exchange_free(a: DataFrame, b: DataFrame, on: list[str]) -> bool:
     """True iff the equi-join of two (bucketed) frames plans with no
     shuffle on either input — the property the layout buys. Broadcast

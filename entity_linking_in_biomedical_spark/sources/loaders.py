@@ -1,6 +1,6 @@
-"""Parquet loaders for the driver's test tables.
+"""Flat-document adapter.
 
-The driver ships a *flat* documents table (doc_id bigint, text, lang,
+The test tables ship a *flat* documents table (doc_id bigint, text, lang,
 source, n_chars — TESTDATA.md); the engine's authoritative shape is the
 spans array (FIXTURES.md §1). ``wrap_flat_documents`` adapts flat text
 to the span shape as a single kind='text' span, so every operator has
@@ -9,21 +9,7 @@ one input contract.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_documents_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
+from pyspark.sql import DataFrame, functions as F
 
 
 def wrap_flat_documents(flat: DataFrame) -> DataFrame:

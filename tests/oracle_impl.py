@@ -193,7 +193,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
                 seen.add((e["cui"], n))
                 names.append((e["cui"], n))
 
-    idf = fit_idf_py([n for _, n in names], cfg.ngram, sc.vocab_cap)
+    idf = fit_idf_py([n for _, n in names], sc.ngram, sc.vocab_cap)
 
     # stage 2: blocking (unified exact + deletion + LSH keys)
     ent_by_norm = defaultdict(set)

@@ -218,3 +218,55 @@ def test_block_candidates_phonetic_channel_end_to_end(spark):
     assert [(r["norm"], r["cui"], r["channel"]) for r in got] == [
         ("robert", "C1", "phonetic")
     ]
+
+
+_RESTART_SCRIPT = """
+from pyspark.sql import functions as F
+
+from entity_linking_in_biomedical_spark.operators import blocking as B
+from entity_linking_in_biomedical_spark.session import get_spark
+
+NORMS = [("breast cancer",), ("brca1",), ("tumour necrosis factor alpha",)]
+
+
+def keys(spark, expr):
+    df = spark.createDataFrame(NORMS, "norm string")
+    return sorted(
+        (r.norm, r.bk)
+        for r in df.select("norm", F.explode(expr).alias("bk")).collect()
+    )
+
+
+spark = get_spark("keys-memo-restart", master="local[2]")
+expr = B.blocking_keys(F.col("norm"))
+before = keys(spark, expr)
+spark.stop()
+
+spark = get_spark("keys-memo-restart", master="local[2]")
+again = B.blocking_keys(F.col("norm"))
+assert again is expr, "memo miss after restart"
+assert keys(spark, again) == before
+assert keys(spark, B._build_blocking_keys(F.col("norm"), (2, 3), 12, 12, 12, 5, 7, 4, False)) == before
+spark.stop()
+print("OK", len(before))
+"""
+
+
+def test_keys_memo_survives_session_restart():
+    """The process-wide blocking-key memo stays valid across a
+    SparkSession restart: after ``stop()`` and a fresh ``get_spark()``
+    in the same process, the memoized Column is served again and keys
+    the same rows as before and as a freshly built expression. Runs in
+    a subprocess so the shared session fixture is not stopped."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, EL_SPARK_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT],
+        capture_output=True, text=True, timeout=300, env=env, cwd=repo,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip().splitlines()[-1].startswith("OK ")

@@ -245,37 +245,6 @@ def test_dedup_lines_batch_index_never_shuffles(spark):
     assert "EvalPython" not in plan
 
 
-def test_line_dedup_foreach_batch_matches_batch(spark, tmp_path):
-    from entity_linking_in_biomedical_spark.operators.boilerplate import (
-        build_line_index,
-        dedup_lines_batch,
-        line_dedup_foreach_batch,
-    )
-
-    corpus = _docs(spark, [("a", "indexed line one\ncorpus a.")])
-    batch = _docs(
-        spark, [("x", "indexed line one\nbatch x."), ("y", "fresh y line.")]
-    )
-    index = build_line_index(corpus)
-    want = {tuple(r) for r in dedup_lines_batch(batch, index).collect()}
-    src = str(tmp_path / "ld_src")
-    batch.write.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    got = set()
-
-    def sink(df, batch_id):
-        got.update(tuple(r) for r in df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(line_dedup_foreach_batch(index, sink))
-        .option("checkpointLocation", str(tmp_path / "ld_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert got == want
-
-
 def test_line_dedup_shuffle_budget(spark):
     # exactly the two intended shuffles: the line-hash groupBy and the
     # doc_id fold-back (join side may resolve broadcast at this size,

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.sources.bucketed import (
     join_is_exchange_free,
-    read_bucketed,
     write_bucketed,
 )
 
@@ -34,7 +33,7 @@ def bucketed_pair(spark, request):
     )
     write_bucketed(a, ta, ["norm"], n_buckets=8)
     write_bucketed(b, tb, ["norm"], n_buckets=8)
-    yield read_bucketed(spark, ta), read_bucketed(spark, tb)
+    yield spark.table(ta), spark.table(tb)
     spark.sql(f"drop table if exists {ta}")
     spark.sql(f"drop table if exists {tb}")
 

@@ -121,32 +121,19 @@ def test_merge_chain_across_three_old_clusters(spark):
     assert got == full and set(got.values()) == {"a"}
 
 
-def test_merge_clusters_foreach_batch(spark, tmp_path):
-    """Two micro-batches of edges folded through the streaming face
-    equal one full recompute; state evolves between batches via the
-    load/save callables."""
+def test_merge_two_batches_equals_full_recompute(spark):
+    """Two edge batches folded one after the other (the second merge
+    reads the first's output) equal one full recompute."""
     from entity_linking_in_biomedical_spark.operators.clustering import (
-        merge_clusters_foreach_batch,
+        merge_into_clusters,
     )
 
     assign, _ = connected_components(_edges_df(spark, [("a", "b"), ("x", "y")]))
-    state = {"df": assign.localCheckpoint()}
-
-    def load():
-        return state["df"]
-
-    def save(df, batch_id):
-        state["df"] = df.localCheckpoint()
-
-    apply_fn = merge_clusters_foreach_batch(load, save)
-    src = str(tmp_path / "cc_edges")
-    b1 = spark.createDataFrame([("b", "x")], "src string, dst string")
-    b2 = spark.createDataFrame([("y", "z"), ("q", "r")], "src string, dst string")
-    b1.write.parquet(src + "/1")
-    apply_fn(spark.read.parquet(src + "/1"), 0)
-    b2.write.parquet(src + "/2")
-    apply_fn(spark.read.parquet(src + "/2"), 1)
-    got = {r["node"]: r["cluster_id"] for r in state["df"].collect()}
+    assign, _ = merge_into_clusters(assign.localCheckpoint(), _edges_df(spark, [("b", "x")]))
+    assign, _ = merge_into_clusters(
+        assign.localCheckpoint(), _edges_df(spark, [("y", "z"), ("q", "r")])
+    )
+    got = {r["node"]: r["cluster_id"] for r in assign.collect()}
     full, _ = cc(
         spark, [("a", "b"), ("x", "y"), ("b", "x"), ("y", "z"), ("q", "r")]
     )
@@ -479,35 +466,20 @@ def test_retract_touches_state_broadcast_only(spark):
     assert got == {"a": "a", "b": "a", "c": "c", "p": "p", "q": "p"}
 
 
-def test_retract_foreach_batch(spark):
-    """Two sequential retraction micro-batches through the streaming
-    face fold to the same state as one batch retraction of both."""
-    from entity_linking_in_biomedical_spark.operators.clustering import (
-        retract_clusters_foreach_batch,
-    )
-
+def test_retract_two_batches_equals_one(spark):
+    """Two sequential retractions (the second reads the first's state
+    and surviving edges) fold to the same state as one retraction of
+    both."""
     base = [("a", "b"), ("b", "c"), ("c", "d"), ("p", "q")]
     assign, _ = connected_components(_edges_df(spark, base))
-    state = {"assign": assign, "edges": _edges_df(spark, base)}
-
-    def load_state():
-        return state["assign"]
-
-    def load_edges():
-        return state["edges"]
-
-    def save(updated, r, batch_id):
-        state["assign"] = spark.createDataFrame(
-            updated.collect(), "node string, cluster_id string"
+    edges = _edges_df(spark, base)
+    for r in ([("b", "c")], [("p", "q")]):
+        r = _edges_df(spark, r)
+        assign, _ = retract_from_clusters(assign, edges, r)
+        assign = spark.createDataFrame(assign.collect(), "node string, cluster_id string")
+        edges = spark.createDataFrame(
+            edges.join(r, ["src", "dst"], "left_anti").collect(), "src string, dst string"
         )
-        state["edges"] = spark.createDataFrame(
-            state["edges"].join(r, ["src", "dst"], "left_anti").collect(),
-            "src string, dst string",
-        )
-
-    fn = retract_clusters_foreach_batch(load_state, load_edges, save)
-    fn(_edges_df(spark, [("b", "c")]), 0)
-    fn(_edges_df(spark, [("p", "q")]), 1)
-    got = {r["node"]: r["cluster_id"] for r in state["assign"].collect()}
+    got = {r["node"]: r["cluster_id"] for r in assign.collect()}
     want = _retract(spark, base, [("b", "c"), ("p", "q")])
     assert got == want

@@ -447,46 +447,6 @@ def test_cluster_metrics_null_id_namespace_no_collision(spark):
     assert r["n_pred"] == 2  # cluster '42' (a,b) + the NULL singleton
 
 
-def test_evaluation_foreach_batch_matches_batch(spark, tmp_path):
-    """Streaming face: the per-micro-batch report card must equal the
-    batch operator's on the same rows (availableNow over a parquet
-    source, the repo's foreachBatch-twin contract)."""
-    from entity_linking_in_biomedical_spark.operators.evaluation import (
-        evaluation_foreach_batch,
-    )
-
-    rows = [(str(i), f"p{i % 4}") for i in range(40)]
-    batch = spark.createDataFrame(rows, "doc_id string, pred string")
-    gold = spark.createDataFrame(
-        [(str(i), f"g{i % 5}") for i in range(40)], "doc_id string, gold string"
-    )
-    want = cluster_pair_metrics(
-        batch.join(gold, "doc_id", "left"), "doc_id", "pred", "gold"
-    ).collect()[0].asDict()
-
-    src = str(tmp_path / "eval_src")
-    batch.write.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    got = []
-
-    def sink(card, imp, batch_id):
-        got.append((card, None if imp is None else imp.count()))
-
-    q = (
-        stream.writeStream.foreachBatch(
-            evaluation_foreach_batch(gold, sink, top_k_impurity=5)
-        )
-        .option("checkpointLocation", str(tmp_path / "eval_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len(got) == 1
-    card, n_imp = got[0]
-    assert card == want
-    assert n_imp is not None and n_imp >= 1  # pred over-merges vs gold
-
-
 def test_threshold_curve_hand_computed(spark):
     from entity_linking_in_biomedical_spark.operators.evaluation import (
         threshold_curve,

@@ -54,13 +54,13 @@ def test_iceberg_commit_resume_roundtrip(spark, tmp_path):
     if cat is None:
         pytest.skip("no 'local' iceberg catalog configured on this session")
     store = make_stage_store(spark, "iceberg://local.el_stages")
-    sig = stage_signature("s1", {"k": 1}, [], [123])
+    sig = stage_signature("s1", {"k": 1}, [])
     df = spark.range(10).withColumnRenamed("id", "x")
     assert not store.committed("s1", sig)
     out = store.commit("s1", sig, df)
     assert out.count() == 10
     assert store.committed("s1", sig)
     # changed signature -> not committed -> recompute path
-    sig2 = stage_signature("s1", {"k": 2}, [], [123])
+    sig2 = stage_signature("s1", {"k": 2}, [])
     assert not store.committed("s1", sig2)
     assert store.load("s1").count() == 10

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.operators.incremental_dedup import (
     build_dedup_index,
-    dedup_against_index,
     flag_against_index,
 )
 
@@ -83,14 +82,6 @@ def test_exact_wins_over_near(spark, corpus_index):
     assert len(rows) == 1 and rows[0]["kind"] == "exact"
 
 
-def test_dedup_against_index_survivors(spark, corpus_index):
-    clean = dedup_against_index(
-        _batch(spark), corpus_index, est_jaccard_threshold=0.5
-    )
-    assert {r["doc_id"] for r in clean.collect()} == {"b3", "c2"}
-    assert clean.columns == ["doc_id", "text"]
-
-
 def test_partition_invariance(spark, corpus_index):
     a = flag_against_index(_batch(spark), corpus_index, est_jaccard_threshold=0.5)
     b = flag_against_index(
@@ -136,39 +127,3 @@ def test_plan_jvm_only_no_cartesian(spark, corpus_index):
     # index join is broadcast-built from the batch side (batch hints +
     # broadcast semi-join prunes of the index)
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-
-
-def test_flag_foreach_batch_matches_batch(spark, corpus_index, tmp_path):
-    """Streaming snapshot arrival: the foreachBatch wrapper agrees
-    exactly with the batch operator over all micro-batches."""
-    from entity_linking_in_biomedical_spark.operators.incremental_dedup import (
-        flag_foreach_batch,
-    )
-
-    batch = _batch(spark)
-    want = {
-        tuple(r)
-        for r in flag_against_index(
-            batch, corpus_index, est_jaccard_threshold=0.5
-        ).collect()
-    }
-    assert want
-
-    src = str(tmp_path / "inc_src")
-    batch.write.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    got = set()
-
-    def sink(df, batch_id):
-        got.update(tuple(r) for r in df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(
-            flag_foreach_batch(corpus_index, sink, est_jaccard_threshold=0.5)
-        )
-        .option("checkpointLocation", str(tmp_path / "inc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert got == want

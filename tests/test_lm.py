@@ -119,45 +119,6 @@ def test_lm_vocab_cap_binds_deterministically(spark):
     assert lm.vsize.collect()[0]["v_size"] == 4  # 3 vocab types + <unk>
 
 
-def test_lm_score_foreach_batch_matches_batch(spark, tmp_path):
-    """Streaming scoring agrees exactly with the batch operator over
-    all micro-batches of a real parquet-source streaming query."""
-    from entity_linking_in_biomedical_spark.operators.lm import (
-        lm_score_foreach_batch,
-    )
-
-    train = spark.createDataFrame(DOCS[:4], "doc_id int, text string")
-    lm = fit_bigram_lm(train, vocab_cap=5, alpha=0.5)
-    held = spark.createDataFrame(
-        [(10, "the cat sat on the mat"), (11, "mat log quokka dog zzz the"), (12, "x")],
-        "doc_id int, text string",
-    )
-    want = {
-        r["doc_id"]: (r["n_bigrams"], r["oov_ratio"], r["avg_nll"])
-        for r in score_bigram_nll(held, lm).collect()
-    }
-    assert set(want) == {10, 11}  # 1-token doc drops out
-
-    src = str(tmp_path / "lm_src")
-    held.write.parquet(src)
-    stream = spark.readStream.schema(held.schema).parquet(src)
-
-    got = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            got[r["doc_id"]] = (r["n_bigrams"], r["oov_ratio"], r["avg_nll"])
-
-    q = (
-        stream.writeStream.foreachBatch(lm_score_foreach_batch(lm, sink))
-        .option("checkpointLocation", str(tmp_path / "lm_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert got == want
-
-
 def test_lm_save_load_roundtrip(spark, tmp_path):
     """The durable model artifact: save -> load -> identical scores
     (the failure-tolerant path for long-lived streams/clusters, vs the

@@ -247,43 +247,38 @@ def test_stable_ids_disjoint_snapshots_all_fresh(spark):
     assert all(r["is_fresh"] for r in rows)
 
 
-def test_stable_ids_foreach_batch_state_evolves(spark):
-    """Two snapshot batches through the streaming face: batch 1's
-    inherited ids become batch 2's old assignment, so an id minted in
-    batch 1 survives a second re-clustering."""
+def test_stable_ids_state_evolves(spark):
+    """Two snapshots stitched one after the other: snapshot 1's
+    inherited ids become snapshot 2's old assignment, so an id minted
+    in snapshot 1 survives a second re-clustering."""
+    from pyspark.sql import functions as F
+
     from entity_linking_in_biomedical_spark.operators.matching import (
-        stable_ids_foreach_batch,
+        stable_cluster_ids,
     )
 
-    state = {"df": _assign(spark, [("1", "A"), ("2", "A"), ("3", "B")]).localCheckpoint()}
+    def stitch(old, new):
+        return (
+            stable_cluster_ids(old, new)
+            .select("doc_id", F.col("stable_id").alias("cluster_id"))
+            .localCheckpoint()
+        )
 
-    def load():
-        return state["df"]
-
-    def save(df, batch_id):
-        state["df"] = df.localCheckpoint()
-
-    fn = stable_ids_foreach_batch(load, save)
+    state = _assign(spark, [("1", "A"), ("2", "A"), ("3", "B")]).localCheckpoint()
     # snapshot 1: A renamed, B grows, brand-new cluster c
-    fn(
-        _assign(
-            spark,
-            [("1", "k"), ("2", "k"), ("3", "m"), ("4", "m"), ("5", "c")],
-        ),
-        0,
+    state = stitch(
+        state,
+        _assign(spark, [("1", "k"), ("2", "k"), ("3", "m"), ("4", "m"), ("5", "c")]),
     )
-    got1 = {r["doc_id"]: r["cluster_id"] for r in state["df"].collect()}
+    got1 = {r["doc_id"]: r["cluster_id"] for r in state.collect()}
     assert got1["1"] == "A" and got1["3"] == "B" and got1["5"] == "new:c"
-    # snapshot 2: everything renamed again — ids minted in batch 1
+    # snapshot 2: everything renamed again — ids minted in snapshot 1
     # (incl. the fresh one) persist
-    fn(
-        _assign(
-            spark,
-            [("1", "z1"), ("2", "z1"), ("3", "z2"), ("4", "z2"), ("5", "z3")],
-        ),
-        1,
+    state = stitch(
+        state,
+        _assign(spark, [("1", "z1"), ("2", "z1"), ("3", "z2"), ("4", "z2"), ("5", "z3")]),
     )
-    got2 = {r["doc_id"]: r["cluster_id"] for r in state["df"].collect()}
+    got2 = {r["doc_id"]: r["cluster_id"] for r in state.collect()}
     assert got2["1"] == "A" and got2["3"] == "B" and got2["5"] == "new:c"
 
 

@@ -1,8 +1,13 @@
-"""Overlap-dedup sweep (W7) + mention extraction + abbreviation join (J4)."""
+"""Overlap-dedup sweep (W7) + mention extraction + abbreviation join (J4)
++ span stats (A5)."""
 
 from __future__ import annotations
 
-from entity_linking_in_biomedical_spark.operators.mentions import _sweep, extract_mentions
+from entity_linking_in_biomedical_spark.operators.mentions import (
+    _sweep,
+    extract_mentions,
+    mention_stats,
+)
 
 
 def span(kind, text, offset, media=None):
@@ -86,3 +91,22 @@ class TestExtract:
         )
         got = extract_mentions(docs).collect()
         assert [r["span_seq"] for r in got] == [0]
+
+
+def test_mention_stats(spark):
+    docs = spark.createDataFrame(
+        [
+            (
+                "D1",
+                [
+                    ("text", "BRCA1 mutations cause cancer", None, 0),
+                    ("mention", "BRCA1", None, 0),
+                    ("mention", "cancer", None, 22),
+                    ("media", "", "img://D1/3", 29),
+                ],
+            )
+        ],
+        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    r = mention_stats(docs).collect()[0]
+    assert (r["n_mentions"], r["n_media"], r["n_text"], r["n_spans"]) == (2, 1, 1, 4)

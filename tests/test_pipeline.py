@@ -125,3 +125,32 @@ def test_fit_idf_cap_keeps_most_frequent_grams(spark, corpus):
     got = fit_idf(names, ngram=3, vocab_cap=50)
     assert got == fit_idf_py(norms, 3, 50)
     assert len(got) == 50
+
+
+def test_scoring_ngram_sizes_idf_fit_and_cosine(spark, corpus):
+    """One gram size, ``ScoringConfig.ngram``, drives both the IDF fit
+    and the cosine lookup: under ngram=2 the fitted vocabulary holds
+    only grams of <= 2 chars, and the cos feature and the mention-mention
+    scores equal the oracle's 2-gram ones (a 3-gram fit would make every
+    2-gram lookup fall back to idf 1.0)."""
+    from entity_linking_in_biomedical_spark.functions.strings import tfidf_cosine
+    from entity_linking_in_biomedical_spark.operators.blocking import entity_names
+    from entity_linking_in_biomedical_spark.operators.scoring import ScoringConfig, score_pairs
+    from tests.oracle_impl import score
+
+    docs, ents, _, abbr, _ = corpus.to_spark(spark)
+    cfg = PipelineConfig(scoring=ScoringConfig(ngram=2))
+    res = run_pipeline(spark, docs, ents, abbr_map=abbr, cfg=cfg)
+    idf = res["idf"]
+    assert idf and max(map(len, idf)) <= 2
+    norms = [r["norm"] for r in entity_names(ents).collect()]
+    want_idf = fit_idf_py(norms, 2, cfg.scoring.vocab_cap)
+    assert idf == pytest.approx(want_idf)
+
+    mm = res["mm_scores"].select("a_norm", "b_norm", F.col("score").alias("mm_score"))
+    rows = score_pairs(spark, mm, idf, cfg.scoring).collect()
+    assert rows
+    for r in rows:
+        a, b = r["a_norm"], r["b_norm"]
+        assert r["cos"] == pytest.approx(tfidf_cosine(a, b, want_idf, n=2), abs=1e-9)
+        assert r["mm_score"] == pytest.approx(score(a, b, want_idf, {}, cfg.scoring), abs=1e-9)

@@ -356,11 +356,10 @@ def test_dsir_weights_partition_invariant(spark):
     assert a == b
 
 
-def test_dsir_fit_score_reproduces_weights_and_streams(spark, tmp_path):
+def test_dsir_fit_score_reproduces_weights(spark):
     from entity_linking_in_biomedical_spark.operators.sampling import (
         dsir_fit,
         dsir_score,
-        dsir_score_foreach_batch,
         dsir_weights,
     )
 
@@ -377,25 +376,6 @@ def test_dsir_fit_score_reproduces_weights_and_streams(spark, tmp_path):
     want = sorted(map(tuple, dsir_weights(df, "is_tgt").collect()))
     got = sorted(map(tuple, dsir_score(pool, model).collect()))
     assert got == want
-
-    # streaming micro-batches agree exactly with the batch scorer
-    src = str(tmp_path / "dsir_src")
-    pool.write.parquet(src)
-    stream = spark.readStream.schema(pool.schema).parquet(src)
-    streamed = {}
-
-    def sink(scored, batch_id):
-        for r in scored.collect():
-            streamed[r["doc_id"]] = (r["n_grams"], r["weight"])
-
-    q = (
-        stream.writeStream.foreachBatch(dsir_score_foreach_batch(model, sink))
-        .option("checkpointLocation", str(tmp_path / "dsir_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert streamed == {d: (n, w) for d, n, w in want}
 
 
 def test_near_dup_clusters_keep_best_quality(spark):

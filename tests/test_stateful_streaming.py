@@ -1,166 +1,8 @@
-"""Stateful streaming dedup: keyed state across micro-batches AND
-across query restarts (checkpoint-restored state)."""
+"""Streaming decontamination: the stateless stream-static forms
+(``stream_contamination``, ``scrub_stream``) agree with their batch
+operators, and their broadcast budget fails at construction time."""
 
 from __future__ import annotations
-
-import pandas as pd
-
-from entity_linking_in_biomedical_spark.streaming.stateful import (
-    streaming_exact_dedup,
-)
-
-SCHEMA = "doc_id bigint, text string"
-
-
-def _run_batch(spark, src_dir, ckpt, out_dir):
-    stream = spark.readStream.schema(SCHEMA).parquet(src_dir)
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(out_dir).toPandas()
-
-
-def test_streaming_dedup_state_survives_restart(spark, tmp_path):
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-
-    # micro-batch 1: two distinct texts, one in-batch duplicate
-    b1 = spark.createDataFrame(
-        [(1, "alpha text"), (2, "beta text"), (3, "alpha text")], SCHEMA
-    )
-    b1.write.mode("append").parquet(src)
-    out1 = _run_batch(spark, src, ckpt, str(tmp_path / "out"))
-    got1 = {r.doc_id: r.is_duplicate for r in out1.itertuples()}
-    assert got1 == {"1": False, "2": False, "3": True}
-
-    # micro-batch 2 in a NEW query (restart): duplicates of batch-1 docs
-    # must be flagged — only possible if state was restored from the
-    # checkpoint, not recomputed from this batch
-    b2 = spark.createDataFrame(
-        [(4, "alpha text"), (5, "gamma text"), (6, "beta text")], SCHEMA
-    )
-    b2.write.mode("append").parquet(src)
-    out2 = _run_batch(spark, src, ckpt, str(tmp_path / "out"))
-    new = out2[out2.doc_id.isin({"4", "5", "6"})]
-    got2 = {r.doc_id: r.is_duplicate for r in new.itertuples()}
-    assert got2 == {"4": True, "5": False, "6": True}
-
-
-def test_streaming_dedup_output_schema(spark, tmp_path):
-    src = str(tmp_path / "one")
-    spark.createDataFrame([(7, "solo")], SCHEMA).write.parquet(src)
-    out = _run_batch(spark, src, str(tmp_path / "c2"), str(tmp_path / "out2"))
-    assert list(out.columns) == ["text_hash", "doc_id", "is_duplicate"]
-    assert len(out) == 1 and not out.is_duplicate.iloc[0]
-    assert isinstance(out.text_hash.iloc[0], str) and len(out.text_hash.iloc[0]) == 32
-    assert pd.api.types.is_bool_dtype(out.is_duplicate)
-
-
-# ---------------------------------------------------------------------------
-# Streaming minhash near-dup: banded keyed state across restarts
-# ---------------------------------------------------------------------------
-
-LONG_A = (
-    "the quick brown fox jumps over the lazy dog while seventeen "
-    "researchers annotate biomedical mentions across interleaved spans "
-    "of text and media documents at considerable scale"
-)
-LONG_A_EDIT = LONG_A.replace("seventeen", "eighteen")  # near-dup of A
-UNRELATED = (
-    "completely different content about parquet partition pruning and "
-    "adaptive query execution inside the catalyst optimizer stack with "
-    "no shingles shared with anything else in this corpus at all"
-)
-
-
-def _run_minhash_batch(spark, src_dir, ckpt, out_dir):
-    from entity_linking_in_biomedical_spark.streaming.stateful import (
-        streaming_minhash_dedup,
-    )
-
-    stream = spark.readStream.schema(SCHEMA).parquet(src_dir)
-    q = (
-        streaming_minhash_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(out_dir)
-
-
-def _batch_band_keys(spark, rows):
-    """Oracle: the BATCH banding machinery over the same texts — the
-    online candidate set must agree with the offline one."""
-    from entity_linking_in_biomedical_spark.functions.ngrams import with_band_keys
-    from entity_linking_in_biomedical_spark.functions.text_metrics import tokens
-    from entity_linking_in_biomedical_spark.operators.dedup import _word_shingles
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(rows, SCHEMA).select(
-        F.col("doc_id").cast("string").alias("doc_id"), tokens("text").alias("toks")
-    )
-    sh = df.select(
-        "doc_id", F.array_distinct(_word_shingles(F.col("toks"), 3)).alias("shingles")
-    )
-    out = {}
-    for r in with_band_keys(sh, F.col("shingles"), 16, 8).select("doc_id", "bk").collect():
-        out.setdefault(r.doc_id, set()).add(r.bk)
-    return out
-
-
-def test_streaming_minhash_dedup_state_survives_restart(spark, tmp_path):
-    from entity_linking_in_biomedical_spark.streaming.stateful import (
-        minhash_doc_flags,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    b1 = [(1, LONG_A), (2, UNRELATED), (3, LONG_A_EDIT)]
-    b2 = [(4, LONG_A), (5, UNRELATED + " with a tail edit")]
-    keys = _batch_band_keys(spark, b1 + b2)
-    # sanity on the fixture: the edit still collides on >=1 band; the
-    # unrelated doc collides on none
-    assert keys["1"] & keys["3"]
-    assert not (keys["2"] & (keys["1"] | keys["3"]))
-
-    spark.createDataFrame(b1, SCHEMA).write.mode("append").parquet(src)
-    flags1 = {
-        r.doc_id: (r.is_duplicate, list(r.matched_ids))
-        for r in minhash_doc_flags(_run_minhash_batch(spark, src, ckpt, out)).collect()
-    }
-    assert flags1["1"] == (False, [])
-    assert flags1["2"] == (False, [])
-    assert flags1["3"] == (True, ["1"])
-
-    # restart (new query, same checkpoint): the exact copy of doc 1 must
-    # collide on EVERY band with matched_id "1" — only possible if band
-    # state was restored; doc 5's perturbed unrelated text must match
-    # doc 2 iff the batch machinery says their bands collide
-    spark.createDataFrame(b2, SCHEMA).write.mode("append").parquet(src)
-    rows2 = _run_minhash_batch(spark, src, ckpt, out)
-    new = rows2.filter(rows2.doc_id.isin("4", "5"))
-    flags2 = {
-        r.doc_id: (r.is_duplicate, list(r.matched_ids))
-        for r in minhash_doc_flags(new).collect()
-    }
-    assert flags2["4"] == (True, ["1"])
-    n4 = new.filter("doc_id = '4' and is_duplicate").count()
-    assert n4 == 8  # all 8 bands of an exact copy collide
-    expect5 = bool(keys["5"] & keys["2"])
-    assert flags2["5"][0] == expect5
 
 
 def test_stream_contamination_matches_batch(spark, tmp_path):
@@ -213,7 +55,7 @@ def test_stream_contamination_matches_batch(spark, tmp_path):
 def test_stream_contamination_broadcast_guard(spark, tmp_path):
     """A test side whose distinct-gram total exceeds the broadcast
     budget must raise at stream-construction time (not OOM mid-stream),
-    and the error must name the foreachBatch fallback."""
+    and the error must name the batch operator to run per micro-batch."""
     import pytest
 
     from entity_linking_in_biomedical_spark.operators.contamination import (
@@ -231,61 +73,11 @@ def test_stream_contamination_broadcast_guard(spark, tmp_path):
     stream = spark.readStream.schema("doc_id string, text string").parquet(src)
 
     # 40 tokens, n=8 -> 33 distinct grams; budget of 10 trips the guard
-    with pytest.raises(ValueError, match="contamination_foreach_batch"):
+    with pytest.raises(ValueError, match="ngram_contamination"):
         stream_contamination(stream, test, n=8, max_broadcast_grams=10)
 
     # same budget, guard disabled: construction succeeds
     stream_contamination(stream, test, n=8, max_broadcast_grams=None)
-
-
-def test_contamination_foreach_batch_matches_batch(spark, tmp_path):
-    """The foreachBatch fallback (shuffling batch operator per
-    micro-batch, no broadcast) agrees exactly with the batch operator
-    over all micro-batches of a real streaming query."""
-    from entity_linking_in_biomedical_spark.operators.contamination import (
-        contamination_foreach_batch,
-        ngram_contamination,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus_rows = [
-        ("c1", f"intro words {base} trailing text one"),
-        ("c2", "totally different content with no shared grams at all here"),
-        ("c3", f"{base} {base}"),
-    ]
-    test_rows = [
-        ("eval1", base),
-        ("eval2", "nothing matches this evaluation document words"),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id string, text string")
-    test = spark.createDataFrame(test_rows, "test_id string, text string")
-
-    want = {
-        (r["doc_id"], r["test_id"]): (r["n_overlap"], r["contamination"])
-        for r in ngram_contamination(corpus, test, n=8).collect()
-    }
-    assert want
-
-    src = str(tmp_path / "fb_src")
-    corpus.write.parquet(src)
-    stream = spark.readStream.schema(corpus.schema).parquet(src)
-
-    got = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            got[(r["doc_id"], r["test_id"])] = (r["n_overlap"], r["contamination"])
-
-    q = (
-        stream.writeStream.foreachBatch(
-            contamination_foreach_batch(test, sink, n=8)
-        )
-        .option("checkpointLocation", str(tmp_path / "fb_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert got == want
 
 
 def test_scrub_stream_matches_batch(spark, tmp_path):
@@ -363,55 +155,8 @@ def test_scrub_stream_broadcast_guard(spark, tmp_path):
     ).write.parquet(src)
     stream = spark.readStream.schema("doc_id string, text string").parquet(src)
 
-    # the guard must name the SCRUB family's fallback, not the
+    # the guard must name the SCRUB family's batch operator, not the
     # detection family's (different output contract)
-    with pytest.raises(ValueError, match="scrub_foreach_batch"):
+    with pytest.raises(ValueError, match="scrub_contamination"):
         scrub_stream(stream, test, n=8, max_broadcast_grams=10)
     scrub_stream(stream, test, n=8, max_broadcast_grams=None)
-
-
-def test_scrub_foreach_batch_matches_batch(spark, tmp_path):
-    """The scrub foreachBatch fallback (shuffling batch scrub per
-    micro-batch, no broadcast) agrees exactly with the batch scrub over
-    all micro-batches of a real streaming query."""
-    from entity_linking_in_biomedical_spark.operators.contamination import (
-        scrub_contamination,
-        scrub_foreach_batch,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus_rows = [
-        ("c1", f"intro words {base} trailing text one"),
-        ("c2", "totally different content with no shared grams at all here"),
-        ("c3", base),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id string, text string")
-    test = spark.createDataFrame([("eval1", base)], "test_id string, text string")
-
-    want = {
-        r["doc_id"]: (r["n_tokens"], r["n_removed"], r["n_pieces"], r["cleaned_text"])
-        for r in scrub_contamination(corpus, test, n=8, margin=1).collect()
-    }
-    assert any(v[1] > 0 for v in want.values())
-
-    src = str(tmp_path / "scrub_fb_src")
-    corpus.write.parquet(src)
-    stream = spark.readStream.schema(corpus.schema).parquet(src)
-    got = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            got[r["doc_id"]] = (
-                r["n_tokens"], r["n_removed"], r["n_pieces"], r["cleaned_text"]
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(
-            scrub_foreach_batch(test, sink, n=8, margin=1)
-        )
-        .option("checkpointLocation", str(tmp_path / "scrub_fb_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert got == want

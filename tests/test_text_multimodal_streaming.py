@@ -23,7 +23,6 @@ from entity_linking_in_biomedical_spark.operators.multimodal import (
     extract_media_features,
     fake_decoder,
     sample_frames,
-    unsupported_decoder,
 )
 
 
@@ -261,11 +260,6 @@ def test_media_features_plumbing(spark, corpus):
     # determinism: decode derives only from the ref
     again = {(x["doc_id"], x["span_seq"]): x["feature"] for x in feats.collect()}
     assert again[(r["doc_id"], r["span_seq"])] == r["feature"]
-
-
-def test_unsupported_decoder_raises():
-    with pytest.raises(NotImplementedError):
-        unsupported_decoder("img://x", None)
 
 
 def test_sample_frames(spark, corpus):
@@ -641,46 +635,6 @@ def test_dedup_media_batch_matches_corpus_operator(spark, corpus):
     assert key(dedup_media_batch(docs, empty).collect()) == key(
         drop_duplicate_media(docs).collect()
     )
-
-
-def test_media_dedup_foreach_batch_matches_batch(spark, tmp_path):
-    from entity_linking_in_biomedical_spark.operators.multimodal import (
-        build_media_index,
-        dedup_media_batch,
-        media_dedup_foreach_batch,
-    )
-
-    index = build_media_index(
-        spark.createDataFrame([("c", [_mspan("img://old")])], _SPAN_SCHEMA)
-    )
-    batch = spark.createDataFrame(
-        [
-            ("s1", [_mspan("img://old"), _mspan("img://x"), _tspan()]),
-            ("s2", [_mspan("img://y"), _tspan("more")]),
-        ],
-        _SPAN_SCHEMA,
-    )
-    want = sorted(
-        (r["doc_id"], tuple(map(tuple, r["spans"])))
-        for r in dedup_media_batch(batch, index).collect()
-    )
-
-    src = str(tmp_path / "media_src")
-    batch.write.parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    got = []
-
-    def sink(df, batch_id):
-        got.extend((r["doc_id"], tuple(map(tuple, r["spans"]))) for r in df.collect())
-
-    q = (
-        stream.writeStream.foreachBatch(media_dedup_foreach_batch(index, sink))
-        .option("checkpointLocation", str(tmp_path / "media_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(got) == want
 
 
 def test_scrub_null_edges(spark):
