@@ -801,7 +801,7 @@ c as (
            rows between unbounded preceding and 1 preceding), 0) as cb
   from d
 )
-select doc_id, sz, cb // 50000 as shard_id from c order by doc_id
+select doc_id, sz, cast(cb // 50000 as bigint) as shard_id from c order by doc_id
 """
 
 

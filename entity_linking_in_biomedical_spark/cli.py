@@ -13,14 +13,15 @@ script is the thin ``run_el.py`` at the repo root)::
     zip -r elspark.zip entity_linking_in_biomedical_spark
     spark-submit --py-files elspark.zip run_el.py run \
         --documents hdfs://.../docs.parquet --entities hdfs://.../ents.parquet \
-        --out hdfs://.../er_out --stage-dir hdfs://.../er_stages
+        --out hdfs://.../er_out --stage-dir /shared/er_stages
 
 Under spark-submit no ``--master`` flag is passed: the session is
 adopted from the submit-time conf (``getOrCreate``) and only
 engine-required settings (AQE, Arrow) are layered on. ``--stage-dir``
 makes every stage commit a snapshot + manifest so a killed run resumes
-from its last committed stage (plain path → Parquet+manifest bucketed
-store; ``iceberg://catalog.namespace`` → Iceberg tables).
+from its last committed stage. The stage dir is a filesystem path
+visible to the driver and every executor (a shared mount on a cluster);
+a ``scheme://`` URI is rejected.
 """
 
 from __future__ import annotations
@@ -385,7 +386,7 @@ def build_parser() -> argparse.ArgumentParser:
     run.add_argument("--embeddings", help="parquet: (norm, embedding) dense lookup")
     run.add_argument("--abbr", help="parquet: abbreviation map")
     run.add_argument("--out", required=True, help="output parquet for linked_documents")
-    run.add_argument("--stage-dir", help="stage store for resumable commits (path or iceberg://...)")
+    run.add_argument("--stage-dir", help="stage store for resumable commits: a filesystem path visible to the driver and every executor")
     run.add_argument("--master", help="Spark master (omit under spark-submit)")
     run.set_defaults(fn=_cmd_run)
 

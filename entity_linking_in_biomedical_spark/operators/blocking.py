@@ -4,28 +4,32 @@ The reference brute-forces dense cosine between every mention TF-IDF
 vector and every entity-name vector in 128-row batches, keeps top-128
 per mention, and unions a char-gram pass with a word pass
 (candidate_generator.py:89-127). That is O(|M|·|E|) — impossible at
-10^12 docs. This module replaces it with three sub-quadratic channels,
-all expressed as ONE explode + equi-join on a unified key array:
+10^12 docs. This module replaces it with four sub-quadratic channels,
+all expressed as ONE explode + equi-join on a unified key array whose
+shape is fixed by the module constants below (one key set for every
+caller: batch run, snapshot surface index, oracle twin):
 
   exact "x|<norm>"       the normalized surface itself — the
                          high-precision channel (norm_key equality).
   del   "d|<variant>"    SymSpell-style deletion neighborhood: every
                          delete-one-char variant, for strings up to
-                         ``del_max_len``. Joining both sides' variants
+                         ``DEL_MAX_LEN``. Joining both sides' variants
                          GUARANTEES recall for Levenshtein-1 edits (and
                          most lev-2) on short strings — the regime where
                          n-gram similarity collapses (a 1-char typo in a
                          4-char acronym shares almost no 2/3-grams).
                          Cost is O(len) keys per string, each a
                          near-unique long key -> tiny buckets.
-  lsh   md5 band keys    char-2/3-gram MinHash banded LSH for strings
-                         >= ``lsh_min_len`` — the reference's char-gram
+  lsh   "l<j>|<minhash>" char-2/3-gram MinHash banded LSH for strings
+                         >= ``LSH_MIN_LEN`` — the reference's char-gram
                          TF-IDF recall analogue for longer surfaces.
                          NOTE: 1-grams deliberately NOT in the gram set:
                          a min-hash over 1-grams is dominated by
                          whichever common letter hashes lowest, which
                          creates corpus-sized mega-buckets (measured:
                          8x slowdown + hot-cap recall loss).
+  word  "w|", "w<k>|"    sorted-token and token-minhash keys for
+                         reordered multi-word surfaces (word_keys).
 
 Scale levers (all measured, SURVEY.md §4):
 - blocking runs over **distinct normalized surfaces**, not mention
@@ -63,7 +67,19 @@ def entity_names(entities: DataFrame) -> DataFrame:
     )
 
 
-def deletion_keys(col: Column, max_len: int = 12, del2_max_len: int = 7) -> Column:
+# The one blocking key set (each value is a measured choice, not a knob).
+# LSH gram sizes: no 1-grams, a min-hash over 1-grams is dominated by
+# common letters -> mega-buckets
+GRAM_SIZES = (2, 3)
+NUM_HASHES = 12  # char-gram minhashes per surface
+BANDS = 12  # one 1-row band per minhash: collision prob per band = Jaccard
+DEL_MAX_LEN = 12  # deletion-neighborhood channel bound
+DEL2_MAX_LEN = 7  # delete-2 depth for very short strings
+LSH_MIN_LEN = 5  # skip LSH for very short strings (deletion covers)
+WORD_NUM_HASHES = 4  # word-token minhash channel
+
+
+def deletion_keys(col: Column) -> Column:
     """'d|'-prefixed delete-one-char variants, plus delete-two variants
     for very short strings (SymSpell: both sides generating delete-<=k
     neighborhoods guarantees a shared key for any pair within edit
@@ -82,15 +98,15 @@ def deletion_keys(col: Column, max_len: int = 12, del2_max_len: int = 7) -> Colu
     # delete-0 (the string itself) must be IN the d-namespace: an
     # insertion/deletion edit pair (s, s+char) shares a key only if s
     # appears as a d-key on both sides (classic SymSpell)
-    d0 = F.when(F.length(col) <= max_len, F.array(col)).otherwise(
+    d0 = F.when(F.length(col) <= DEL_MAX_LEN, F.array(col)).otherwise(
         F.array().cast("array<string>")
     )
-    d1 = F.when(F.length(col) <= max_len, del1(col)).otherwise(
+    d1 = F.when(F.length(col) <= DEL_MAX_LEN, del1(col)).otherwise(
         F.array().cast("array<string>")
     )
     # delete-2 = delete-1 of every delete-1 variant (flattened)
     d2 = F.when(
-        F.length(col).between(2, del2_max_len), F.flatten(F.transform(del1(col), del1))
+        F.length(col).between(2, DEL2_MAX_LEN), F.flatten(F.transform(del1(col), del1))
     ).otherwise(F.array().cast("array<string>"))
     # variants under 3 chars match half the dictionary (e.g. "a4") —
     # pure fan-out with no discrimination; drop them (measured: they
@@ -99,7 +115,7 @@ def deletion_keys(col: Column, max_len: int = 12, del2_max_len: int = 7) -> Colu
     return F.transform(usable, lambda v: F.concat(F.lit("d|"), v))
 
 
-def word_keys(col: Column, word_num_hashes: int = 4) -> Column:
+def word_keys(col: Column) -> Column:
     """Word-token channel (the reference's word-unigram TF-IDF pass,
     candidate_generator.py:38-44,114-125): multi-word surfaces whose
     tokens reorder ("x kinase inhibitor" vs "inhibitor kinase x") share
@@ -118,9 +134,7 @@ def word_keys(col: Column, word_num_hashes: int = 4) -> Column:
         F.size(toks) >= 2,
         F.array(F.concat(F.lit("w|"), F.concat_ws(" ", F.array_sort(toks)))),
     ).otherwise(empty)
-    if word_num_hashes <= 0:
-        return sorted_key
-    sig = minhash_signature(toks, word_num_hashes)
+    sig = minhash_signature(toks, WORD_NUM_HASHES)
     mh = F.when(
         F.size(toks) >= 3,
         F.transform(
@@ -136,111 +150,45 @@ def word_keys(col: Column, word_num_hashes: int = 4) -> Column:
 # keying frame per job before this cache. Unresolved Column expressions
 # are immutable and DataFrame-independent, so one built tree serves
 # every caller that passes the same input expression (keyed by its
-# canonical repr) and parameters.
+# canonical repr); the package keys one column, ``norm``.
 _KEYS_MEMO: dict = {}
 
 
-def blocking_keys(
-    col: Column,
-    ns: tuple[int, ...] = (2, 3),
-    num_hashes: int = 12,
-    bands: int = 12,
-    del_max_len: int = 12,
-    lsh_min_len: int = 5,
-    del2_max_len: int = 7,
-    word_num_hashes: int = 4,
-    phonetic: bool = False,
-) -> Column:
-    memo_key = (
-        repr(col), tuple(ns), num_hashes, bands, del_max_len, lsh_min_len,
-        del2_max_len, word_num_hashes, phonetic,
-    )
-    built = _KEYS_MEMO.get(memo_key)
-    if built is None:
-        built = _build_blocking_keys(
-            col, ns, num_hashes, bands, del_max_len, lsh_min_len,
-            del2_max_len, word_num_hashes, phonetic,
-        )
-        _KEYS_MEMO[memo_key] = built
-    return built
+def blocking_keys(col: Column) -> Column:
+    key = repr(col)
+    if key not in _KEYS_MEMO:
+        _KEYS_MEMO[key] = _build_blocking_keys(col)
+    return _KEYS_MEMO[key]
 
 
-def _build_blocking_keys(
-    col: Column,
-    ns: tuple[int, ...],
-    num_hashes: int,
-    bands: int,
-    del_max_len: int,
-    lsh_min_len: int,
-    del2_max_len: int,
-    word_num_hashes: int,
-    phonetic: bool,
-) -> Column:
+def _build_blocking_keys(col: Column) -> Column:
     """Unified blocking key array: exact + deletion-neighborhood + char
-    LSH bands + word-token channel, plus an OPT-IN phonetic channel
-    ('p|' + per-token Soundex, functions/phonetic.py — Christen ch.4:
-    blocks spelling variants like Robert/Rupert that share few char
-    n-grams; off by default so the default key set and its skew bound
-    stay byte-stable). Key namespaces cannot collide
-    ('x|'/'d|'/'w|'/'w<k>|'/'p|' prefixes vs 'l<j>|'-prefixed or
-    32-char md5 band keys)."""
+    LSH bands + word-token channel. Key namespaces cannot collide
+    ('x|'/'d|'/'w|'/'w<k>|'/'l<j>|' prefixes)."""
     exact = F.array(F.concat(F.lit("x|"), col))
-    dels = deletion_keys(col, del_max_len, del2_max_len)
+    dels = deletion_keys(col)
     lsh = F.when(
-        F.length(col) >= lsh_min_len,
+        F.length(col) >= LSH_MIN_LEN,
         lsh_band_keys(
-            minhash_signature(char_ngrams_multi(col, ns), num_hashes),
-            bands,
-            num_hashes // bands,
+            minhash_signature(char_ngrams_multi(col, GRAM_SIZES), NUM_HASHES),
+            BANDS,
+            NUM_HASHES // BANDS,
         ),
     ).otherwise(F.array().cast("array<string>"))
-    words = word_keys(col, word_num_hashes)
-    keys = F.concat(exact, dels, lsh, words)
-    if phonetic:
-        from ..functions.phonetic import soundex
-
-        # one key per token (multi-word surfaces block on any variant
-        # token), capped at PHONETIC_MAX_TOKENS — the cap is what makes
-        # blocking_skew_bound's phonetic term a true bound, since the
-        # normalizer does not limit token counts; '' codes (no letters)
-        # are dropped by the filter
-        ph = F.filter(
-            F.transform(
-                F.slice(F.split(col, " "), 1, PHONETIC_MAX_TOKENS),
-                lambda t: F.concat(F.lit("p|"), soundex(t)),
-            ),
-            lambda k: k != "p|",
-        )
-        keys = F.concat(keys, ph)
-    return F.array_distinct(keys)
-
-
-# per-surface cap on phonetic keys; shared with blocking_skew_bound so
-# the closed-form bound and the key generator cannot drift
-PHONETIC_MAX_TOKENS = 8
+    words = word_keys(col)
+    return F.array_distinct(F.concat(exact, dels, lsh, words))
 
 
 def channel_of(bk: Column) -> Column:
     return (
         F.when(bk.startswith("x|"), F.lit("exact"))
         .when(bk.startswith("d|"), F.lit("del"))
-        .when(bk.startswith("p|"), F.lit("phonetic"))
         .when(bk.startswith("w"), F.lit("word"))
         .otherwise(F.lit("lsh"))
     )
 
 
-def _with_keys(
-    df: DataFrame,
-    ns: tuple[int, ...],
-    num_hashes: int,
-    bands: int,
-    del_max_len: int,
-    lsh_min_len: int,
-    del2_max_len: int,
-    word_num_hashes: int,
-    phonetic: bool,
-) -> DataFrame:
+def _with_keys(df: DataFrame) -> DataFrame:
     """``df`` with one row per blocking key ``bk`` of its ``norm``,
     materialized once (lazy localCheckpoint): the key expression (12
     md5 minhashes over multigrams) is the most expensive projection of
@@ -253,53 +201,24 @@ def _with_keys(
     # frame (far smaller than the exploded key frame the next join
     # shuffles anyway) buys a fully-wide keying stage at every scale.
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return pin(df.withColumn(
-        "bk",
-        F.explode(
-            blocking_keys(
-                F.col("norm"), ns, num_hashes, bands, del_max_len, lsh_min_len,
-                del2_max_len, word_num_hashes, phonetic,
-            )
-        ),
-    ))
+    return pin(df.withColumn("bk", F.explode(blocking_keys(F.col("norm")))))
 
 
-def surface_blocking_keys(
-    mentions: DataFrame,
-    ns: tuple[int, ...] = (2, 3),
-    num_hashes: int = 12,
-    bands: int = 12,
-    del_max_len: int = 12,
-    lsh_min_len: int = 5,
-    del2_max_len: int = 7,
-    word_num_hashes: int = 4,
-    phonetic: bool = False,
-) -> DataFrame:
+def surface_blocking_keys(mentions: DataFrame) -> DataFrame:
     """(norm, bk) for every distinct mention surface, materialized once
     and SHARED by the mention-entity blocking join and the
     mention-mention self-join (the keying pass is paid once)."""
-    return _with_keys(
-        mentions.select("norm").distinct(), ns, num_hashes, bands, del_max_len,
-        lsh_min_len, del2_max_len, word_num_hashes, phonetic,
-    )
+    return _with_keys(mentions.select("norm").distinct())
 
 
-def blocking_skew_bound(
-    bands: int = 12,
-    del_max_len: int = 12,
-    del2_max_len: int = 7,
-    word_num_hashes: int = 4,
-    max_key_freq: int = 64,
-    phonetic: bool = False,
-    phonetic_max_tokens: int = PHONETIC_MAX_TOKENS,
-) -> int:
+def blocking_skew_bound(max_key_freq: int = 64) -> int:
     """Closed-form upper bound on pre-dedup candidate rows per surface
     — the invariant that makes the explicit ``repartition("norm")`` in
     :func:`block_candidates` safe. Each surface emits at most
 
-      1 (exact) + 1 + del_max_len (delete-0/1) +
-      del2_max_len·(del2_max_len−1) (delete-2, pre-distinct) +
-      bands (LSH band keys) + 1 + word_num_hashes (word channel)
+      1 (exact) + 1 + DEL_MAX_LEN (delete-0/1) +
+      DEL2_MAX_LEN·(DEL2_MAX_LEN−1) (delete-2, pre-distinct) +
+      BANDS (LSH band keys) + 1 + WORD_NUM_HASHES (word channel)
 
     keys, and the hot-key cap drops every key matched by more than
     ``max_key_freq`` entities, so per-surface join fan-out ≤
@@ -310,13 +229,10 @@ def blocking_skew_bound(
     verifies the observed max against it at run time."""
     n_keys_max = (
         1
-        + (1 + del_max_len)
-        + del2_max_len * (del2_max_len - 1)
-        + bands
-        + (1 + word_num_hashes)
-        # opt-in phonetic channel: one 'p|' key per token, enforced by
-        # the F.slice cap in blocking_keys (PHONETIC_MAX_TOKENS)
-        + (phonetic_max_tokens if phonetic else 0)
+        + (1 + DEL_MAX_LEN)
+        + DEL2_MAX_LEN * (DEL2_MAX_LEN - 1)
+        + BANDS
+        + (1 + WORD_NUM_HASHES)
     )
     return n_keys_max * max_key_freq
 
@@ -351,18 +267,10 @@ def block_size_stats(cands: DataFrame) -> dict:
 def block_candidates(
     mentions: DataFrame,
     names: DataFrame,
-    ns: tuple[int, ...] = (2, 3),
-    num_hashes: int = 12,
-    bands: int = 12,
-    del_max_len: int = 12,
-    lsh_min_len: int = 5,
-    del2_max_len: int = 7,
     max_key_freq: int = 64,
     top_k: int = 32,
     surface_keys: DataFrame | None = None,
-    word_num_hashes: int = 4,
     skew_assert: bool = False,
-    phonetic: bool = False,
 ) -> DataFrame:
     """mentions(.., norm) × names(cui, norm) -> candidates
     (norm, cui, channel, block_key, has_exact).
@@ -376,17 +284,12 @@ def block_candidates(
     mention-mention self-join) consumes the same keying, so the
     expensive projection runs once for the whole job.
     """
-
-    keying = (ns, num_hashes, bands, del_max_len, lsh_min_len, del2_max_len,
-              word_num_hashes, phonetic)
     m_keys = (
-        surface_keys
-        if surface_keys is not None
-        else surface_blocking_keys(mentions, *keying)
+        surface_keys if surface_keys is not None else surface_blocking_keys(mentions)
     )
     # the synonym frame arrives on the byte-coalesced tail of
     # entity_names' dedup exchange: _with_keys re-spreads it
-    e_keys = _with_keys(names.select("cui", "norm"), *keying).dropDuplicates(["cui", "bk"])
+    e_keys = _with_keys(names.select("cui", "norm")).dropDuplicates(["cui", "bk"])
 
     # hot-key cap (explicit skew control / max_df analogue)
     key_freq = e_keys.groupBy("bk").agg(F.count_distinct("cui").alias("kf"))
@@ -407,10 +310,7 @@ def block_candidates(
         # runtime guard for the invariant the explicit repartition
         # below depends on (one extra aggregation job — enable in
         # tests / canary runs, not the hot path)
-        bound = blocking_skew_bound(
-            bands, del_max_len, del2_max_len, word_num_hashes, max_key_freq,
-            phonetic=phonetic,
-        )
+        bound = blocking_skew_bound(max_key_freq)
         observed = max_candidates_per_surface(cands)
         if observed > bound:
             raise AssertionError(
@@ -440,19 +340,17 @@ def block_candidates(
     )
 
     # per-surface top-k cap (W1) on a cheap JVM-side proxy similarity
-    if top_k is not None and top_k > 0:
-        rep = names.groupBy("cui").agg(F.min("norm").alias("e_norm"))
-        cands = cands.join(rep, "cui", "left")
-        proxy = F.when(F.col("has_exact"), F.lit(2.0)).otherwise(
-            1.0
-            - F.levenshtein("norm", "e_norm")
-            / F.greatest(F.length("norm"), F.length("e_norm"), F.lit(1))
-        )
-        w = Window.partitionBy("norm").orderBy(F.desc("proxy"), F.asc("cui"))
-        cands = (
-            cands.withColumn("proxy", proxy)
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= top_k)
-            .drop("rk", "proxy", "e_norm")
-        )
-    return cands
+    rep = names.groupBy("cui").agg(F.min("norm").alias("e_norm"))
+    cands = cands.join(rep, "cui", "left")
+    proxy = F.when(F.col("has_exact"), F.lit(2.0)).otherwise(
+        1.0
+        - F.levenshtein("norm", "e_norm")
+        / F.greatest(F.length("norm"), F.length("e_norm"), F.lit(1))
+    )
+    w = Window.partitionBy("norm").orderBy(F.desc("proxy"), F.asc("cui"))
+    return (
+        cands.withColumn("proxy", proxy)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= top_k)
+        .drop("rk", "proxy", "e_norm")
+    )

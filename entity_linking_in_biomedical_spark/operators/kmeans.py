@@ -36,6 +36,8 @@ count and the oracle replay corpus-independent, like classifier.lr_fit.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.vectors import _dbl
@@ -52,10 +54,15 @@ def _self_dot(cent: list[float]) -> float:
     return s
 
 
-def _sql_dbl(x: float) -> str:
+def _sql_dbl(x: float, what: str) -> str:
     """Shortest round-trip SQL double literal: repr() emits the minimal
-    decimal that parses back to the identical IEEE-754 double."""
-    return f"{float(x)!r}D"
+    decimal that parses back to the identical IEEE-754 double. NaN and
+    inf have no literal form (repr gives ``nanD``/``infD``, which the
+    SQL parser rejects), so they raise, naming ``what`` they were."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"kmeans {what} is {x!r}; centroids must be finite")
+    return f"{x!r}D"
 
 
 def _assign_sql(vcol: str, centroids: list[list[float]]) -> str:
@@ -69,15 +76,15 @@ def _assign_sql(vcol: str, centroids: list[list[float]]) -> str:
     k=8/dim=64, every iteration."""
     parts = []
     for c, cent in enumerate(centroids):
-        arr = ",".join(_sql_dbl(a) for a in cent)
+        arr = ",".join(
+            _sql_dbl(a, f"centroid {c} component {i}") for i, a in enumerate(cent)
+        )
         dot = (
             f"aggregate(zip_with({vcol}, array({arr}), (x, y) -> x * y), "
             f"0.0D, (acc, x) -> acc + x)"
         )
-        parts.append(
-            f"named_struct('s', {_sql_dbl(_self_dot(cent))} - 2.0D * {dot},"
-            f" 'c', {c})"
-        )
+        cc = _sql_dbl(_self_dot(cent), f"centroid {c} squared norm")
+        parts.append(f"named_struct('s', {cc} - 2.0D * {dot}, 'c', {c})")
     return f"array_min(array({','.join(parts)})).c"
 
 

@@ -53,9 +53,7 @@ from .pipeline import (
 )
 
 
-def build_surface_index(
-    assignments: DataFrame, cfg: PipelineConfig = PipelineConfig()
-) -> DataFrame:
+def build_surface_index(assignments: DataFrame) -> DataFrame:
     """(norm, bk, linked) for every surface node in persisted
     assignments — the durable blocking-key index that recovers
     cross-snapshot mention-mention pairs (the one approximation of
@@ -78,7 +76,7 @@ def build_surface_index(
         F.expr("substring(node, 3)").alias("norm"),
         F.col("cluster_id").startswith("e|").alias("linked"),
     )
-    return surface_blocking_keys(surf, **cfg.keying()).join(surf, "norm")
+    return surface_blocking_keys(surf).join(surf, "norm")
 
 
 def _cross_snapshot_edges(

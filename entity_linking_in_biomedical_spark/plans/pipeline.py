@@ -31,21 +31,12 @@ from ..operators.clustering import connected_components
 from ..operators.mentions import extract_mentions
 from ..operators.scoring import ScoringConfig, fit_idf, score_pairs
 from ..session import pin
-from .resume import make_stage_store, stage_signature
+from .resume import StageStore, stage_signature
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
     scoring: ScoringConfig = ScoringConfig()
-    block_ngrams: tuple[int, ...] = (2, 3)  # LSH gram sizes (no 1-grams:
-    # a min-hash over 1-grams is dominated by common letters -> mega-buckets)
-    num_hashes: int = 12
-    bands: int = 12
-    del_max_len: int = 12  # deletion-neighborhood channel bound
-    del2_max_len: int = 7  # delete-2 depth for very short strings
-    lsh_min_len: int = 5  # skip LSH for very short strings (deletion covers)
-    word_num_hashes: int = 4  # word-token minhash channel (0 disables)
-    phonetic: bool = False  # opt-in 'p|' Soundex channel (spelling variants)
     mm_threshold: float = 0.7  # mention-mention edges need more evidence
     max_key_freq: int = 64  # keys shared by more entities discriminate nothing
     top_k: int = 32  # reference's hardest-negative count (dataset.py:103)
@@ -55,21 +46,6 @@ class PipelineConfig:
         d = dict(self.__dict__)
         d["scoring"] = dict(self.scoring.__dict__)
         return d
-
-    def keying(self) -> dict:
-        """The blocking-key parameters, as keyword arguments of every
-        keying call (surface_blocking_keys, block_candidates): one list,
-        so no keying path can leave a channel out."""
-        return {
-            "ns": self.block_ngrams,
-            "num_hashes": self.num_hashes,
-            "bands": self.bands,
-            "del_max_len": self.del_max_len,
-            "lsh_min_len": self.lsh_min_len,
-            "del2_max_len": self.del2_max_len,
-            "word_num_hashes": self.word_num_hashes,
-            "phonetic": self.phonetic,
-        }
 
 
 # ---- match rules shared by the batch run and the snapshot fold ----
@@ -182,13 +158,12 @@ def run_pipeline(
 
     ``embeddings``: optional (norm string, embedding array<float>)
     lookup used for the dense dot-product feature.
-    ``out_dir``: when set, each stage commits a snapshot + manifest and
-    re-runs resume from the last committed stage. A plain path uses the
-    Parquet+manifest store; ``iceberg://catalog.namespace`` commits each
-    stage as an Iceberg table (north-rule storage contract) when the
-    session has an Iceberg catalog configured.
+    ``out_dir``: when set, each stage commits a Parquet snapshot +
+    manifest there and re-runs resume from the last committed stage. It
+    is a filesystem path visible to the driver and every executor (a
+    ``scheme://`` URI is rejected, see :class:`StageStore`).
     """
-    store = make_stage_store(spark, out_dir)
+    store = StageStore(spark, out_dir)
     p = cfg.params()
     # input-identity fingerprints (semanticHash of each source plan:
     # covers paths + upstream transformations) fold into every stage
@@ -244,7 +219,7 @@ def run_pipeline(
     # and compute_mm's three references (hot cap + both self-join sides)
     # all plan as Scan ExistingRDD — verified by
     # test_plans.py::test_surface_keys_shared_frame_single_evaluated
-    surf_keys = surface_blocking_keys(mentions, **cfg.keying())
+    surf_keys = surface_blocking_keys(mentions)
 
     # ---- stage 2: blocking -------------------------------------------
     sig_cands = stage_signature("candidates", p, [sig_mentions])
@@ -254,7 +229,6 @@ def run_pipeline(
         lambda: block_candidates(
             mentions,
             names,
-            **cfg.keying(),
             max_key_freq=cfg.max_key_freq,
             top_k=cfg.top_k,
             surface_keys=surf_keys,

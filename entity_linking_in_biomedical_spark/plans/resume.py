@@ -1,9 +1,10 @@
 """Per-stage checkpointed snapshots with commit manifests.
 
 The north rule requires every stage to resume from its last committed
-snapshot with per-partition lineage + metrics. On a real deployment the
-stage sinks are Iceberg tables and the manifest is the Iceberg snapshot;
-in this sandbox the same semantics are emulated on plain Parquet:
+snapshot with per-partition lineage + metrics. The store keeps them as
+plain Parquet plus a JSON manifest under one filesystem directory that
+the driver and every executor can see (a local disk for local[*], a
+shared mount on a cluster):
 
   <out_dir>/<stage>/data/...parquet      the snapshot
   <out_dir>/<stage>/_MANIFEST.json       commit record: stage signature
@@ -26,7 +27,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from ..session import pin
 
 # Spark's bucketed-file naming (BucketingUtils.bucketIdToString)
@@ -35,7 +36,10 @@ _BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?$")
 
 def stage_signature(stage: str, params: dict, parents: list[str]) -> str:
     """md5 of the stage name, its parameters and its parents'
-    signatures. Input identity belongs in ``params``: run_pipeline
+    signatures. A signature covers settings and inputs only: the
+    blocking key set (operators/blocking.py constants) is code, like
+    every other rule in that module, so changing it calls for a fresh
+    out_dir. Input identity belongs in ``params``: run_pipeline
     folds each source DataFrame's fingerprint into
     ``params["input_fp"]``, so re-running into the same out_dir with
     *different inputs* but identical settings recomputes instead of
@@ -79,7 +83,18 @@ class StageStore:
         cores, 8): 8 on local[4], 64 on local[32]). Every stage of one
         run shares the count, so co-located joins agree on it; a
         snapshot written at another width keeps the count its manifest
-        records (:meth:`load`)."""
+        records (:meth:`load`).
+
+        ``out_dir`` is a filesystem path (manifests and footers are read
+        with ``os``/``open``), so a ``scheme://`` URI is rejected here,
+        before any job runs, instead of failing after the first stage
+        write."""
+        if out_dir is not None and "://" in out_dir:
+            raise ValueError(
+                f"stage store out_dir {out_dir!r} is a URI; the stage store "
+                f"takes a filesystem path visible to the driver and every "
+                f"executor (e.g. a shared mount), not a scheme:// location"
+            )
         self.spark = spark
         self.out_dir = out_dir
         self.n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -242,113 +257,3 @@ class StageStore:
             self.metrics.append({"stage": stage, "rows": None, "resumed": True})
             return out
         return self.commit(stage, signature, compute(), bucket_by=bucket_by)
-
-
-class IcebergStageStore(StageStore):
-    """Iceberg-backed stage snapshots — the north rule's storage contract
-    taken literally where a catalog is available.
-
-    ``ref`` is ``catalog.namespace``; each stage becomes the table
-    ``<catalog>.<namespace>.<stage>``. The commit signature rides as a
-    table property inside the same ``createOrReplace`` transaction as
-    the data, so data + manifest swap atomically in one Iceberg snapshot
-    — the write-then-commit invariant the Parquet emulation enforces by
-    hand (delete manifest → overwrite data → os.replace manifest) is
-    native here. Per-partition lineage comes from Iceberg's own file
-    manifests; we still record row metrics for parity with the base
-    store.
-
-    Requires ``iceberg-spark-runtime`` on the session classpath and a
-    configured ``spark.sql.catalog.<name>``; ``available()`` probes for
-    both so callers (and tests) can fall back to the Parquet store.
-    """
-
-    SIG_PROP = "el.stage.signature"
-
-    def __init__(self, spark: SparkSession, ref: str):
-        super().__init__(spark, out_dir=ref)
-        self.ref = ref
-        catalog = ref.split(".", 1)[0]
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        if impl is None:
-            raise RuntimeError(
-                f"Iceberg stage store requested but no catalog "
-                f"'spark.sql.catalog.{catalog}' is configured on this "
-                f"session; configure an Iceberg catalog or use a plain "
-                f"path out_dir for the Parquet store"
-            )
-
-    @staticmethod
-    def available(spark: SparkSession) -> bool:
-        """True iff the Iceberg Spark runtime is on the classpath."""
-        try:
-            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-                "org.apache.iceberg.spark.SparkCatalog"
-            )
-            return True
-        except Exception:
-            return False
-
-    def _table(self, stage: str) -> str:
-        return f"{self.ref}.{stage}"
-
-    def committed(self, stage: str, signature: str) -> bool:
-        try:
-            props = {
-                r["key"]: r["value"]
-                for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {self._table(stage)}"
-                ).collect()
-            }
-        except Exception:  # table absent → not committed
-            return False
-        return props.get(self.SIG_PROP) == signature
-
-    def load(self, stage: str) -> DataFrame:
-        return self.spark.read.table(self._table(stage))
-
-    def commit(
-        self,
-        stage: str,
-        signature: str,
-        df: DataFrame,
-        bucket_by: list[str] | None = None,
-    ) -> DataFrame:
-        tbl = self._table(stage)
-        w = (
-            df.writeTo(tbl)
-            .using("iceberg")
-            .tableProperty(self.SIG_PROP, signature)
-        )
-        if bucket_by:
-            # Iceberg's native bucketing: the hidden bucket(n, col)
-            # partition transform is this catalog's equivalent of the
-            # Parquet store's bucketBy layout (sources/bucketed.py)
-            w = w.partitionedBy(
-                *[F.bucket(self.n_buckets, F.col(k)) for k in bucket_by]
-            )
-        w.createOrReplace()  # one atomic snapshot: data + signature
-        out = self.spark.read.table(tbl)
-        rows = out.count()
-        self.metrics.append({"stage": stage, "rows": rows, "table": tbl})
-        return out
-
-
-def make_stage_store(spark: SparkSession, out_dir: str | None) -> StageStore:
-    """Pick the stage-store backend from the out_dir spec:
-
-    - ``None`` → no persistence (lazy localCheckpoint barriers)
-    - ``iceberg://catalog.namespace`` → :class:`IcebergStageStore`
-      (raises with a clear message if the runtime/catalog is absent)
-    - any other string → Parquet+manifest :class:`StageStore`
-    """
-    if out_dir is not None and out_dir.startswith("iceberg://"):
-        ref = out_dir[len("iceberg://") :]
-        if not IcebergStageStore.available(spark):
-            raise RuntimeError(
-                "iceberg:// stage store requested but the Iceberg Spark "
-                "runtime is not on this session's classpath (add the "
-                "iceberg-spark-runtime jar via spark.jars.packages)"
-            )
-        return IcebergStageStore(spark, ref)
-    return StageStore(spark, out_dir)

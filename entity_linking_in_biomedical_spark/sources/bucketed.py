@@ -18,11 +18,7 @@ catalog — or, in a fresh session whose in-memory catalog lost the
 table, via :func:`register_bucketed` over the manifest-recorded layout.
 Bucketing requires the table catalog (``saveAsTable``; a path-based
 ``save`` has nowhere to record the layout) — the default
-in-memory/derby catalog in tests, a Hive/Iceberg catalog in
-deployment. Iceberg note: its ``write.distribution-mode`` + hidden
-``bucket(n, col)`` partition transform plays the same role for the
-iceberg:// stage store (``IcebergStageStore.commit`` applies it);
-this wrapper covers the classic Parquet/Hive layout.
+in-memory/derby catalog in tests, a Hive catalog in deployment.
 
 Sizing: the stage store buckets at the session's shuffle width,
 ``spark.sql.shuffle.partitions`` (read once per store), so a cluster is

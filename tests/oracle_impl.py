@@ -15,6 +15,15 @@ import re
 from collections import Counter, defaultdict
 
 from entity_linking_in_biomedical_spark.functions.strings import jaro_winkler, tfidf_cosine
+from entity_linking_in_biomedical_spark.operators.blocking import (
+    BANDS,
+    DEL2_MAX_LEN,
+    DEL_MAX_LEN,
+    GRAM_SIZES,
+    LSH_MIN_LEN,
+    NUM_HASHES,
+    WORD_NUM_HASHES,
+)
 from entity_linking_in_biomedical_spark.operators.mentions import _sweep
 from entity_linking_in_biomedical_spark.operators.scoring import ScoringConfig
 from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
@@ -43,30 +52,25 @@ def multigrams(s: str, ns=(2, 3)) -> list[str]:
     return out
 
 
-def band_keys(s: str, ns: tuple, num_hashes: int, bands: int) -> list[str]:
+def band_keys(s: str) -> list[str]:
+    """Python twin of the char-gram LSH channel: one 1-row band key per
+    minhash (BANDS == NUM_HASHES)."""
     from entity_linking_in_biomedical_spark.functions.ngrams import (
         MINHASH_P,
         minhash_coeffs,
     )
 
-    gs = multigrams(s, ns) or [""]
+    assert NUM_HASHES == BANDS
+    gs = multigrams(s, GRAM_SIZES) or [""]
     hs = [int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % MINHASH_P for g in gs]
     sig = []
-    for k in range(num_hashes):
+    for k in range(NUM_HASHES):
         a, b = minhash_coeffs(k)
         sig.append(min((a * h + b) % MINHASH_P for h in hs))
-    rows = num_hashes // bands
-    if rows == 1:
-        return [f"l{j}|{sig[j]}" for j in range(bands)]
-    return [
-        hashlib.md5(
-            ("b%d:" % j + "|".join(str(v) for v in sig[j * rows : (j + 1) * rows])).encode()
-        ).hexdigest()
-        for j in range(bands)
-    ]
+    return [f"l{j}|{sig[j]}" for j in range(BANDS)]
 
 
-def word_keys_py(s: str, word_num_hashes: int) -> list[str]:
+def word_keys_py(s: str) -> list[str]:
     """Python twin of operators.blocking.word_keys."""
     from entity_linking_in_biomedical_spark.functions.ngrams import (
         MINHASH_P,
@@ -77,27 +81,27 @@ def word_keys_py(s: str, word_num_hashes: int) -> list[str]:
     keys = []
     if len(toks) >= 2:
         keys.append("w|" + " ".join(sorted(toks)))
-    if word_num_hashes > 0 and len(toks) >= 3:
+    if len(toks) >= 3:
         hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % MINHASH_P for t in toks]
-        for k in range(word_num_hashes):
+        for k in range(WORD_NUM_HASHES):
             a, b = minhash_coeffs(k)
             keys.append(f"w{k}|{min((a * h + b) % MINHASH_P for h in hs)}")
     return keys
 
 
-def blocking_keys_py(s: str, cfg) -> list[str]:
+def blocking_keys_py(s: str) -> list[str]:
     """Python twin of operators.blocking.blocking_keys (exact + deletion
     neighborhood + LSH bands + word channel), order-preserving distinct."""
     keys = ["x|" + s]
-    if len(s) <= cfg.del_max_len:
+    if len(s) <= DEL_MAX_LEN:
         d1 = [s[:i] + s[i + 1 :] for i in range(len(s))]
         variants = [s] + d1
-        if 2 <= len(s) <= cfg.del2_max_len:
+        if 2 <= len(s) <= DEL2_MAX_LEN:
             variants += [v[:j] + v[j + 1 :] for v in d1 for j in range(len(v))]
         keys += ["d|" + v for v in variants if len(v) >= 3]
-    if len(s) >= cfg.lsh_min_len:
-        keys += band_keys(s, cfg.block_ngrams, cfg.num_hashes, cfg.bands)
-    keys += word_keys_py(s, getattr(cfg, "word_num_hashes", 4))
+    if len(s) >= LSH_MIN_LEN:
+        keys += band_keys(s)
+    keys += word_keys_py(s)
     out, seen = [], set()
     for k in keys:
         if k not in seen:
@@ -201,12 +205,12 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
         ent_by_norm[n].add(cui)
     ent_by_key = defaultdict(set)  # key -> set(cui)
     for cui, n in names:
-        for bk in blocking_keys_py(n, cfg):
+        for bk in blocking_keys_py(n):
             ent_by_key[bk].add(cui)
     hot = {bk for bk, cuis in ent_by_key.items() if len(cuis) > cfg.max_key_freq}
     cands = defaultdict(set)  # norm -> set(cui)
     for s in surfaces:
-        for bk in blocking_keys_py(s, cfg):
+        for bk in blocking_keys_py(s):
             if bk in hot:
                 continue
             cands[s] |= ent_by_key.get(bk, set())
@@ -214,18 +218,17 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
     rep = {}
     for cui, n in names:
         rep[cui] = min(rep.get(cui, n), n)
-    if cfg.top_k:
-        for s in list(cands):
-            cs = cands[s]
-            if len(cs) > cfg.top_k:
-                def proxy(c):
-                    # has_exact mirrors Spark: the x| key must have
-                    # SURVIVED the hot-key cap
-                    if ("x|" + s) not in hot and c in ent_by_norm.get(s, ()):
-                        return (-2.0, c)
-                    e = rep[c]
-                    return (-(1.0 - lev(s, e) / max(len(s), len(e), 1)), c)
-                cands[s] = set(sorted(cs, key=proxy)[: cfg.top_k])
+    for s in list(cands):
+        cs = cands[s]
+        if len(cs) > cfg.top_k:
+            def proxy(c):
+                # has_exact mirrors Spark: the x| key must have
+                # SURVIVED the hot-key cap
+                if ("x|" + s) not in hot and c in ent_by_norm.get(s, ()):
+                    return (-2.0, c)
+                e = rep[c]
+                return (-(1.0 - lev(s, e) / max(len(s), len(e), 1)), c)
+            cands[s] = set(sorted(cs, key=proxy)[: cfg.top_k])
 
     # stage 3: scoring — argmax entity link per surface (top-1, tie -> min cui)
     syns_by_cui = defaultdict(list)
@@ -249,7 +252,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
     # mention-mention channel (same banding, hot cap on surface side, pair cap)
     surf_by_band = defaultdict(list)
     for s in surfaces:
-        for bk in blocking_keys_py(s, cfg):
+        for bk in blocking_keys_py(s):
             surf_by_band[bk].append(s)
     def md5_order(b: str) -> tuple[str, str]:
         # identical deterministic partner order as the Spark window

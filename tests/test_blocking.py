@@ -13,9 +13,9 @@ from entity_linking_in_biomedical_spark.operators.blocking import (
 )
 
 
-def keys_of(spark, s, **kw):
+def keys_of(spark, s):
     df = spark.createDataFrame([(s,)], "norm string")
-    return df.select(blocking_keys(F.col("norm"), **kw).alias("k")).collect()[0]["k"]
+    return df.select(blocking_keys(F.col("norm")).alias("k")).collect()[0]["k"]
 
 
 def test_exact_key_always_present(spark):
@@ -123,12 +123,10 @@ def test_word_channel_catches_token_reorder(spark):
     # token minhash keys shared too (identical token sets)
     assert any(k.startswith("w0|") for k in shared_w)
     # and the oracle twin produces the identical key sets
-    from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
     from tests.oracle_impl import blocking_keys_py
 
-    cfg = PipelineConfig()
-    assert sorted(row["ka"]) == sorted(blocking_keys_py("egfr kinase inhibitor", cfg))
-    assert sorted(row["kb"]) == sorted(blocking_keys_py("kinase egfr inhibitor", cfg))
+    assert sorted(row["ka"]) == sorted(blocking_keys_py("egfr kinase inhibitor"))
+    assert sorted(row["kb"]) == sorted(blocking_keys_py("kinase egfr inhibitor"))
 
 
 def test_blocking_skew_invariant_guard(spark, corpus):
@@ -171,55 +169,6 @@ def test_blocking_skew_guard_trips_when_bound_shrinks(spark, corpus, monkeypatch
         B.block_candidates(mentions, names, skew_assert=True)
 
 
-def test_phonetic_channel_blocks_spelling_variants(spark):
-    """Opt-in 'p|' Soundex channel: Robert/Rupert share no 2-gram and
-    differ at edit distance 3, but co-block phonetically; default-off
-    keeps the standard key set byte-stable."""
-    from entity_linking_in_biomedical_spark.operators.blocking import (
-        blocking_keys,
-        channel_of,
-    )
-
-    df = spark.createDataFrame([("robert",), ("rupert",)], "norm string")
-    keys_on = df.select(
-        "norm",
-        F.explode(blocking_keys(F.col("norm"), phonetic=True)).alias("bk"),
-    )
-    ph = keys_on.filter(F.col("bk").startswith("p|"))
-    got = {r["norm"]: r["bk"] for r in ph.collect()}
-    assert got["robert"] == got["rupert"] == "p|R163"
-    assert (
-        ph.select(channel_of(F.col("bk")).alias("c")).distinct().collect()[0]["c"]
-        == "phonetic"
-    )
-    # default-off: no p| keys
-    keys_off = df.select(F.explode(blocking_keys(F.col("norm"))).alias("bk"))
-    assert keys_off.filter(F.col("bk").startswith("p|")).count() == 0
-
-
-def test_block_candidates_phonetic_channel_end_to_end(spark):
-    """With phonetic=True a spelling variant pairs through the 'p|'
-    channel even when exact/deletion channels miss it (edit distance 3,
-    LSH below min length after n-gram sparsity)."""
-    from entity_linking_in_biomedical_spark.operators.blocking import (
-        block_candidates,
-    )
-
-    mentions = spark.createDataFrame([("robert",)], "norm string")
-    names = spark.createDataFrame([("C1", "rupert")], "cui string, norm string")
-    # robert/rupert ALSO co-block via delete-2 ("rert") and often LSH;
-    # disable the other fuzzy channels so the candidate can only come
-    # from the Soundex key
-    narrow = dict(del_max_len=0, del2_max_len=0, lsh_min_len=99, word_num_hashes=0)
-    off = block_candidates(mentions, names, phonetic=False, **narrow)
-    on = block_candidates(mentions, names, phonetic=True, **narrow)
-    assert off.count() == 0
-    got = on.collect()
-    assert [(r["norm"], r["cui"], r["channel"]) for r in got] == [
-        ("robert", "C1", "phonetic")
-    ]
-
-
 _RESTART_SCRIPT = """
 from pyspark.sql import functions as F
 
@@ -246,7 +195,7 @@ spark = get_spark("keys-memo-restart", master="local[2]")
 again = B.blocking_keys(F.col("norm"))
 assert again is expr, "memo miss after restart"
 assert keys(spark, again) == before
-assert keys(spark, B._build_blocking_keys(F.col("norm"), (2, 3), 12, 12, 12, 5, 7, 4, False)) == before
+assert keys(spark, B._build_blocking_keys(F.col("norm"))) == before
 spark.stop()
 print("OK", len(before))
 """

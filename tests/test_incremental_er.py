@@ -197,18 +197,15 @@ def test_snapshot_scale_relabel_is_shuffle_free(spark):
 
 
 def test_surface_index_keys_match_batch_keying(spark):
-    """The durable surface index is keyed with every batch keying
-    parameter: under phonetic=True it holds the same (norm, bk) set as
-    the batch keying frame, 'p|' Soundex keys included."""
+    """The durable surface index holds the same (norm, bk) set as the
+    batch keying frame of the same surfaces."""
     from entity_linking_in_biomedical_spark.operators.blocking import (
         surface_blocking_keys,
     )
     from entity_linking_in_biomedical_spark.plans.incremental_er import (
         build_surface_index,
     )
-    from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
 
-    cfg = PipelineConfig(phonetic=True)
     assignments = spark.createDataFrame(
         [
             ("s|smith syndrome", "e|C1"),
@@ -221,10 +218,7 @@ def test_surface_index_keys_match_batch_keying(spark):
     surf = assignments.filter(F.col("node").startswith("s|")).select(
         F.expr("substring(node, 3)").alias("norm")
     )
-    want = {tuple(r) for r in surface_blocking_keys(surf, **cfg.keying()).collect()}
-    got = {
-        (r["norm"], r["bk"])
-        for r in build_surface_index(assignments, cfg).collect()
-    }
+    want = {tuple(r) for r in surface_blocking_keys(surf).collect()}
+    got = {(r["norm"], r["bk"]) for r in build_surface_index(assignments).collect()}
     assert got == want
-    assert any(bk.startswith("p|") for _, bk in got)
+    assert {n for n, _ in got} == {"smith syndrome", "smyth syndrome", "aspirin"}

@@ -101,6 +101,17 @@ def test_kmeans_rejects_empty_frame(spark):
         kmeans_assign(df, k=2)
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_kmeans_score_rejects_non_finite_centroid(spark, bad):
+    """A NaN/inf centroid component fails up front with a message that
+    names it, not later as a SQL parse error on a ``nanD`` literal."""
+    from entity_linking_in_biomedical_spark.operators.kmeans import kmeans_score
+
+    df = spark.createDataFrame(_ROWS, "vec_id int, embedding array<float>")
+    with pytest.raises(ValueError, match="centroid 1 component 2 is (nan|inf)"):
+        kmeans_score(df, [[0.0, 0.0, 0.0], [1.0, 1.0, bad]])
+
+
 def test_kmeans_score_is_streaming_native(spark, tmp_path):
     """The fitted E-step is a pure plan-literal projection, so it
     composes directly onto streaming frames (like lr_score)."""

@@ -7,14 +7,11 @@ import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.plans.pipeline import run_pipeline
-from entity_linking_in_biomedical_spark.plans.resume import (
-    StageStore,
-    make_stage_store,
-    stage_signature,
-)
+from entity_linking_in_biomedical_spark.plans.resume import StageStore, stage_signature
 from entity_linking_in_biomedical_spark.sources.bucketed import write_bucketed
 
 
@@ -100,6 +97,19 @@ def test_corrupt_manifest_treated_as_uncommitted(spark, tmp_path):
     assert store.load("s1").count() == 2  # data files still readable
 
 
+def test_stage_store_rejects_uri_out_dir(spark, corpus, tmp_path):
+    """The store reads manifests and footers through the local
+    filesystem, so a ``scheme://`` out_dir is refused before any job
+    runs instead of failing after the first stage write."""
+    docs, ents, _, _, _ = corpus.to_spark(spark)
+    for uri in ("iceberg://local.el_stages", f"file://{tmp_path}/stages"):
+        before = next_job_id(spark)
+        with pytest.raises(ValueError, match="filesystem path"):
+            run_pipeline(spark, docs, ents, out_dir=uri)
+        assert next_job_id(spark) == before
+    assert not os.path.exists(tmp_path / "stages")
+
+
 def test_pipeline_resume_identical_and_skips(spark, corpus, tmp_path):
     docs, ents, _, abbr, _ = corpus.to_spark(spark)
     emb = corpus.embeddings_df(spark)
@@ -141,7 +151,7 @@ def test_resume_across_shuffle_widths(spark, corpus, tmp_path):
         spark.conf.set(key, "4")
         r2 = run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr, out_dir=out_dir)
         c2 = clusters(r2)
-        store = make_stage_store(spark, out_dir)
+        store = StageStore(spark, out_dir)
         for stage in ("mentions", "candidates"):
             spark.sql(f"drop table if exists {store._catalog_table(stage)}")
             store.load(stage)  # re-attached from the manifest at width 4
@@ -176,7 +186,7 @@ def test_pipeline_stage_snapshots_join_exchange_free(spark, corpus, tmp_path):
     out_dir = str(tmp_path / "run")
     run_pipeline(spark, docs, ents, abbr_map=abbr, out_dir=out_dir)
 
-    store = make_stage_store(spark, out_dir)
+    store = StageStore(spark, out_dir)
     cands = store.load("candidates")
     mentions_by_norm = store.load("mentions")
     assert join_is_exchange_free(cands, mentions_by_norm, ["norm"])
