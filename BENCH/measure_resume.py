@@ -1,15 +1,12 @@
 #!/usr/bin/env python
 """Measure the checkpoint/resume path: cold run (every stage computed +
-committed through the bucketed stage sinks) vs resumed run (every stage
-served from its committed snapshot; only the final cluster-attach join
-and sinks execute).
+committed to the stage store as Parquet plus a manifest) vs resumed run
+(every stage served from its committed snapshot; only the final
+cluster-attach join and sinks execute).
 
 This is the north rule's "resumes from its last committed snapshot"
 contract as a throughput number: at 10^12 docs a restarted job must pay
-for the remaining work, not the finished work, and the bucketed layout
-means what IS re-read re-joins without an Exchange
-(sources/bucketed.py; exchange-freedom is plan-asserted in
-tests/test_resume.py — this harness adds the wall-clock view).
+for the remaining work, not the finished work.
 
 Prints one JSON line:
   {"cold_sec": ..., "resumed_sec": ..., "speedup": ...,
@@ -88,7 +85,6 @@ def main() -> None:
         resumed_stages = [
             m["stage"] for m in res2["metrics"] if m.get("resumed")
         ]
-        degraded = [m for m in res2["metrics"] if m.get("bucket_layout")]
         print(
             json.dumps(
                 {
@@ -96,7 +92,6 @@ def main() -> None:
                     "resumed_sec": round(resumed, 2),
                     "speedup": round(cold / resumed, 2),
                     "resumed_stages": resumed_stages,
-                    "bucket_layout_degraded": degraded,
                     "corpus_docs": n_docs,
                     "cpus": cpus,
                 }

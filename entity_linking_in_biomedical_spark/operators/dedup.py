@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.ngrams import lsh_band_keys, minhash_signature, with_band_keys
 from ..functions.text_metrics import fingerprint, simhash64, tokens
 from ..session import pin
+from .skew import drop_hot_keys
 
 # Shared LSH parameters for minhash_near_duplicates — the DuckDB oracle
 # (__spark_entry__._oracle_minhash_dedup) MUST band identically, or it
@@ -26,16 +27,6 @@ SIMHASH_MAX_HAMMING = 3
 SIMHASH_BLOCK_BITS = 15
 SIMHASH_N_BLOCKS = 4
 SIMHASH_MAX_BUCKET = 50
-
-
-def _drop_big_buckets(keyed: DataFrame, key: str, max_bucket: int) -> DataFrame:
-    """Anti-join away buckets with more than ``max_bucket`` members —
-    the skew control shared by every LSH-bucket self-join here: one
-    degenerate bucket (boilerplate docs, zero vectors) is O(bucket^2)
-    pairs at 100 TB. The count aggregate is tiny (one row per big
-    bucket) and broadcast."""
-    big = keyed.groupBy(key).agg(F.count("*").alias("c")).filter(F.col("c") > max_bucket)
-    return keyed.join(F.broadcast(big.select(key)), key, "left_anti")
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -121,7 +112,7 @@ def minhash_near_duplicates(
         with_band_keys(sh, F.col("shingles"), num_hashes, bands)
         .select("doc_id", "bk")
     )
-    banded = _drop_big_buckets(banded, "bk", max_bucket)
+    banded = drop_hot_keys(banded, "bk", max_bucket)
     # id-only pair join + dedup FIRST; the shingle arrays re-attach
     # afterwards — shuffling two ~100-element string arrays per
     # candidate pair was the dominant cost of this operator (measured)
@@ -308,7 +299,7 @@ def simhash_near_duplicates(
             )
         ).alias("blk"),
     ))
-    blocked = _drop_big_buckets(blocked, "blk", max_bucket)
+    blocked = drop_hot_keys(blocked, "blk", max_bucket)
     pairs = (
         blocked.alias("x")
         .join(blocked.alias("y"), "blk")
@@ -358,7 +349,7 @@ def embedding_near_duplicates(
         "vec_id",
         F.explode(srp_table_keys_udf(F.col("v"), n_tables, bits)).alias("bkt"),
     ))
-    b = _drop_big_buckets(b, "bkt", max_bucket)
+    b = drop_hot_keys(b, "bkt", max_bucket)
     pairs = (
         b.alias("x")
         .join(b.alias("y"), "bkt")

@@ -10,8 +10,8 @@ note; CCNet's per-snapshot layout) is instead:
 1. keep a DEDUP INDEX of the surviving corpus — per doc, an exact
    content hash plus a MinHash signature (`build_dedup_index`). The
    index is ~200 bytes/doc regardless of document size (16 longs + one
-   md5 hex + the id), i.e. ~2 TB for 10^10 docs: a bucketed parquet /
-   Iceberg table (StageStore-compatible), never a broadcast;
+   md5 hex + the id), i.e. ~2 TB for 10^10 docs: a Parquet table
+   (a StageStore stage, say), never a broadcast;
 2. per arriving batch, flag batch docs that duplicate an INDEXED doc
    (`flag_against_index`) — one broadcast-or-shuffle hash join for the
    exact channel and one band-key join for the near channel, both
@@ -30,8 +30,8 @@ handles the batch-vs-corpus axis.
 
 Scale shape:
 - the index is read, never scanned-and-recomputed: the exact channel
-  joins on `text_hash` (bucket the stored table on it: zero-exchange
-  on the index side via sources/bucketed.py), the near channel
+  joins on `text_hash` with the batch side broadcast (the index is
+  scanned map-side, never shuffled), the near channel
   band-explodes the STORED signatures (16 cheap arithmetic keys/doc,
   no re-tokenization of indexed text, which is not even stored);
 - hot band buckets (boilerplate) are capped on the index side with the
@@ -57,9 +57,9 @@ from .dedup import (
     MINHASH_DEDUP_BANDS,
     MINHASH_DEDUP_MAX_BUCKET,
     MINHASH_DEDUP_NUM_HASHES,
-    _drop_big_buckets,
     _word_shingles,
 )
+from .skew import drop_hot_keys
 
 
 def build_dedup_index(
@@ -71,9 +71,7 @@ def build_dedup_index(
 ) -> DataFrame:
     """(doc_id string, text_hash string, sig array<long>) — one index
     row per document; the durable artifact. One corpus scan, no
-    shuffle. Persist bucketed on ``text_hash`` (write_bucketed /
-    StageStore) so the exact-channel join plans exchange-free on the
-    index side."""
+    shuffle. Persist it as Parquet (a StageStore stage, say)."""
     return (
         docs.select(
             F.col(id_col).cast("string").alias("doc_id"),
@@ -156,7 +154,7 @@ def flag_against_index(
     ib = _banded(index, bands, num_hashes).join(
         F.broadcast(bkeys.select("bk").distinct()), "bk", "left_semi"
     )
-    ib = _drop_big_buckets(ib, "bk", max_bucket)
+    ib = drop_hot_keys(ib, "bk", max_bucket)
     # materialized once: consumed as both the est left side and the
     # broadcast probe that prunes the index's signature re-attach
     cand = pin(

@@ -98,7 +98,10 @@ def kmeans_fit(
     """``iters`` full Lloyd rounds (assign + centroid update) from
     first-k-by-id init; returns the fitted centroids — a k×dim python
     list, the durable model artifact (json-serializable; ride it into
-    :func:`kmeans_score` as plan literals)."""
+    :func:`kmeans_score` as plan literals). Vectors of unequal length
+    raise a ``ValueError``, caught from the M-step rows the round
+    collects anyway: a position past the first vector's dim, a missing
+    position, or unequal counts across one cluster's positions."""
     if k < 1 or iters < 1:
         raise ValueError(f"k and iters must be >= 1, got k={k} iters={iters}")
     base = pin(df.select(F.col(id_col), _dbl(vec_col).alias("__v")))
@@ -129,11 +132,29 @@ def kmeans_fit(
             .collect()
         )
         sums: dict[int, list] = {}
-        ns: dict[int, float] = {}
+        ns: dict[int, int] = {}
         for r in rows:
-            sums.setdefault(r["__c"], [None] * dim)[r["__p"]] = r["__s"]
-            ns[r["__c"]] = float(r["__n"])
+            c, p, n = r["__c"], r["__p"], r["__n"]
+            if p >= dim:
+                raise ValueError(
+                    f"kmeans vectors are ragged: cluster {c} has a vector "
+                    f"with a component at position {p}, but the first "
+                    f"vector has dim {dim}"
+                )
+            if ns.setdefault(c, n) != n:
+                raise ValueError(
+                    f"kmeans vectors are ragged: cluster {c} has {ns[c]} "
+                    f"values at one position and {n} at position {p}; "
+                    f"every vector must have dim {dim}"
+                )
+            sums.setdefault(c, [None] * dim)[p] = r["__s"]
         for c, s in sums.items():
+            if None in s:
+                raise ValueError(
+                    f"kmeans vectors are ragged: cluster {c} has no value "
+                    f"at position {s.index(None)}; every vector must have "
+                    f"dim {dim}"
+                )
             # clusters absent from `sums` are empty and keep their
             # previous centroid
             centroids[c] = [_round9(float(x) / ns[c]) for x in s]

@@ -206,8 +206,7 @@ def build_media_index(documents: DataFrame) -> DataFrame:
     checks arriving snapshots against, one short row per distinct
     asset regardless of corpus size (the media analogue of
     incremental_dedup.build_dedup_index). One scan + one
-    map-side-partial distinct; persist bucketed on media_ref so the
-    per-snapshot semi-join plans exchange-free on the index side.
+    map-side-partial distinct; persist it as Parquet.
     After absorbing a cleaned batch, append
     ``build_media_index(clean_batch)`` (union + distinct, or a MERGE
     on an Iceberg index table)."""

@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.vectors import cosine_sim
+from .skew import cap_per_key
 
 
 def _plane_coeffs(n_planes: int, dim: int) -> list[list[float]]:
@@ -130,20 +131,6 @@ def srp_table_keys_udf(
     return _keys(vec)
 
 
-def _cap_buckets(keyed: DataFrame, key: str, id_col: str, max_bucket: int) -> DataFrame:
-    """Keep at most ``max_bucket`` members per bucket (deterministic
-    md5-of-id order). Unlike the dedup operators' drop-the-bucket cap,
-    ANN *truncates* hot buckets: a hot bucket still serves its first
-    ``max_bucket`` members as candidates (graceful recall degradation)
-    instead of vanishing entirely."""
-    w = Window.partitionBy(key).orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-    return (
-        keyed.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_bucket)
-        .drop("_rk")
-    )
-
-
 def brute_force_topk(
     queries: DataFrame,
     database: DataFrame,
@@ -203,7 +190,7 @@ def lsh_topk(
         db_id,
         F.explode(srp_table_keys_udf(F.col(db_vec), n_tables, bits)).alias("bkt"),
     )
-    dbk = _cap_buckets(dbk, "bkt", db_id, max_bucket)
+    dbk = cap_per_key(dbk, "bkt", db_id, max_bucket)
     cand = (
         qk.select(q_id, "bkt")
         .join(dbk, "bkt")
@@ -355,7 +342,7 @@ def ivf_topk(
         db_id,
         F.explode(ivf_assign_udf(F.col(db_vec), cent, nprobe=1)).alias("ivf_list"),
     )
-    dbk = _cap_buckets(dbk, "ivf_list", db_id, max_list)
+    dbk = cap_per_key(dbk, "ivf_list", db_id, max_list)
     qk = queries.select(
         q_id,
         F.explode(ivf_assign_udf(F.col(q_vec), cent, nprobe=nprobe)).alias(

@@ -42,12 +42,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.blocking import surface_blocking_keys
 from ..operators.clustering import merge_into_clusters
 from ..operators.scoring import score_pairs
+from ..operators.skew import cap_per_key, drop_hot_keys
 from ..session import pin
 from .pipeline import (
     PipelineConfig,
     best_partner_edges,
-    cap_partners,
-    drop_hot_keys,
     relabel_mentions,  # re-exported: callers import it from this module
     run_pipeline,
 )
@@ -59,8 +58,8 @@ def build_surface_index(assignments: DataFrame) -> DataFrame:
     cross-snapshot mention-mention pairs (the one approximation of
     index-less :func:`link_snapshot`). Size is keys-per-surface short
     rows per DISTINCT corpus surface — independent of document count —
-    so it broadcasts for most dictionaries and otherwise persists
-    bucketed on ``bk`` (the join key of every snapshot probe). Rebuild
+    so it broadcasts for most dictionaries and otherwise persists as
+    Parquet, pruned to each snapshot's keys before the probe. Rebuild
     from the merged assignments after each fold, or append the
     snapshot's own keys (same union+distinct idiom as the dedup
     indexes).
@@ -122,14 +121,14 @@ def _cross_snapshot_edges(
         .select(F.col("norm").alias("b_norm"), "bk")
         .join(F.broadcast(new_keys.select("bk").distinct()), "bk", "left_semi")
     )
-    old = drop_hot_keys(old, cfg.max_key_freq)
+    old = drop_hot_keys(old, "bk", cfg.max_key_freq)
     pairs = pin(
         F.broadcast(new_keys).join(old, "bk")
         .filter(F.col("norm") != F.col("b_norm"))
         .select(F.col("norm").alias("a_norm"), "b_norm")
         .dropDuplicates(["a_norm", "b_norm"])
     )
-    pairs = cap_partners(pairs, cfg.mm_pair_cap)
+    pairs = cap_per_key(pairs, "a_norm", "b_norm", cfg.mm_pair_cap)
     if embeddings is not None:
         # embeddings may be dictionary-scale: prune to the pair keys
         # (broadcast semi) so the left join's right side is

@@ -30,6 +30,7 @@ from ..operators.blocking import block_candidates, entity_names, surface_blockin
 from ..operators.clustering import connected_components
 from ..operators.mentions import extract_mentions
 from ..operators.scoring import ScoringConfig, fit_idf, score_pairs
+from ..operators.skew import cap_per_key, drop_hot_keys
 from ..session import pin
 from .resume import StageStore, stage_signature
 
@@ -49,29 +50,6 @@ class PipelineConfig:
 
 
 # ---- match rules shared by the batch run and the snapshot fold ----
-
-
-def drop_hot_keys(keys: DataFrame, max_key_freq: int) -> DataFrame:
-    """Drop the rows of blocking keys shared by more than
-    ``max_key_freq`` rows of ``keys`` (the surface-side skew cap; a key
-    that common discriminates nothing)."""
-    hot = (
-        keys.groupBy("bk").agg(F.count("*").alias("kf"))
-        .filter(F.col("kf") > max_key_freq)
-        .select("bk")
-    )
-    return keys.join(F.broadcast(hot), "bk", "left_anti")
-
-
-def cap_partners(pairs: DataFrame, cap: int) -> DataFrame:
-    """Keep at most ``cap`` partners ``b_norm`` per surface ``a_norm``,
-    chosen by md5 order so that the choice is deterministic and the
-    pandas oracle reproduces it; bounds the scoring fan-out on hot
-    surfaces."""
-    w = Window.partitionBy("a_norm").orderBy(F.md5("b_norm"), F.col("b_norm"))
-    return pairs.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= cap
-    ).drop("rk")
 
 
 def best_partner_edges(pairs: DataFrame, node: str, partner: str) -> DataFrame:
@@ -123,6 +101,31 @@ def relabel_mentions(
     )
 
 
+# the columns run_pipeline reads from each input
+_REQUIRED_COLUMNS = {
+    "documents": ("doc_id", "spans"),
+    "entities": ("cui", "synonyms"),
+    "embeddings": ("norm", "embedding"),
+    "abbr_map": ("doc_id", "abbr", "long_form"),
+    "split_ids": ("doc_id",),
+}
+
+
+def _check_columns(inputs: dict[str, DataFrame | None]) -> None:
+    """Fail on a missing input column before any job is submitted
+    (``df.columns`` only analyzes the plan), instead of as an analysis
+    error deep inside a stage."""
+    for name, df in inputs.items():
+        if df is None:
+            continue
+        missing = [c for c in _REQUIRED_COLUMNS[name] if c not in df.columns]
+        if missing:
+            raise ValueError(
+                f"run_pipeline input {name!r} is missing required column(s) "
+                f"{', '.join(map(repr, missing))}; it has {df.columns}"
+            )
+
+
 def _input_fingerprint(df: DataFrame) -> list:
     """Stable identity fingerprint of a pipeline input for stage
     signatures. semanticHash covers source paths + transformations, but
@@ -162,7 +165,18 @@ def run_pipeline(
     manifest there and re-runs resume from the last committed stage. It
     is a filesystem path visible to the driver and every executor (a
     ``scheme://`` URI is rejected, see :class:`StageStore`).
+    A missing required input column raises a ``ValueError`` naming the
+    input and the column (see ``_REQUIRED_COLUMNS``).
     """
+    _check_columns(
+        {
+            "documents": documents,
+            "entities": entities,
+            "embeddings": embeddings,
+            "abbr_map": abbr_map,
+            "split_ids": split_ids,
+        }
+    )
     store = StageStore(spark, out_dir)
     p = cfg.params()
     # input-identity fingerprints (semanticHash of each source plan:
@@ -192,17 +206,11 @@ def run_pipeline(
         p["split"] = True
 
     # ---- stage 1: mentions -------------------------------------------
-    # Persisted stages bucket on the key every downstream join reuses
-    # (``norm`` ties mentions ↔ candidates ↔ scores across stages and
-    # resumed runs — sources/bucketed.py): the stage's one shuffle is
-    # paid at write time, and a resumed 100 TB run re-joins the
-    # snapshots with no Exchange instead of re-shuffling per stage.
     sig_mentions = stage_signature("mentions", p, [])
     mentions = store.get_or_compute(
         "mentions",
         sig_mentions,
         lambda: extract_mentions(documents, abbr_map),
-        bucket_by=["norm"],
     )
 
     # pin the synonym frame once (lazy): entity_names ends in a
@@ -233,7 +241,6 @@ def run_pipeline(
             top_k=cfg.top_k,
             surface_keys=surf_keys,
         ),
-        bucket_by=["norm"],
     )
 
     # ---- stage 3: pairwise scoring -----------------------------------
@@ -297,9 +304,7 @@ def run_pipeline(
         )
 
     sig_me = stage_signature("me_scores", p, [sig_cands])
-    me_scores = store.get_or_compute(
-        "me_scores", sig_me, compute_me, bucket_by=["a_norm"]
-    )
+    me_scores = store.get_or_compute("me_scores", sig_me, compute_me)
 
     def compute_mm() -> DataFrame:
         # mention-mention channel: distinct surface pairs sharing a
@@ -308,7 +313,7 @@ def run_pipeline(
         # variants cluster together without an entity bridge.
         # Reuses the stage-2 keying frame (surf_keys) — the identical
         # blocking_keys explode was previously derived twice per job.
-        b = drop_hot_keys(surf_keys, cfg.max_key_freq)
+        b = drop_hot_keys(surf_keys, "bk", cfg.max_key_freq)
         pairs = (
             b.alias("x")
             .join(b.alias("y"), "bk")
@@ -320,7 +325,9 @@ def run_pipeline(
             )
             .dropDuplicates(["a_norm", "b_norm"])
         )
-        pairs = cap_partners(pairs, cfg.mm_pair_cap)
+        # at most mm_pair_cap partners per surface: bounds the scoring
+        # fan-out on hot surfaces
+        pairs = cap_per_key(pairs, "a_norm", "b_norm", cfg.mm_pair_cap)
         pairs = with_emb(pairs, "a_norm", "a_emb")
         pairs = with_emb(pairs, "b_norm", "b_emb")
         scored = score_pairs(
@@ -334,9 +341,7 @@ def run_pipeline(
         return scored.select("a_norm", "b_norm", "block_key", "score")
 
     sig_mm = stage_signature("mm_scores", p, [sig_mentions])
-    mm_scores = store.get_or_compute(
-        "mm_scores", sig_mm, compute_mm, bucket_by=["a_norm"]
-    )
+    mm_scores = store.get_or_compute("mm_scores", sig_mm, compute_mm)
 
     # ---- stage 4: transitive clustering ------------------------------
     def compute_assign() -> DataFrame:

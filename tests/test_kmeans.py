@@ -101,6 +101,25 @@ def test_kmeans_rejects_empty_frame(spark):
         kmeans_assign(df, k=2)
 
 
+@pytest.mark.parametrize(
+    "vec, match",
+    [
+        ([4.0, 4.5, 4.2, 9.9], "component at position 3, but the first vector has dim 3"),
+        ([4.0, 4.5], "values at one position and .* at position 2|no value at position 2"),
+    ],
+    ids=["longer", "shorter"],
+)
+def test_kmeans_fit_rejects_ragged_vectors(spark, vec, match):
+    """A vector longer or shorter than the first fails with a message
+    naming the mismatch, not an IndexError or a silent miscount."""
+    from entity_linking_in_biomedical_spark.operators.kmeans import kmeans_fit
+
+    rows = [r for r in _ROWS if r[0] != 7] + [(7, vec)]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    with pytest.raises(ValueError, match=f"ragged: cluster .*({match})"):
+        kmeans_fit(df, k=2, iters=2)
+
+
 @pytest.mark.parametrize("bad", [float("nan"), float("inf")])
 def test_kmeans_score_rejects_non_finite_centroid(spark, bad):
     """A NaN/inf centroid component fails up front with a message that

@@ -154,3 +154,31 @@ def test_scoring_ngram_sizes_idf_fit_and_cosine(spark, corpus):
         a, b = r["a_norm"], r["b_norm"]
         assert r["cos"] == pytest.approx(tfidf_cosine(a, b, want_idf, n=2), abs=1e-9)
         assert r["mm_score"] == pytest.approx(score(a, b, want_idf, {}, cfg.scoring), abs=1e-9)
+
+
+@pytest.mark.parametrize(
+    "name, column",
+    [
+        ("documents", "spans"),
+        ("entities", "synonyms"),
+        ("embeddings", "embedding"),
+        ("abbr_map", "long_form"),
+        ("split_ids", "doc_id"),
+    ],
+)
+def test_missing_input_column_fails_before_any_job(spark, corpus, name, column):
+    """A required input column that is absent raises one ValueError
+    naming the input and the column, before any Spark job runs."""
+    docs, ents, _, abbr, split = corpus.to_spark(spark)
+    inputs = {
+        "documents": docs,
+        "entities": ents,
+        "embeddings": corpus.embeddings_df(spark),
+        "abbr_map": abbr,
+        "split_ids": split,
+    }
+    inputs[name] = inputs[name].withColumnRenamed(column, column + "_x")
+    before = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    with pytest.raises(ValueError, match=f"input '{name}' is missing required column.*'{column}'"):
+        run_pipeline(spark, **inputs)
+    assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() == before
