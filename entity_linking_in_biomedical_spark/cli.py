@@ -16,8 +16,9 @@ script is the thin ``run_el.py`` at the repo root)::
         --out hdfs://.../er_out --stage-dir /shared/er_stages
 
 Under spark-submit no ``--master`` flag is passed: the session is
-adopted from the submit-time conf (``getOrCreate``) and only
-engine-required settings (AQE, Arrow) are layered on. ``--stage-dir``
+adopted from the submit-time conf (``getOrCreate``) and only the
+engine-required settings (``session.ENGINE_CONF``: AQE, Arrow, block
+compression) are layered on. ``--stage-dir``
 makes every stage commit a snapshot + manifest so a killed run resumes
 from its last committed stage. The stage dir is a filesystem path
 visible to the driver and every executor (a shared mount on a cluster);
@@ -30,43 +31,45 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _session(master: str | None) -> SparkSession:
-    if master:
-        from .session import get_spark
+    from .session import engine_builder, get_spark
 
+    if master:
         return get_spark("el-spark", master=master)
     # spark-submit path: adopt the submitted conf, layer required opts
-    return (
-        SparkSession.builder.appName("el-spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    return engine_builder("el-spark").getOrCreate()
 
 
-def _cmd_run(args: argparse.Namespace) -> int:
-    from .plans.pipeline import PipelineConfig, run_pipeline
+def _read_er_inputs(
+    spark: SparkSession, args: argparse.Namespace
+) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame | None]:
+    """(documents, entities, embeddings, abbr_map) from the ER commands'
+    Parquet paths; flat documents are wrapped into span sequences."""
     from .sources.loaders import wrap_flat_documents
 
-    spark = _session(args.master)
     docs = spark.read.parquet(args.documents)
     if "spans" not in docs.columns:
         docs = wrap_flat_documents(docs)
     ents = spark.read.parquet(args.entities)
     emb = spark.read.parquet(args.embeddings) if args.embeddings else None
     abbr = spark.read.parquet(args.abbr) if args.abbr else None
-    cfg = PipelineConfig()
+    return docs, ents, emb, abbr
+
+
+def _cmd_run(args: argparse.Namespace) -> int:
+    from .plans.pipeline import run_pipeline
+
+    spark = _session(args.master)
+    docs, ents, emb, abbr = _read_er_inputs(spark, args)
     res = run_pipeline(
         spark,
         docs,
         ents,
         embeddings=emb,
         abbr_map=abbr,
-        cfg=cfg,
         out_dir=args.stage_dir,
     )
     res["linked_documents"].write.mode("overwrite").parquet(args.out)
@@ -85,19 +88,10 @@ def _cmd_link_snapshot(args: argparse.Namespace) -> int:
     snapshot: omit ``--state``. ``--state-out`` must differ from
     ``--state`` (write-then-swap is the caller's atomicity contract,
     or point both at an Iceberg table and MERGE)."""
-    from .plans.incremental_er import (
-        build_surface_index,
-        link_snapshot,
-    )
-    from .sources.loaders import wrap_flat_documents
+    from .plans.incremental_er import build_surface_index, link_snapshot
 
     spark = _session(args.master)
-    docs = spark.read.parquet(args.documents)
-    if "spans" not in docs.columns:
-        docs = wrap_flat_documents(docs)
-    ents = spark.read.parquet(args.entities)
-    emb = spark.read.parquet(args.embeddings) if args.embeddings else None
-    abbr = spark.read.parquet(args.abbr) if args.abbr else None
+    docs, ents, emb, abbr = _read_er_inputs(spark, args)
     prior = spark.read.parquet(args.state) if args.state else None
     idx = (
         build_surface_index(prior)

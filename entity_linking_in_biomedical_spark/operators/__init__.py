@@ -1,6 +1,6 @@
 from .mentions import extract_mentions, surviving_span_seqs
 from .blocking import block_candidates, entity_names
-from .scoring import score_pairs, fit_idf, ScoringConfig
+from .scoring import score_pairs, fit_idf
 from .clustering import connected_components
 
 __all__ = [
@@ -10,6 +10,5 @@ __all__ = [
     "entity_names",
     "score_pairs",
     "fit_idf",
-    "ScoringConfig",
     "connected_components",
 ]

@@ -37,11 +37,11 @@ Scale levers (all measured, SURVEY.md §4):
   results re-join to mentions by norm. (The reference dedups too —
   candidate_generator.py:75-77 — but buggily; see mentions.py.)
 - hot-key cap: keys whose entity-side frequency exceeds
-  ``max_key_freq`` are dropped before the join (the reference's
+  ``MAX_KEY_FREQ`` are dropped before the join (the reference's
   max_df=0.1 analogue, candidate_generator.py:35). This bounds the
   worst-case join fan-out per key — the explicit skew control the
   north rule requires; AQE skew-join splitting covers the residual.
-- per-surface candidate cap (``top_k``) via a window — the reference's
+- per-surface candidate cap (``TOP_K``) via a window — the reference's
   top-128 (candidate_generator.py:89,107-109), applied on a cheap
   JVM-side proxy similarity so the expensive scoring stage sees bounded
   input.
@@ -77,6 +77,10 @@ DEL_MAX_LEN = 12  # deletion-neighborhood channel bound
 DEL2_MAX_LEN = 7  # delete-2 depth for very short strings
 LSH_MIN_LEN = 5  # skip LSH for very short strings (deletion covers)
 WORD_NUM_HASHES = 4  # word-token minhash channel
+# The candidate caps, shared by the mention-entity join and the
+# mention-mention self-join
+MAX_KEY_FREQ = 64  # keys shared by more entities discriminate nothing
+TOP_K = 32  # reference's hardest-negative count (dataset.py:103)
 
 
 def deletion_keys(col: Column) -> Column:
@@ -211,7 +215,7 @@ def surface_blocking_keys(mentions: DataFrame) -> DataFrame:
     return _with_keys(mentions.select("norm").distinct())
 
 
-def blocking_skew_bound(max_key_freq: int = 64) -> int:
+def blocking_skew_bound() -> int:
     """Closed-form upper bound on pre-dedup candidate rows per surface
     — the invariant that makes the explicit ``repartition("norm")`` in
     :func:`block_candidates` safe. Each surface emits at most
@@ -221,10 +225,10 @@ def blocking_skew_bound(max_key_freq: int = 64) -> int:
       BANDS (LSH band keys) + 1 + WORD_NUM_HASHES (word channel)
 
     keys, and the hot-key cap drops every key matched by more than
-    ``max_key_freq`` entities, so per-surface join fan-out ≤
-    n_keys_max × max_key_freq. The explicit repartition is invisible
+    ``MAX_KEY_FREQ`` entities, so per-surface join fan-out ≤
+    n_keys_max × MAX_KEY_FREQ. The explicit repartition is invisible
     to AQE skew splitting, so this bound — not AQE — is what prevents
-    a mega-partition; raising ``max_key_freq`` scales the bound
+    a mega-partition; raising ``MAX_KEY_FREQ`` scales the bound
     linearly, and :func:`block_candidates` (``skew_assert=True``)
     verifies the observed max against it at run time."""
     n_keys_max = (
@@ -234,7 +238,7 @@ def blocking_skew_bound(max_key_freq: int = 64) -> int:
         + BANDS
         + (1 + WORD_NUM_HASHES)
     )
-    return n_keys_max * max_key_freq
+    return n_keys_max * MAX_KEY_FREQ
 
 
 def max_candidates_per_surface(cands: DataFrame, norm_col: str = "norm") -> int:
@@ -249,26 +253,9 @@ def max_candidates_per_surface(cands: DataFrame, norm_col: str = "norm") -> int:
     return int(row["mx"] or 0)
 
 
-def block_size_stats(cands: DataFrame) -> dict:
-    """Skew metrics over candidate blocks (north rule: per-partition
-    lineage + metrics): per-block_key candidate counts -> max / p50 /
-    p99 / mean. One aggregation, collected as four scalars."""
-    sizes = cands.groupBy("block_key").agg(F.count("*").alias("n"))
-    row = sizes.agg(
-        F.max("n").alias("max"),
-        F.expr("percentile_approx(n, 0.5)").alias("p50"),
-        F.expr("percentile_approx(n, 0.99)").alias("p99"),
-        F.round(F.avg("n"), 2).alias("mean"),
-        F.count("*").alias("n_blocks"),
-    ).collect()[0]
-    return {k: (float(row[k]) if row[k] is not None else None) for k in row.asDict()}
-
-
 def block_candidates(
     mentions: DataFrame,
     names: DataFrame,
-    max_key_freq: int = 64,
-    top_k: int = 32,
     surface_keys: DataFrame | None = None,
     skew_assert: bool = False,
 ) -> DataFrame:
@@ -293,7 +280,7 @@ def block_candidates(
 
     # hot-key cap (explicit skew control / max_df analogue)
     key_freq = e_keys.groupBy("bk").agg(F.count_distinct("cui").alias("kf"))
-    hot = key_freq.filter(F.col("kf") > max_key_freq).select("bk")
+    hot = key_freq.filter(F.col("kf") > MAX_KEY_FREQ).select("bk")
     e_keys = e_keys.join(F.broadcast(hot), "bk", "left_anti")
 
     cands = (
@@ -310,13 +297,13 @@ def block_candidates(
         # runtime guard for the invariant the explicit repartition
         # below depends on (one extra aggregation job — enable in
         # tests / canary runs, not the hot path)
-        bound = blocking_skew_bound(max_key_freq)
+        bound = blocking_skew_bound()
         observed = max_candidates_per_surface(cands)
         if observed > bound:
             raise AssertionError(
                 f"blocking skew invariant violated: a surface has "
                 f"{observed} pre-dedup candidates > bound {bound} "
-                f"(n_keys_max × max_key_freq) — the explicit "
+                f"(n_keys_max × MAX_KEY_FREQ) — the explicit "
                 f"repartition('norm') would host a mega-partition "
                 f"invisible to AQE skew splitting"
             )
@@ -339,7 +326,7 @@ def block_candidates(
         F.max(F.col("channel") == "exact").alias("has_exact"),
     )
 
-    # per-surface top-k cap (W1) on a cheap JVM-side proxy similarity
+    # per-surface TOP_K cap (W1) on a cheap JVM-side proxy similarity
     rep = names.groupBy("cui").agg(F.min("norm").alias("e_norm"))
     cands = cands.join(rep, "cui", "left")
     proxy = F.when(F.col("has_exact"), F.lit(2.0)).otherwise(
@@ -351,6 +338,6 @@ def block_candidates(
     return (
         cands.withColumn("proxy", proxy)
         .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= TOP_K)
         .drop("rk", "proxy", "e_norm")
     )

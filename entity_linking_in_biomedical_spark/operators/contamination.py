@@ -536,7 +536,7 @@ def stream_contamination(
     watermark, any trigger; cost scales as |batch| × |test docs|,
     which is the regime eval sets live in (thousands of docs). For a
     test side too big to cross, run the batch operator per micro-batch
-    via ``foreachBatch`` instead (streaming/incremental.py pattern).
+    via ``foreachBatch`` instead.
 
     Gram hashing is xxhash64, identical to the batch operator, so the
     two agree exactly on the same inputs (asserted in tests).

@@ -20,35 +20,32 @@ candidate_generator.py:36,42).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 from typing import Iterator, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.strings import jaro_winkler_batch, pack_vocab, tfidf_cosine_batch
 
-
-@dataclass(frozen=True)
-class ScoringConfig:
-    """Calibrated logistic weights over (jw, lev_sim, cos, dot)."""
-
-    w_jw: float = 3.0
-    w_lev: float = 2.0
-    w_cos: float = 3.0
-    w_dot: float = 5.0
-    bias: float = -6.5
-    threshold: float = 0.5
-    ngram: int = 3
-    vocab_cap: int = 400_000  # reference's max_features (candidate_generator.py:24)
+# The one match rule (fixed calibration, not a knob): score =
+# sigmoid(W_JW·jw + W_LEV·lev_sim + W_COS·cos + W_DOT·dot + BIAS)
+W_JW = 3.0
+W_LEV = 2.0
+W_COS = 3.0
+W_DOT = 5.0
+BIAS = -6.5
+THRESHOLD = 0.5  # a surface links to its best entity at score >= THRESHOLD
+NGRAM = 3  # char-gram size of both the IDF fit and the cosine lookup
+VOCAB_CAP = 400_000  # reference's max_features (candidate_generator.py:24)
 
 
-def fit_idf(names: DataFrame, ngram: int = 3, vocab_cap: int = 400_000) -> dict[str, float]:
-    """Fit char-n-gram document frequencies over the entity-name corpus
-    (A8). Distributed agg, tiny result (vocab-capped) collected to the
-    driver for broadcast into the scoring UDF. idf = ln((N+1)/(df+1))+1
-    (sklearn smooth_idf, matching the reference's vectorizer)."""
+def fit_idf(names: DataFrame) -> dict[str, float]:
+    """Fit char-``NGRAM`` document frequencies over the entity-name
+    corpus (A8), keeping the ``VOCAB_CAP`` most frequent grams.
+    Distributed agg, tiny result collected to the driver for broadcast
+    into the scoring UDF. idf = ln((N+1)/(df+1))+1 (sklearn smooth_idf,
+    matching the reference's vectorizer)."""
     from ..functions.ngrams import char_ngrams
 
     n_docs = names.count()
@@ -58,33 +55,25 @@ def fit_idf(names: DataFrame, ngram: int = 3, vocab_cap: int = 400_000) -> dict[
     # cap does not bind (char-3-gram vocab over entity names is ~50k;
     # the 400k cap matches the reference's max_features)
     df = (
-        names.select("norm", F.explode(F.array_distinct(char_ngrams("norm", ngram))).alias("g"))
+        names.select("norm", F.explode(F.array_distinct(char_ngrams("norm", NGRAM))).alias("g"))
         .groupBy("g")
         .agg(F.count("*").alias("df"))
         .orderBy(F.desc("df"), F.asc("g"))
-        .limit(vocab_cap)
+        .limit(VOCAB_CAP)
         .collect()
     )
     return {r["g"]: math.log((n_docs + 1) / (r["df"] + 1)) + 1.0 for r in df}
 
 
-def score_pairs(
-    spark: SparkSession,
-    pairs: DataFrame,
-    idf: dict[str, float],
-    cfg: ScoringConfig = ScoringConfig(),
-    a_col: str = "a_norm",
-    b_col: str = "b_norm",
-    a_emb: str | None = None,
-    b_emb: str | None = None,
-) -> DataFrame:
-    """pairs -> pairs + (jw, lev_sim, cos, dot, score).
+def score_pairs(pairs: DataFrame, idf: dict[str, float]) -> DataFrame:
+    """pairs(a_norm, b_norm, ..) -> pairs + (jw, lev_sim, cos, dot, score).
 
-    Embedding columns are optional ``array<float>`` (assumed
-    L2-normalized); when absent the dot feature contributes the neutral
-    value 0.5 (so the calibration doesn't shift)."""
-    idf_bc = spark.sparkContext.broadcast(idf)
-    ngram = cfg.ngram
+    The dot feature reads the ``a_emb``/``b_emb`` ``array<float>``
+    columns (assumed L2-normalized) when ``pairs`` has them, and drops
+    them; without them, or for a pair with a missing vector, it is the
+    neutral value 0.5 (so the calibration doesn't shift)."""
+    idf_bc = pairs.sparkSession.sparkContext.broadcast(idf)
+    ngram = NGRAM
 
     @F.pandas_udf("struct<jw: double, cos: double>")
     def _jw_cos(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
@@ -109,20 +98,20 @@ def score_pairs(
     # a 64-dim double pair is ~1 KB/row, and everything downstream
     # (Arrow eval, groupBy shuffles, checkpoints) would otherwise carry
     # it — measured as the dominant shuffle volume of the scoring stage.
-    if a_emb and b_emb:
+    if "a_emb" in pairs.columns and "b_emb" in pairs.columns:
         from ..functions.vectors import dot_product
 
-        dot = F.coalesce(dot_product(a_emb, b_emb), F.lit(0.5))
-        dot = F.when(F.col(a_emb).isNull() | F.col(b_emb).isNull(), 0.5).otherwise(dot)
-        pairs = pairs.withColumn("dot", dot).drop(a_emb, b_emb)
+        dot = F.coalesce(dot_product("a_emb", "b_emb"), F.lit(0.5))
+        dot = F.when(F.col("a_emb").isNull() | F.col("b_emb").isNull(), 0.5).otherwise(dot)
+        pairs = pairs.withColumn("dot", dot).drop("a_emb", "b_emb")
     else:
         pairs = pairs.withColumn("dot", F.lit(0.5))
-    out = pairs.withColumn("_f", _jw_cos(F.col(a_col), F.col(b_col)))
+    out = pairs.withColumn("_f", _jw_cos(F.col("a_norm"), F.col("b_norm")))
     out = out.withColumn(
         "lev_sim",
         1.0
-        - F.levenshtein(a_col, b_col)
-        / F.greatest(F.length(a_col), F.length(b_col), F.lit(1)),
+        - F.levenshtein("a_norm", "b_norm")
+        / F.greatest(F.length("a_norm"), F.length("b_norm"), F.lit(1)),
     )
     out = (
         out.withColumn("jw", F.col("_f.jw"))
@@ -130,10 +119,10 @@ def score_pairs(
         .drop("_f")
     )
     z = (
-        cfg.w_jw * F.col("jw")
-        + cfg.w_lev * F.col("lev_sim")
-        + cfg.w_cos * F.col("cos")
-        + cfg.w_dot * F.col("dot")
-        + F.lit(cfg.bias)
+        W_JW * F.col("jw")
+        + W_LEV * F.col("lev_sim")
+        + W_COS * F.col("cos")
+        + W_DOT * F.col("dot")
+        + F.lit(BIAS)
     )
     return out.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))

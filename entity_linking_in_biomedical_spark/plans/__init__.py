@@ -1,4 +1,4 @@
-from .pipeline import run_pipeline, PipelineConfig
+from .pipeline import run_pipeline
 from .resume import StageStore
 
-__all__ = ["run_pipeline", "PipelineConfig", "StageStore"]
+__all__ = ["run_pipeline", "StageStore"]

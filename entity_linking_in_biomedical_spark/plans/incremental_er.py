@@ -39,13 +39,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.blocking import surface_blocking_keys
+from ..operators.blocking import MAX_KEY_FREQ, surface_blocking_keys
 from ..operators.clustering import merge_into_clusters
 from ..operators.scoring import score_pairs
 from ..operators.skew import cap_per_key, drop_hot_keys
 from ..session import pin
 from .pipeline import (
-    PipelineConfig,
+    MM_PAIR_CAP,
+    MM_THRESHOLD,
     best_partner_edges,
     relabel_mentions,  # re-exported: callers import it from this module
     run_pipeline,
@@ -79,11 +80,9 @@ def build_surface_index(assignments: DataFrame) -> DataFrame:
 
 
 def _cross_snapshot_edges(
-    spark: SparkSession,
     snap_assignments: DataFrame,
     surface_index: DataFrame,
     embeddings: DataFrame | None,
-    cfg: PipelineConfig,
     idf: dict[str, float],
     surface_keys: DataFrame,
 ) -> DataFrame:
@@ -99,7 +98,7 @@ def _cross_snapshot_edges(
     whatever internal attachment the snapshot's own clustering made —
     so a new surface can carry up to TWO attachment edges where the
     batch run's single-best rule emits one. Both are individually above
-    mm_threshold, so the deviation can only merge clusters the batch
+    MM_THRESHOLD, so the deviation can only merge clusters the batch
     scorer itself rated as matches (bounded extra transitivity, never a
     missed pair); exact single-best-over-the-union semantics would
     require re-deciding the snapshot's internal attachments during the
@@ -121,14 +120,14 @@ def _cross_snapshot_edges(
         .select(F.col("norm").alias("b_norm"), "bk")
         .join(F.broadcast(new_keys.select("bk").distinct()), "bk", "left_semi")
     )
-    old = drop_hot_keys(old, "bk", cfg.max_key_freq)
+    old = drop_hot_keys(old, "bk", MAX_KEY_FREQ)
     pairs = pin(
         F.broadcast(new_keys).join(old, "bk")
         .filter(F.col("norm") != F.col("b_norm"))
         .select(F.col("norm").alias("a_norm"), "b_norm")
         .dropDuplicates(["a_norm", "b_norm"])
     )
-    pairs = cap_per_key(pairs, "a_norm", "b_norm", cfg.mm_pair_cap)
+    pairs = cap_per_key(pairs, "a_norm", "b_norm", MM_PAIR_CAP)
     if embeddings is not None:
         # embeddings may be dictionary-scale: prune to the pair keys
         # (broadcast semi) so the left join's right side is
@@ -138,16 +137,9 @@ def _cross_snapshot_edges(
                 F.col("norm").alias(key), F.col("embedding").alias(out)
             ).join(F.broadcast(pairs.select(key).distinct()), key, "left_semi")
             pairs = pairs.join(F.broadcast(e), key, "left")
-    scored = score_pairs(
-        spark,
-        pairs,
-        idf,
-        cfg.scoring,
-        a_emb="a_emb" if embeddings is not None else None,
-        b_emb="b_emb" if embeddings is not None else None,
-    )
+    scored = score_pairs(pairs, idf)
     return best_partner_edges(
-        scored.filter(F.col("score") >= cfg.mm_threshold), "a_norm", "b_norm"
+        scored.filter(F.col("score") >= MM_THRESHOLD), "a_norm", "b_norm"
     )
 
 
@@ -166,7 +158,6 @@ def link_snapshot(
     prior_assignments: DataFrame | None,
     embeddings: DataFrame | None = None,
     abbr_map: DataFrame | None = None,
-    cfg: PipelineConfig = PipelineConfig(),
     out_dir: str | None = None,
     surface_index: DataFrame | None = None,
 ) -> dict:
@@ -187,7 +178,6 @@ def link_snapshot(
         entities,
         embeddings=embeddings,
         abbr_map=abbr_map,
-        cfg=cfg,
         out_dir=out_dir,
     )
     snap = res["assignments"].select("node", "cluster_id")
@@ -197,7 +187,7 @@ def link_snapshot(
     if surface_index is not None:
         edges = edges.unionByName(
             _cross_snapshot_edges(
-                spark, snap, surface_index, embeddings, cfg,
+                snap, surface_index, embeddings,
                 idf=res["idf"], surface_keys=res["surface_keys"],
             )
         )

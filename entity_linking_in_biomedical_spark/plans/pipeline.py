@@ -22,31 +22,37 @@ holds structurally (SURVEY.md §1.3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from collections import namedtuple
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.blocking import block_candidates, entity_names, surface_blocking_keys
+from ..operators.blocking import (
+    MAX_KEY_FREQ,
+    block_candidates,
+    entity_names,
+    surface_blocking_keys,
+)
 from ..operators.clustering import connected_components
 from ..operators.mentions import extract_mentions
-from ..operators.scoring import ScoringConfig, fit_idf, score_pairs
+from ..operators.scoring import THRESHOLD, fit_idf, score_pairs
 from ..operators.skew import cap_per_key, drop_hot_keys
 from ..session import pin
 from .resume import StageStore, stage_signature
 
+# The mention-mention rule (the snapshot fold's cross-snapshot probe
+# reads the same two values)
+MM_THRESHOLD = 0.7  # mention-mention edges need more evidence than THRESHOLD
+MM_PAIR_CAP = 20  # max scored mention-mention partners per surface
 
-@dataclass(frozen=True)
+
 class PipelineConfig:
-    scoring: ScoringConfig = ScoringConfig()
-    mm_threshold: float = 0.7  # mention-mention edges need more evidence
-    max_key_freq: int = 64  # keys shared by more entities discriminate nothing
-    top_k: int = 32  # reference's hardest-negative count (dataset.py:103)
-    mm_pair_cap: int = 20  # max scored mention-mention partners per surface
+    """Read-only view of ``THRESHOLD`` and ``MM_THRESHOLD``. Nothing in
+    the package reads it; it exists because the benchmark harness reads
+    ``PipelineConfig().scoring.threshold`` and ``.mm_threshold``."""
 
-    def params(self) -> dict:
-        d = dict(self.__dict__)
-        d["scoring"] = dict(self.scoring.__dict__)
-        return d
+    __slots__ = ()
+    scoring = namedtuple("Scoring", "threshold")(THRESHOLD)
+    mm_threshold = MM_THRESHOLD
 
 
 # ---- match rules shared by the batch run and the snapshot fold ----
@@ -126,7 +132,40 @@ def _check_columns(inputs: dict[str, DataFrame | None]) -> None:
             )
 
 
-def _input_fingerprint(df: DataFrame) -> list:
+def _embedding_rows(embeddings: DataFrame) -> int:
+    """Row count of the embeddings lookup, from one aggregate that also
+    checks the vectors: ragged lengths (a zero-length vector among full
+    ones included) or a NaN/±inf component raise a ``ValueError`` here
+    instead of giving a null or NaN ``dot`` later. This is the run's one
+    embeddings job; the input fingerprint and the broadcast gate both
+    read its count. A null vector is allowed (its pairs score with the
+    neutral dot)."""
+    v = F.col("embedding")
+    size = F.when(v.isNotNull(), F.size(v))
+    finite = F.forall(v, lambda x: ~F.isnan(x) & (F.abs(x) != float("inf")))
+    row = embeddings.agg(
+        F.count("*").alias("rows"),
+        F.min(size).alias("min_dim"),
+        F.max(size).alias("max_dim"),
+        F.min_by("norm", size).alias("shortest"),
+        F.max_by("norm", size).alias("longest"),
+        F.min(F.when(~finite, F.col("norm"))).alias("non_finite"),
+    ).collect()[0]
+    if row["min_dim"] != row["max_dim"]:
+        raise ValueError(
+            f"embeddings are ragged: vector lengths range from {row['min_dim']} "
+            f"(norm {row['shortest']!r}) to {row['max_dim']} (norm "
+            f"{row['longest']!r}); every vector must have the same length"
+        )
+    if row["non_finite"] is not None:
+        raise ValueError(
+            f"embeddings hold a NaN or infinite component (norm "
+            f"{row['non_finite']!r}); every component must be finite"
+        )
+    return row["rows"]
+
+
+def _input_fingerprint(df: DataFrame, rows: int | None = None) -> list:
     """Stable identity fingerprint of a pipeline input for stage
     signatures. semanticHash covers source paths + transformations, but
     a (local)checkpoint-backed frame analyzes to a LogicalRDD whose
@@ -135,13 +174,13 @@ def _input_fingerprint(df: DataFrame) -> list:
     those frames fall back to (schema md5, row count): weaker (a
     content change preserving both goes unnoticed — same caveat as an
     in-place file change under an unchanged path) but stable across
-    runs."""
+    runs. ``rows``, when given, is the frame's already-taken count."""
     import hashlib
 
     plan = df._jdf.queryExecution().analyzed().toString()  # type: ignore[operator]
     if "LogicalRDD" in plan or "ExistingRDD" in plan:
         schema_md5 = hashlib.md5(df.schema.json().encode()).hexdigest()
-        return ["schema", schema_md5, "rows", df.count()]
+        return ["schema", schema_md5, "rows", df.count() if rows is None else rows]
     return [df.semanticHash()]
 
 
@@ -152,19 +191,25 @@ def run_pipeline(
     embeddings: DataFrame | None = None,
     abbr_map: DataFrame | None = None,
     split_ids: DataFrame | None = None,
-    cfg: PipelineConfig = PipelineConfig(),
     out_dir: str | None = None,
 ) -> dict:
     """Returns dict with DataFrames: mentions, candidates, me_scores,
     mm_scores, assignments, mention_clusters, linked_documents — plus
     'metrics' (list) and 'cc_iterations' (int).
 
+    The match rules are fixed: the blocking key set and caps
+    (``operators/blocking.py``), the scoring logistic and ``THRESHOLD``
+    (``operators/scoring.py``), and ``MM_THRESHOLD``/``MM_PAIR_CAP``
+    here.
     ``embeddings``: optional (norm string, embedding array<float>)
-    lookup used for the dense dot-product feature.
+    lookup used for the dense dot-product feature. Its vectors must all
+    have one length and finite components, or a ``ValueError`` names
+    the problem (see :func:`_embedding_rows`).
     ``out_dir``: when set, each stage commits a Parquet snapshot +
-    manifest there and re-runs resume from the last committed stage. It
-    is a filesystem path visible to the driver and every executor (a
-    ``scheme://`` URI is rejected, see :class:`StageStore`).
+    manifest there and re-runs resume from the last committed stage
+    whose inputs are unchanged. It is a filesystem path visible to the
+    driver and every executor (a ``scheme://`` URI is rejected, see
+    :class:`StageStore`).
     A missing required input column raises a ``ValueError`` naming the
     input and the column (see ``_REQUIRED_COLUMNS``).
     """
@@ -178,24 +223,20 @@ def run_pipeline(
         }
     )
     store = StageStore(spark, out_dir)
-    p = cfg.params()
+    emb_rows = None if embeddings is None else _embedding_rows(embeddings)
+    p: dict = {}
     # input-identity fingerprints (semanticHash of each source plan:
     # covers paths + upstream transformations) fold into every stage
     # signature, so a re-run against different inputs into the same
     # out_dir recomputes instead of serving stale snapshots. Signatures
     # are only consulted when snapshots persist, so skip the (possibly
     # count-bearing) fingerprints entirely when out_dir is None.
-    emb_rows = None
     if out_dir is not None:
-        emb_fp = _input_fingerprint(embeddings) if embeddings is not None else None
         p["input_fp"] = [
-            emb_fp if df is embeddings else _input_fingerprint(df)
+            _input_fingerprint(df, emb_rows if df is embeddings else None)
             for df in (documents, entities, embeddings, abbr_map, split_ids)
             if df is not None
         ]
-        if emb_fp is not None and emb_fp[0] == "schema":
-            emb_rows = emb_fp[3]  # the broadcast gate below reuses it
-    tau = cfg.scoring.threshold
 
     if split_ids is not None:
         # P1 split semi-join (the reference's PMID split-list filter,
@@ -234,28 +275,19 @@ def run_pipeline(
     cands = store.get_or_compute(
         "candidates",
         sig_cands,
-        lambda: block_candidates(
-            mentions,
-            names,
-            max_key_freq=cfg.max_key_freq,
-            top_k=cfg.top_k,
-            surface_keys=surf_keys,
-        ),
+        lambda: block_candidates(mentions, names, surface_keys=surf_keys),
     )
 
     # ---- stage 3: pairwise scoring -----------------------------------
-    idf = fit_idf(names, ngram=cfg.scoring.ngram, vocab_cap=cfg.scoring.vocab_cap)
+    idf = fit_idf(names)
 
     # Attach-join strategy for the embedding lookup (guide §3.1:
     # broadcast the side that fits, decided by size, not by hope): the
     # checkpointed lookup hides its statistics from the planner, so
     # without the hint every attach was a sort-merge join that shuffled
-    # the pair frame. One cheap count gates the hint (the fingerprint's,
-    # when it took one); at corpus scale (per-surface embeddings) the
-    # count exceeds the cap and the joins stay shuffled — identical
-    # results either way.
-    if embeddings is not None and emb_rows is None:
-        emb_rows = embeddings.count()
+    # the pair frame. The embeddings check's row count gates the hint; at
+    # corpus scale (per-surface embeddings) the count exceeds the cap and
+    # the joins stay shuffled — identical results either way.
     emb_bcast = emb_rows is not None and emb_rows <= 200_000
 
     def _emb_side(key: str, out: str) -> DataFrame:
@@ -291,14 +323,7 @@ def run_pipeline(
             "block_key",
             *(["a_emb", "b_emb"] if embeddings is not None else []),
         )
-        scored = score_pairs(
-            spark,
-            pairs,
-            idf,
-            cfg.scoring,
-            a_emb="a_emb" if embeddings is not None else None,
-            b_emb="b_emb" if embeddings is not None else None,
-        )
+        scored = score_pairs(pairs, idf)
         return scored.groupBy("a_norm", "cui").agg(
             F.max("score").alias("score"), F.min("block_key").alias("block_key")
         )
@@ -313,7 +338,7 @@ def run_pipeline(
         # variants cluster together without an entity bridge.
         # Reuses the stage-2 keying frame (surf_keys) — the identical
         # blocking_keys explode was previously derived twice per job.
-        b = drop_hot_keys(surf_keys, "bk", cfg.max_key_freq)
+        b = drop_hot_keys(surf_keys, "bk", MAX_KEY_FREQ)
         pairs = (
             b.alias("x")
             .join(b.alias("y"), "bk")
@@ -325,19 +350,12 @@ def run_pipeline(
             )
             .dropDuplicates(["a_norm", "b_norm"])
         )
-        # at most mm_pair_cap partners per surface: bounds the scoring
+        # at most MM_PAIR_CAP partners per surface: bounds the scoring
         # fan-out on hot surfaces
-        pairs = cap_per_key(pairs, "a_norm", "b_norm", cfg.mm_pair_cap)
+        pairs = cap_per_key(pairs, "a_norm", "b_norm", MM_PAIR_CAP)
         pairs = with_emb(pairs, "a_norm", "a_emb")
         pairs = with_emb(pairs, "b_norm", "b_emb")
-        scored = score_pairs(
-            spark,
-            pairs,
-            idf,
-            cfg.scoring,
-            a_emb="a_emb" if embeddings is not None else None,
-            b_emb="b_emb" if embeddings is not None else None,
-        )
+        scored = score_pairs(pairs, idf)
         return scored.select("a_norm", "b_norm", "block_key", "score")
 
     sig_mm = stage_signature("mm_scores", p, [sig_mentions])
@@ -352,7 +370,7 @@ def run_pipeline(
         # merely share a similar surface.
         w_me = Window.partitionBy("a_norm").orderBy(F.desc("score"), F.asc("cui"))
         me_top1 = (
-            me_scores.filter(F.col("score") >= tau)
+            me_scores.filter(F.col("score") >= THRESHOLD)
             .withColumn("rk", F.row_number().over(w_me))
             .filter(F.col("rk") == 1)
             .drop("rk")
@@ -366,11 +384,10 @@ def run_pipeline(
         # mention-mention attachment: only surfaces with NO entity link
         # attach, and each to its single best partner — an unlinked
         # surface must never become a bridge that merges two entities.
-        mm_tau = cfg.mm_threshold
-        both_dirs = mm_scores.filter(F.col("score") >= mm_tau).select(
+        both_dirs = mm_scores.filter(F.col("score") >= MM_THRESHOLD).select(
             F.col("a_norm").alias("s_norm"), F.col("b_norm").alias("p_norm"), "score"
         ).unionByName(
-            mm_scores.filter(F.col("score") >= mm_tau).select(
+            mm_scores.filter(F.col("score") >= MM_THRESHOLD).select(
                 F.col("b_norm").alias("s_norm"), F.col("a_norm").alias("p_norm"), "score"
             )
         )

@@ -39,16 +39,17 @@ from ..session import pin
 
 def stage_signature(stage: str, params: dict, parents: list[str]) -> str:
     """md5 of the stage name, its parameters and its parents'
-    signatures. A signature covers settings and inputs only: the
-    blocking key set (operators/blocking.py constants) is code, like
-    every other rule in that module, so changing it calls for a fresh
-    out_dir. Input identity belongs in ``params``: run_pipeline
-    folds each source DataFrame's fingerprint into
-    ``params["input_fp"]``, so re-running into the same out_dir with
-    *different inputs* but identical settings recomputes instead of
-    serving the stale committed snapshot. A fingerprint does not see
-    in-place content changes under an unchanged path — for that, use a
-    fresh out_dir per dataset version (documented contract)."""
+    signatures. A signature covers inputs only: run_pipeline's
+    ``params`` are each source DataFrame's fingerprint
+    (``params["input_fp"]``) and whether a split filter applies, so
+    re-running into the same out_dir with *different inputs* recomputes
+    instead of serving the stale committed snapshot. The match rules
+    (the blocking key set and caps, the scoring weights and thresholds:
+    module constants in operators/blocking.py, operators/scoring.py and
+    plans/pipeline.py) are code, so changing one calls for a fresh
+    out_dir. A fingerprint does not see in-place content changes under
+    an unchanged path — for that, use a fresh out_dir per dataset
+    version (documented contract)."""
     payload = json.dumps(
         {"stage": stage, "params": params, "parents": parents},
         sort_keys=True,

@@ -46,6 +46,42 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager, storageLevel=barrier_level())
 
 
+# Confs the engine relies on, whatever starts the session: get_spark
+# sets them, and the CLI's spark-submit path layers them on the
+# submitted conf (engine_builder).
+ENGINE_CONF = {
+    # AQE: runtime coalesce of tiny shuffle partitions, broadcast-join
+    # conversion, and automatic skew-join splitting for the pair joins.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # AQE coalescing floor kept at the 1 MB default deliberately: a
+    # 64 KB floor widens the compute-heavy consumers of small
+    # shuffles (the entity-keying explode coalesces to ONE task,
+    # the pair-scoring Arrow stage to six), but an interleaved A/B
+    # on the full ER pipeline measured the extra small tasks as a
+    # net 1.4-1.6x LOSS on this memory-bandwidth-starved host
+    # (OPTIMIZATION_r06.md); override per-run when profiling via
+    # EL_SPARK_EXTRA_CONF.
+    # Arrow on for every pandas UDF / toPandas boundary.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    # lz4 for serialized storage blocks — the barrier policy above
+    # stores barriers serialized, and compressed blocks halve the
+    # DRAM traffic their re-reads cost (no effect on deserialized
+    # storage or on shuffle, which compresses independently).
+    "spark.rdd.compress": "true",
+}
+
+
+def engine_builder(app_name: str) -> SparkSession.Builder:
+    """A session builder carrying ``ENGINE_CONF``."""
+    b = SparkSession.builder.appName(app_name)
+    for k, v in ENGINE_CONF.items():
+        b = b.config(k, v)
+    return b
+
+
 def get_spark(
     app_name: str = "el-spark",
     master: str | None = None,
@@ -62,31 +98,10 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or max(2 * n, 8)
 
     b = (
-        SparkSession.builder.appName(app_name)
+        engine_builder(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(n))
-        # AQE: runtime coalesce of tiny shuffle partitions, broadcast-join
-        # conversion, and automatic skew-join splitting for the pair joins.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing floor kept at the 1 MB default deliberately: a
-        # 64 KB floor widens the compute-heavy consumers of small
-        # shuffles (the entity-keying explode coalesces to ONE task,
-        # the pair-scoring Arrow stage to six), but an interleaved A/B
-        # on the full ER pipeline measured the extra small tasks as a
-        # net 1.4-1.6x LOSS on this memory-bandwidth-starved host
-        # (OPTIMIZATION_r06.md); override per-run when profiling via
-        # EL_SPARK_EXTRA_CONF.
-        # Arrow on for every pandas UDF / toPandas boundary.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # lz4 for serialized storage blocks — the barrier policy above
-        # stores barriers serialized, and compressed blocks halve the
-        # DRAM traffic their re-reads cost (no effect on deserialized
-        # storage or on shuffle, which compresses independently).
-        .config("spark.rdd.compress", "true")
         # Deterministic timestamps in tests / oracle comparisons.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

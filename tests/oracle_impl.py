@@ -22,11 +22,13 @@ from entity_linking_in_biomedical_spark.operators.blocking import (
     GRAM_SIZES,
     LSH_MIN_LEN,
     NUM_HASHES,
+    MAX_KEY_FREQ,
+    TOP_K,
     WORD_NUM_HASHES,
 )
+from entity_linking_in_biomedical_spark.operators import scoring as S
 from entity_linking_in_biomedical_spark.operators.mentions import _sweep
-from entity_linking_in_biomedical_spark.operators.scoring import ScoringConfig
-from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
+from entity_linking_in_biomedical_spark.plans.pipeline import MM_PAIR_CAP, MM_THRESHOLD
 
 
 def nk(s: str) -> str:
@@ -158,19 +160,20 @@ def fit_idf_py(norms: list[str], ngram: int, vocab_cap: int) -> dict:
     return {g: math.log((len(norms) + 1) / (d + 1)) + 1.0 for g, d in top}
 
 
-def score(a: str, b: str, idf: dict, emb: dict, cfg: ScoringConfig) -> float:
+def score(a: str, b: str, idf: dict, emb: dict) -> float:
+    """The package's match score; the scoring constants are read at
+    call time, so a test that patches one (``S.NGRAM``) patches both."""
     jw = jaro_winkler(a, b)
     ls = 1.0 - lev(a, b) / max(len(a), len(b), 1)
-    cos = tfidf_cosine(a, b, idf, n=cfg.ngram)
+    cos = tfidf_cosine(a, b, idf, n=S.NGRAM)
     ea, eb = emb.get(a), emb.get(b)
     dot = sum(x * y for x, y in zip(ea, eb)) if ea and eb else 0.5
-    z = cfg.w_jw * jw + cfg.w_lev * ls + cfg.w_cos * cos + cfg.w_dot * dot + cfg.bias
+    z = S.W_JW * jw + S.W_LEV * ls + S.W_COS * cos + S.W_DOT * dot + S.BIAS
     return 1.0 / (1.0 + math.exp(-z))
 
 
-def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = True) -> dict:
+def run_oracle(corpus, use_emb: bool = True) -> dict:
     """Returns {(doc_id, span_seq): cluster_id} over surviving mentions."""
-    sc = cfg.scoring
     emb = corpus.embeddings if use_emb else {}
 
     abbr = {(a["doc_id"], a["abbr"]): a["long_form"] for a in corpus.abbr_map}
@@ -197,7 +200,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
                 seen.add((e["cui"], n))
                 names.append((e["cui"], n))
 
-    idf = fit_idf_py([n for _, n in names], sc.ngram, sc.vocab_cap)
+    idf = fit_idf_py([n for _, n in names], S.NGRAM, S.VOCAB_CAP)
 
     # stage 2: blocking (unified exact + deletion + LSH keys)
     ent_by_norm = defaultdict(set)
@@ -207,7 +210,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
     for cui, n in names:
         for bk in blocking_keys_py(n):
             ent_by_key[bk].add(cui)
-    hot = {bk for bk, cuis in ent_by_key.items() if len(cuis) > cfg.max_key_freq}
+    hot = {bk for bk, cuis in ent_by_key.items() if len(cuis) > MAX_KEY_FREQ}
     cands = defaultdict(set)  # norm -> set(cui)
     for s in surfaces:
         for bk in blocking_keys_py(s):
@@ -220,7 +223,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
         rep[cui] = min(rep.get(cui, n), n)
     for s in list(cands):
         cs = cands[s]
-        if len(cs) > cfg.top_k:
+        if len(cs) > TOP_K:
             def proxy(c):
                 # has_exact mirrors Spark: the x| key must have
                 # SURVIVED the hot-key cap
@@ -228,7 +231,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
                     return (-2.0, c)
                 e = rep[c]
                 return (-(1.0 - lev(s, e) / max(len(s), len(e), 1)), c)
-            cands[s] = set(sorted(cs, key=proxy)[: cfg.top_k])
+            cands[s] = set(sorted(cs, key=proxy)[:TOP_K])
 
     # stage 3: scoring — argmax entity link per surface (top-1, tie -> min cui)
     syns_by_cui = defaultdict(list)
@@ -241,11 +244,11 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
     for s, cs in cands.items():
         scored = sorted(
             (
-                (-max(score(s, n, idf, emb, sc) for n in syns_by_cui[cui]), cui)
+                (-max(score(s, n, idf, emb) for n in syns_by_cui[cui]), cui)
                 for cui in cs
             ),
         )
-        if scored and -scored[0][0] >= sc.threshold:
+        if scored and -scored[0][0] >= S.THRESHOLD:
             uf.union("s|" + s, "e|" + scored[0][1])
             linked.add(s)
 
@@ -261,7 +264,7 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
 
     pair_partners = defaultdict(set)
     for bk, members in surf_by_band.items():
-        if len(members) > cfg.max_key_freq:
+        if len(members) > MAX_KEY_FREQ:
             continue
         ms = sorted(set(members))
         for i in range(len(ms)):
@@ -270,10 +273,10 @@ def run_oracle(corpus, cfg: PipelineConfig = PipelineConfig(), use_emb: bool = T
     # scored, thresholded, undirected pair set (after the directional cap)
     mm_ok: dict[str, list[tuple[float, str]]] = defaultdict(list)
     for a, partners in pair_partners.items():
-        chosen = sorted(partners, key=md5_order)[: cfg.mm_pair_cap]
+        chosen = sorted(partners, key=md5_order)[:MM_PAIR_CAP]
         for b in chosen:
-            sij = score(a, b, idf, emb, sc)
-            if sij >= cfg.mm_threshold:
+            sij = score(a, b, idf, emb)
+            if sij >= MM_THRESHOLD:
                 mm_ok[a].append((sij, b))
                 mm_ok[b].append((sij, a))
     # only unlinked surfaces attach, each to its single best partner

@@ -79,19 +79,25 @@ def test_exact_and_typo_candidates(spark):
     assert not any(n == "zzz999xx" for n, _ in pairs)
 
 
-def test_hot_key_cap_drops_mega_blocks(spark):
+def test_hot_key_cap_drops_mega_blocks(spark, monkeypatch):
     # 100 entities share the same norm -> the x| key is hot and dropped
+    import entity_linking_in_biomedical_spark.operators.blocking as B
+
+    monkeypatch.setattr(B, "MAX_KEY_FREQ", 50)
     mentions = _mentions(spark, ["shared name"])
     names = _names(spark, [(f"C{i}", "shared name") for i in range(100)])
-    got = block_candidates(mentions, names, max_key_freq=50)
+    got = block_candidates(mentions, names)
     assert got.count() == 0
 
 
-def test_top_k_cap(spark):
+def test_top_k_cap(spark, monkeypatch):
+    import entity_linking_in_biomedical_spark.operators.blocking as B
+
+    monkeypatch.setattr(B, "TOP_K", 5)
     mentions = _mentions(spark, ["akx"])
-    # 40 near-matching entities; top_k=5 keeps 5
+    # 40 near-matching entities; TOP_K=5 keeps 5
     names = _names(spark, [(f"C{i:02d}", "ak" + chr(97 + i % 26)) for i in range(40)])
-    got = block_candidates(mentions, names, top_k=5)
+    got = block_candidates(mentions, names)
     assert got.filter(F.col("norm") == "akx").count() <= 5
 
 

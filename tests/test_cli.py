@@ -504,3 +504,29 @@ def test_cli_stitch_stable_ids(tmp_path):
         f"select doc_id, cluster_id from read_parquet('{out}/*.parquet')"
     ).fetchall())
     assert rows == {"1": "A", "2": "A", "3": "B", "4": "new:z"}
+
+
+def test_spark_submit_session_carries_engine_conf(spark, monkeypatch):
+    """Under spark-submit (no --master) the CLI adopts the submitted
+    session but layers on every conf the engine relies on, the same
+    values get_spark sets: AQE with coalescing and skew-join splitting,
+    Arrow and its batch size, and lz4 for the serialized barrier
+    blocks (``spark.rdd.compress``)."""
+    from pyspark.sql import SparkSession
+
+    from entity_linking_in_biomedical_spark import cli
+
+    required = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.rdd.compress": "true",
+    }
+    conf = spark.sparkContext.getConf()  # the session get_spark built
+    assert {k: conf.get(k) for k in required} == required
+    # capture the builder's options instead of starting a session
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: dict(b._options))
+    submitted = cli._session(None)
+    assert {k: submitted.get(k) for k in required} == required

@@ -9,7 +9,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig, run_pipeline
+from entity_linking_in_biomedical_spark.plans.pipeline import run_pipeline
 from tests.oracle_impl import fit_idf_py, run_oracle
 
 
@@ -111,49 +111,50 @@ def test_determinism_across_parallelism(spark, corpus):
     assert r2 == r13
 
 
-def test_fit_idf_cap_keeps_most_frequent_grams(spark, corpus):
+def test_fit_idf_cap_keeps_most_frequent_grams(spark, corpus, monkeypatch):
     """With the vocabulary over the cap, fit_idf keeps the cap's most
     frequent grams (ties by gram), as the oracle's rule does."""
+    import entity_linking_in_biomedical_spark.operators.scoring as S
     from entity_linking_in_biomedical_spark.operators.blocking import entity_names
-    from entity_linking_in_biomedical_spark.operators.scoring import fit_idf
 
     _, ents, *_ = corpus.to_spark(spark)
     names = entity_names(ents)
     norms = [r["norm"] for r in names.collect()]
     full = fit_idf_py(norms, 3, 10**9)
     assert len(full) > 50  # the cap binds
-    got = fit_idf(names, ngram=3, vocab_cap=50)
+    monkeypatch.setattr(S, "VOCAB_CAP", 50)
+    got = S.fit_idf(names)
     assert got == fit_idf_py(norms, 3, 50)
     assert len(got) == 50
 
 
-def test_scoring_ngram_sizes_idf_fit_and_cosine(spark, corpus):
-    """One gram size, ``ScoringConfig.ngram``, drives both the IDF fit
-    and the cosine lookup: under ngram=2 the fitted vocabulary holds
-    only grams of <= 2 chars, and the cos feature and the mention-mention
-    scores equal the oracle's 2-gram ones (a 3-gram fit would make every
-    2-gram lookup fall back to idf 1.0)."""
+def test_scoring_ngram_sizes_idf_fit_and_cosine(spark, corpus, monkeypatch):
+    """One gram size, ``scoring.NGRAM``, drives both the IDF fit and the
+    cosine lookup: under NGRAM=2 the fitted vocabulary holds only grams
+    of <= 2 chars, and the cos feature and the mention-mention scores
+    equal the oracle's 2-gram ones (a 3-gram fit would make every 2-gram
+    lookup fall back to idf 1.0)."""
+    import entity_linking_in_biomedical_spark.operators.scoring as S
     from entity_linking_in_biomedical_spark.functions.strings import tfidf_cosine
     from entity_linking_in_biomedical_spark.operators.blocking import entity_names
-    from entity_linking_in_biomedical_spark.operators.scoring import ScoringConfig, score_pairs
     from tests.oracle_impl import score
 
+    monkeypatch.setattr(S, "NGRAM", 2)
     docs, ents, _, abbr, _ = corpus.to_spark(spark)
-    cfg = PipelineConfig(scoring=ScoringConfig(ngram=2))
-    res = run_pipeline(spark, docs, ents, abbr_map=abbr, cfg=cfg)
+    res = run_pipeline(spark, docs, ents, abbr_map=abbr)
     idf = res["idf"]
     assert idf and max(map(len, idf)) <= 2
     norms = [r["norm"] for r in entity_names(ents).collect()]
-    want_idf = fit_idf_py(norms, 2, cfg.scoring.vocab_cap)
+    want_idf = fit_idf_py(norms, 2, S.VOCAB_CAP)
     assert idf == pytest.approx(want_idf)
 
     mm = res["mm_scores"].select("a_norm", "b_norm", F.col("score").alias("mm_score"))
-    rows = score_pairs(spark, mm, idf, cfg.scoring).collect()
+    rows = S.score_pairs(mm, idf).collect()
     assert rows
     for r in rows:
         a, b = r["a_norm"], r["b_norm"]
         assert r["cos"] == pytest.approx(tfidf_cosine(a, b, want_idf, n=2), abs=1e-9)
-        assert r["mm_score"] == pytest.approx(score(a, b, want_idf, {}, cfg.scoring), abs=1e-9)
+        assert r["mm_score"] == pytest.approx(score(a, b, want_idf, {}), abs=1e-9)
 
 
 @pytest.mark.parametrize(
@@ -182,3 +183,66 @@ def test_missing_input_column_fails_before_any_job(spark, corpus, name, column):
     with pytest.raises(ValueError, match=f"input '{name}' is missing required column.*'{column}'"):
         run_pipeline(spark, **inputs)
     assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() == before
+
+
+@pytest.mark.parametrize(
+    "bad, problem",
+    [
+        ("longer", "ragged"),
+        ("empty", "ragged"),
+        ("nan", "NaN or infinite"),
+        ("inf", "NaN or infinite"),
+        ("-inf", "NaN or infinite"),
+    ],
+)
+def test_bad_embeddings_fail_at_the_boundary(spark, corpus, bad, problem):
+    """One vector of another length (a zero-length one included) or a
+    non-finite component raises one ValueError naming the problem,
+    instead of a null or NaN dot feature."""
+    docs, ents, _, abbr, _ = corpus.to_spark(spark)
+    emb = corpus.embeddings_df(spark)
+    vec = list(emb.first()["embedding"])
+    bad_vec = {
+        "longer": vec + [0.0],
+        "empty": [],
+        "nan": [float("nan")] + vec[1:],
+        "inf": vec[:-1] + [float("inf")],
+        "-inf": [float("-inf")] + vec[1:],
+    }[bad]
+    emb = emb.unionByName(spark.createDataFrame([("zz bad vector", bad_vec)], emb.schema))
+    with pytest.raises(ValueError, match=f"{problem}.*'zz bad vector'"):
+        run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr)
+
+
+@pytest.mark.parametrize("persist", [False, True])
+def test_embedding_check_is_the_runs_one_embeddings_job(
+    spark, corpus, tmp_path, monkeypatch, persist
+):
+    """The embeddings check costs what the row count it replaces did:
+    it submits as many jobs as ``count()``, run_pipeline takes it once,
+    with or without a stage store, and never counts the embeddings
+    frame itself (the fingerprint and the broadcast gate read the
+    check's count)."""
+    from pyspark.sql import DataFrame
+
+    import entity_linking_in_biomedical_spark.plans.pipeline as P
+
+    docs, ents, _, abbr, _ = corpus.to_spark(spark)
+    emb = corpus.embeddings_df(spark)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(fn):
+        before = dag.nextJobId()
+        fn()
+        return dag.nextJobId() - before
+
+    assert jobs(lambda: P._embedding_rows(emb)) == jobs(emb.count)
+
+    checks, counted = [], []
+    orig_rows, orig_count = P._embedding_rows, DataFrame.count
+    monkeypatch.setattr(P, "_embedding_rows", lambda df: checks.append(df) or orig_rows(df))
+    monkeypatch.setattr(DataFrame, "count", lambda df: counted.append(df) or orig_count(df))
+    out_dir = str(tmp_path / "run") if persist else None
+    run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr, out_dir=out_dir)
+    assert len(checks) == 1 and checks[0] is emb
+    assert not any(df is emb for df in counted)

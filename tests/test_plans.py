@@ -104,7 +104,7 @@ def test_scoring_single_python_boundary(spark, corpus):
     import re
 
     pairs = spark.createDataFrame([("abc", "abd")], "a_norm string, b_norm string")
-    scored = score_pairs(spark, pairs, {})
+    scored = score_pairs(pairs, {})
     plan = plan_of(scored)
     # exactly one Arrow eval node (detail headers are unique per node),
     # and never the row-at-a-time BatchEvalPython

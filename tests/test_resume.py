@@ -166,20 +166,12 @@ def test_pipeline_registers_no_catalog_table(spark, corpus, tmp_path):
     assert not [t for t in tables if t.startswith("el_stage_")], tables
 
 
-def test_config_change_invalidates(spark, corpus, tmp_path):
-    from entity_linking_in_biomedical_spark.plans.pipeline import PipelineConfig
-    from entity_linking_in_biomedical_spark.operators.scoring import ScoringConfig
-
+def test_input_change_invalidates(spark, corpus, tmp_path):
+    """Stage signatures cover the inputs: re-running into the same
+    out_dir with a different entities frame resumes nothing."""
     docs, ents, _, abbr, _ = corpus.to_spark(spark)
     out_dir = str(tmp_path / "run")
     run_pipeline(spark, docs, ents, abbr_map=abbr, out_dir=out_dir)
-    r = run_pipeline(
-        spark,
-        docs,
-        ents,
-        abbr_map=abbr,
-        out_dir=out_dir,
-        cfg=PipelineConfig(scoring=ScoringConfig(threshold=0.6)),
-    )
-    # different params -> different signatures -> nothing resumed
+    fewer = ents.filter(F.col("cui") != ents.first()["cui"])
+    r = run_pipeline(spark, docs, fewer, abbr_map=abbr, out_dir=out_dir)
     assert not any(m.get("resumed") for m in r["metrics"])

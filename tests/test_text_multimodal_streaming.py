@@ -1,5 +1,4 @@
-"""Text-analytics column functions, media-feature plumbing, and the
-streaming front-end."""
+"""Text-analytics column functions and media-feature plumbing."""
 
 from __future__ import annotations
 
@@ -285,30 +284,6 @@ def test_sample_frames(spark, corpus):
     assert [round(x, 5) for x in f0["frame_feature"]] == [
         round(x, 5) for x in expect
     ]
-
-
-def test_streaming_link(spark, corpus, tmp_path):
-    from entity_linking_in_biomedical_spark.streaming.incremental import link_stream_exact
-
-    docs, ents, *_ = corpus.to_spark(spark)
-    src = str(tmp_path / "stream_src")
-    docs.limit(30).write.parquet(src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    linked = link_stream_exact(stream, ents)
-    q = (
-        linked.writeStream.format("memory")
-        .queryName("linked_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("select * from linked_stream")
-    assert out.count() > 0
-    # exact-channel semantics: any non-null cui must be a real dictionary hit
-    names = {r["norm"] for r in ents.select(F.explode("synonyms").alias("n")).selectExpr(
-        "trim(regexp_replace(lower(n), '[^a-z0-9]+', ' ')) as norm").collect()}
-    for r in out.filter("cui is not null").collect():
-        assert r["norm"] in names
 
 
 def test_sample_frames_zero_frames(spark):

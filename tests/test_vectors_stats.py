@@ -1,12 +1,10 @@
-"""mean_pool (A9) + block skew metrics."""
+"""mean_pool (A9)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.functions.vectors import mean_pool
-from entity_linking_in_biomedical_spark.operators.blocking import block_size_stats
 
 
 def test_mean_pool(spark):
@@ -30,12 +28,3 @@ def test_mean_pool_groupwise(spark):
     rows = pooled.collect()
     assert rows and all(len(r["centroid"]) == 64 for r in rows)
 
-
-def test_block_size_stats(spark):
-    cands = spark.createDataFrame(
-        [("a", "C1", "k1"), ("b", "C1", "k1"), ("c", "C2", "k1"), ("d", "C3", "k2")],
-        "norm string, cui string, block_key string",
-    )
-    s = block_size_stats(cands)
-    assert s["max"] == 3.0 and s["n_blocks"] == 2.0
-    assert s["p50"] in (1.0, 2.0, 3.0)
