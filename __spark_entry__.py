@@ -54,10 +54,7 @@ from entity_linking_in_biomedical_spark.operators.similarity import (
     ivf_recall_at_k,
     lsh_recall_at_k,
 )
-
-
-# One default-config scan split (spark.sql.files.maxPartitionBytes).
-_ONE_SPLIT_BYTES = 128 * 1024 * 1024
+from entity_linking_in_biomedical_spark.session import pin, sql_conf
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,7 +67,8 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     files, so a query's scan stage runs as ONE task regardless of
     cluster size. For queries whose scan feeds heavy per-row compute
     (regex/md5/shingle kernels, pandas-UDF scoring, per-pair windows),
-    an input smaller than one scan split is spread round-robin across
+    an input smaller than one scan split (the session's
+    ``spark.sql.files.maxPartitionBytes``) is spread round-robin across
     the cluster behind a lazy barrier (so branching consumers share one
     materialization); inputs big enough to split naturally — any
     real-scale table — pass through untouched, keeping the 100 TB plan
@@ -95,9 +93,7 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     except OSError:
         return df
-    if size < _ONE_SPLIT_BYTES:
-        from entity_linking_in_biomedical_spark.session import pin
-
+    if size < sql_conf(spark).filesMaxPartitionBytes():
         df = pin(df.repartition(spark.sparkContext.defaultParallelism))
     return df
 

@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from ..functions.ngrams import char_ngrams_multi, lsh_band_keys, minhash_signature
 from ..functions.normalize import norm_key
 from ..session import pin
+from .skew import drop_hot_keys
 
 
 def entity_names(entities: DataFrame) -> DataFrame:
@@ -254,37 +255,32 @@ def max_candidates_per_surface(cands: DataFrame, norm_col: str = "norm") -> int:
 
 
 def block_candidates(
-    mentions: DataFrame,
+    surface_keys: DataFrame,
     names: DataFrame,
-    surface_keys: DataFrame | None = None,
     skew_assert: bool = False,
 ) -> DataFrame:
-    """mentions(.., norm) × names(cui, norm) -> candidates
+    """surface_keys(norm, bk) × names(cui, norm) -> candidates
     (norm, cui, channel, block_key, has_exact).
+
+    ``surface_keys`` is the mention side's keying frame from
+    :func:`surface_blocking_keys`; the caller builds it because the
+    mention-mention self-join consumes the same keying, so the
+    expensive projection runs once for the whole job.
 
     ``block_key`` is a key both sides shared — the north rule's F1 is
     conditioned on pairs at shared blocking keys, so it is carried
     through to the output.
-
-    ``surface_keys``: optional pre-materialized (norm, bk) frame from
-    surface_blocking_keys() — pass it when another stage (the
-    mention-mention self-join) consumes the same keying, so the
-    expensive projection runs once for the whole job.
     """
-    m_keys = (
-        surface_keys if surface_keys is not None else surface_blocking_keys(mentions)
-    )
     # the synonym frame arrives on the byte-coalesced tail of
     # entity_names' dedup exchange: _with_keys re-spreads it
     e_keys = _with_keys(names.select("cui", "norm")).dropDuplicates(["cui", "bk"])
-
-    # hot-key cap (explicit skew control / max_df analogue)
-    key_freq = e_keys.groupBy("bk").agg(F.count_distinct("cui").alias("kf"))
-    hot = key_freq.filter(F.col("kf") > MAX_KEY_FREQ).select("bk")
-    e_keys = e_keys.join(F.broadcast(hot), "bk", "left_anti")
+    # hot-key cap (explicit skew control / max_df analogue); e_keys is
+    # unique on (cui, bk), so its row count per key is the key's
+    # distinct-entity count
+    e_keys = drop_hot_keys(e_keys, "bk", MAX_KEY_FREQ)
 
     cands = (
-        m_keys.select(F.col("norm").alias("m_norm"), "bk")
+        surface_keys.select(F.col("norm").alias("m_norm"), "bk")
         .join(e_keys.select("cui", "bk"), "bk")
         .select(
             F.col("m_norm").alias("norm"),

@@ -27,6 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from ..session import pin
 
+# Star rounds before connected_components gives up. CC converges in
+# O(log^2 n) rounds and block-local ER graphs take 3-5, so a run that
+# has not reached its fixpoint by round 25 is a fault, not a big input.
+MAX_ROUNDS = 25
+
 
 def _canon(e: DataFrame) -> DataFrame:
     """Canonical undirected edge orientation (src < dst), dedup, no
@@ -95,7 +100,6 @@ def _digest(e: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    max_iter: int = 25,
 ) -> tuple[DataFrame, int]:
     """edges(src string, dst string) -> (assignments(node, cluster_id),
     iterations).
@@ -106,18 +110,25 @@ def connected_components(
     Convergence is checked after every star round: a star round (3
     exchanges over the edge set) costs far more than a digest's
     O(1)-row driver action, so checking less often only adds rounds.
+    A fixpoint not confirmed within :data:`MAX_ROUNDS` rounds raises
+    ``RuntimeError``: the edge set at that point is not a star forest,
+    so reading clusters off it would be wrong.
     """
     # lazy checkpoints: the digest action materializes the iteration's
     # edge set AND computes the convergence digest in one job
     e = pin(_canon(edges))
     prev = None
-    iters = 0
-    for iters in range(1, max_iter + 1):
+    for iters in range(1, MAX_ROUNDS + 1):
         e = pin(_canon(_small_star(_large_star(e))))
         d = _digest(e)
         if d == prev:
             break
         prev = d
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {MAX_ROUNDS} star "
+            "rounds (MAX_ROUNDS)"
+        )
     # post-convergence the canonical edge set is a star forest with the
     # root (component minimum) on the src side: (root, member)
     assign = (
@@ -138,7 +149,6 @@ def merge_into_clusters(
     assignments: DataFrame,
     new_edges: DataFrame,
     new_nodes: DataFrame | None = None,
-    max_iter: int = 25,
 ) -> tuple[DataFrame, int]:
     """Incremental CC maintenance: fold a SNAPSHOT of new match edges
     (and optionally new isolated nodes) into persisted ``assignments``
@@ -193,7 +203,7 @@ def merge_into_clusters(
         .join(rep.select(F.col("node").alias("dst"), F.col("rep").alias("dr")), "dst")
         .select(F.col("sr").alias("src"), F.col("dr").alias("dst"))
     )
-    merged, iters = connected_components(contracted, max_iter=max_iter)
+    merged, iters = connected_components(contracted)
     # (old cluster root -> merged component root), affected clusters only
     remap = merged.select(
         F.col("node").alias("__old"), F.col("cluster_id").alias("__new")
@@ -227,7 +237,6 @@ def retract_from_clusters(
     assignments: DataFrame,
     edges: DataFrame,
     retracted: DataFrame,
-    max_iter: int = 25,
 ) -> tuple[DataFrame, int]:
     """The dual of :func:`merge_into_clusters`: remove ``retracted``
     match edges and SPLIT only the clusters they touch — the state
@@ -287,9 +296,7 @@ def retract_from_clusters(
         .join(aff_nodes.withColumnRenamed("node", "src"), "src", "left_semi")
         .join(F.broadcast(r), ["src", "dst"], "left_anti")
     )
-    relinked, iters = connected_components(
-        sub, nodes=aff_nodes, max_iter=max_iter
-    )
+    relinked, iters = connected_components(sub, nodes=aff_nodes)
     # the key-column join puts cluster_id first: restore the state's
     # canonical (node, cluster_id) order so positional consumers
     # (createDataFrame with a DDL schema, parquet appends) stay sound
@@ -319,9 +326,7 @@ def cluster_size_histogram(assignments: DataFrame) -> DataFrame:
     )
 
 
-def edge_triangle_support(
-    edges: DataFrame, max_out_degree: int | None = None
-) -> DataFrame:
+def edge_triangle_support(edges: DataFrame) -> DataFrame:
     """Per-edge triangle support over an undirected match graph ->
     (src, dst, support) with src < dst canonical and ``support`` = the
     number of triangles the edge participates in. support = 0 marks a
@@ -339,13 +344,8 @@ def edge_triangle_support(
     never the d(hub)^2 blow-up an id-ordered orientation suffers when
     a mega-block's hub lands on the low side. Cost: one degree
     aggregate, one wedge self-join, one closing join, one support
-    groupBy — all key-partitioned, nothing driver-side.
-
-    ``max_out_degree``: optional skew valve. When set, vertices whose
-    ORIENTED out-degree exceeds the cap are skipped as wedge centers,
-    making ``support`` a documented undercount at adversarial hubs
-    (closing edges still count wedges centered elsewhere). None (the
-    default) is exact.
+    groupBy — all key-partitioned, nothing driver-side. ``support`` is
+    exact.
     """
     e = pin(_canon(edges))
     deg = (
@@ -367,17 +367,8 @@ def edge_triangle_support(
         .otherwise(F.struct(F.col("ds").alias("d"), F.col("src").alias("n")))
         .alias("vkey"),
     ))
-    centers = o
-    if max_out_degree is not None:
-        ok = (
-            o.groupBy("u")
-            .agg(F.count("*").alias("od"))
-            .filter(F.col("od") <= max_out_degree)
-            .select("u")
-        )
-        centers = o.join(ok, "u", "left_semi")
-    w1 = centers.select("u", F.col("v").alias("y"), F.col("vkey").alias("ykey"))
-    w2 = centers.select("u", F.col("v").alias("z"), F.col("vkey").alias("zkey"))
+    w1 = o.select("u", F.col("v").alias("y"), F.col("vkey").alias("ykey"))
+    w2 = o.select("u", F.col("v").alias("z"), F.col("vkey").alias("zkey"))
     wedges = (
         w1.join(w2, "u")
         .filter(F.col("ykey") < F.col("zkey"))

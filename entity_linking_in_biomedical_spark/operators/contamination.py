@@ -55,7 +55,6 @@ def ngram_contamination(
     id_col: str = "doc_id",
     text_col: str = "text",
     test_id_col: str = "test_id",
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """Flag (corpus doc, test doc) pairs sharing >= min_overlap distinct
     word n-grams.
@@ -66,12 +65,7 @@ def ngram_contamination(
     The test side is assumed broadcastable (eval sets are); each side's
     grams are de-duplicated per document BEFORE the join so a repeated
     phrase cannot double-count, and grams are joined as xxhash64 longs.
-    ``broadcast_test=False`` drops the broadcast hints for a test side
-    too big for executor memory — the gram join then shuffles BOTH
-    sides on the 8-byte hash, which is the correct (and only) plan in
-    that regime; results are identical.
     """
-    maybe_b = F.broadcast if broadcast_test else (lambda df: df)
     # word_ngrams de-duplicates per document (array_distinct before the
     # explode), so neither side needs a .distinct() — the corpus side
     # reaches the join with zero shuffles
@@ -84,12 +78,12 @@ def ngram_contamination(
         F.col(id_col), F.explode(word_ngrams(F.col(text_col), n)).alias("gram")
     ).select(id_col, F.xxhash64("gram").alias("g"))
     overlaps = (
-        c_grams.join(maybe_b(t_grams), "g")
+        c_grams.join(F.broadcast(t_grams), "g")
         .groupBy(id_col, test_id_col)
         .agg(F.count("*").alias("n_overlap"))
         .filter(F.col("n_overlap") >= min_overlap)
     )
-    return overlaps.join(maybe_b(t_sizes), test_id_col).select(
+    return overlaps.join(F.broadcast(t_sizes), test_id_col).select(
         id_col,
         test_id_col,
         "n_overlap",
@@ -135,7 +129,6 @@ def scrub_contamination(
     margin: int = 0,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """Span-level decontamination (GPT-3 Appendix C at token
     granularity): instead of dropping every flagged document whole
@@ -162,12 +155,11 @@ def scrub_contamination(
     """
     from .dedup import rebuild_minus_positions
 
-    maybe_b = F.broadcast if broadcast_test else (lambda df: df)
     t_hashes = _test_gram_hashes(test, text_col, n)
     base = pin(corpus.select(
         F.col(id_col).cast("string").alias("doc_id"), tokens(text_col).alias("toks")
     ))
-    drops = _collision_drops(base, maybe_b(t_hashes), n, margin, ["doc_id"])
+    drops = _collision_drops(base, F.broadcast(t_hashes), n, margin, ["doc_id"])
     return rebuild_minus_positions(base, drops)
 
 
@@ -228,7 +220,6 @@ def scrub_interleaved(
     margin: int = 0,
     id_col: str = "doc_id",
     spans_col: str = "spans",
-    broadcast_test: bool = True,
 ) -> DataFrame:
     """:func:`scrub_contamination` over INTERLEAVED documents
     (doc_id, spans array<struct<kind,text,media_ref,offset>>) — the
@@ -259,7 +250,6 @@ def scrub_interleaved(
     """
     from .dedup import rebuild_minus_positions
 
-    maybe_b = F.broadcast if broadcast_test else (lambda df: df)
     t_hashes = _test_gram_hashes(test, "text", n)
     ex = pin(docs.select(
         F.col(id_col).cast("string").alias("doc_id"),
@@ -273,7 +263,7 @@ def scrub_interleaved(
         tokens(F.col("sp.text")).alias("toks"),
     ))
     keys = ["doc_id", "si"]
-    drops = _collision_drops(txt, maybe_b(t_hashes), n, margin, keys)
+    drops = _collision_drops(txt, F.broadcast(t_hashes), n, margin, keys)
     scr = rebuild_minus_positions(txt.select(*keys, "toks"), drops, tuple(keys))
     out_txt = (
         scr.join(txt.select(*keys, "orig_text", "offset"), keys)
@@ -329,43 +319,33 @@ def scrub_interleaved(
     )
 
 
-# Broadcast budget for the streaming cross-join form: total distinct
+# Broadcast budget for scrub_stream's cross-join: total distinct
 # test-side gram hashes (8 bytes each + array overhead). 10M longs is
 # ~100 MB broadcast — near the practical executor-memory ceiling; real
 # eval sets (thousands of docs × hundreds of grams) sit 100-1000× below.
-DEFAULT_MAX_BROADCAST_GRAMS = 10_000_000
+MAX_BROADCAST_GRAMS = 10_000_000
 
 
-def _guard_gram_broadcast(
-    test: DataFrame,
-    text_col: str,
-    n: int,
-    max_broadcast_grams: int | None,
-    caller: str,
-    fallback: str = "ngram_contamination",
-) -> None:
-    """Shared broadcast budget for the streaming forms: the static test
-    side is counted ONCE at stream-construction time (one tiny batch
-    job), and a total distinct-gram count above the budget raises
-    ``ValueError`` naming the batch operator (``fallback``) to run per
-    micro-batch instead — rather than silently OOMing executors
-    mid-stream. ``None`` disables the guard."""
-    if max_broadcast_grams is None:
-        return
+def _guard_gram_broadcast(test: DataFrame, text_col: str, n: int) -> None:
+    """Broadcast budget for :func:`scrub_stream`: the static test side is
+    counted ONCE at stream-construction time (one tiny batch job), and a
+    total distinct-gram count above :data:`MAX_BROADCAST_GRAMS` raises
+    ``ValueError`` naming the batch operator to run per micro-batch
+    instead — rather than silently OOMing executors mid-stream."""
     total_grams = (
         test.select(F.size(word_ngrams(F.col(text_col), n)).alias("n_grams"))
         .agg(F.sum("n_grams").alias("total"))
         .collect()[0]["total"]
         or 0
     )
-    if total_grams > max_broadcast_grams:
+    if total_grams > MAX_BROADCAST_GRAMS:
         raise ValueError(
-            f"{caller}: test side has {total_grams} distinct "
-            f"grams (> max_broadcast_grams={max_broadcast_grams}); the "
+            f"scrub_stream: test side has {total_grams} distinct grams "
+            f"(> MAX_BROADCAST_GRAMS={MAX_BROADCAST_GRAMS}); the "
             "broadcast-cross-join form would risk executor OOM. Run the "
-            f"shuffling batch operator {fallback} per micro-batch "
-            f"(writeStream.foreachBatch(lambda df, i: sink({fallback}(df, "
-            "test, ...), i))), or raise max_broadcast_grams explicitly."
+            "shuffling batch operator scrub_contamination per micro-batch "
+            "(writeStream.foreachBatch(lambda df, i: sink(scrub_contamination("
+            "df, test, ...), i)))."
         )
 
 
@@ -376,7 +356,6 @@ def scrub_stream(
     margin: int = 0,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_broadcast_grams: int | None = DEFAULT_MAX_BROADCAST_GRAMS,
 ) -> DataFrame:
     """Online span-level decontamination: :func:`scrub_contamination`
     re-expressed as a PURE row-local column pipeline against ONE
@@ -395,17 +374,14 @@ def scrub_stream(
     for), but on a corpus at rest the batch operator amortizes the gram
     set across all rows via the hash join and is ~5× faster (measured
     2.3 s vs 11.6 s at sf0.1/18.5k grams) — use :func:`scrub_contamination`
-    there. Same broadcast budget/guard as :func:`stream_contamination`;
-    the shuffling batch operator per micro-batch
-    (:func:`scrub_contamination` under ``foreachBatch``) remains the
-    path for oversized eval sets.
+    there. The test side's distinct grams are capped at
+    :data:`MAX_BROADCAST_GRAMS`; the shuffling batch operator per
+    micro-batch (:func:`scrub_contamination` under ``foreachBatch``)
+    remains the path for oversized eval sets.
     """
     from ..functions.lambdas import let_bound
 
-    _guard_gram_broadcast(
-        test, text_col, n, max_broadcast_grams, "scrub_stream",
-        fallback="scrub_contamination",
-    )
+    _guard_gram_broadcast(test, text_col, n)
     tg = _test_gram_hashes(test, text_col, n).agg(
         F.array_sort(F.collect_list("g")).alias("t_grams")
     )
@@ -510,75 +486,4 @@ def scrub_stream(
         F.col("r.n_removed").alias("n_removed"),
         F.col("r.n_pieces").alias("n_pieces"),
         F.col("r.cleaned_text").alias("cleaned_text"),
-    )
-
-
-def stream_contamination(
-    stream_docs: DataFrame,
-    test: DataFrame,
-    n: int = 13,
-    min_overlap: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    test_id_col: str = "test_id",
-    max_broadcast_grams: int | None = DEFAULT_MAX_BROADCAST_GRAMS,
-) -> DataFrame:
-    """Online decontamination: flag documents of a STREAMING corpus
-    against a static eval set as they arrive, same contract as
-    :func:`ngram_contamination`.
-
-    Stateless reformulation for streaming semantics: the batch
-    operator's explode + groupBy would be a stateful running aggregate
-    here (unbounded state for a per-doc-complete result), so instead
-    each test doc's distinct gram hashes are kept as ONE sorted array
-    and broadcast-cross-joined against the stream; per (doc, test)
-    overlap is a row-local ``array_intersect``. Append mode, no
-    watermark, any trigger; cost scales as |batch| × |test docs|,
-    which is the regime eval sets live in (thousands of docs). For a
-    test side too big to cross, run the batch operator per micro-batch
-    via ``foreachBatch`` instead.
-
-    Gram hashing is xxhash64, identical to the batch operator, so the
-    two agree exactly on the same inputs (asserted in tests).
-
-    ``max_broadcast_grams`` bounds the broadcast: the static test side
-    is counted ONCE at stream-construction time (one tiny batch job),
-    and a total distinct-gram count above the budget raises
-    ``ValueError`` naming :func:`ngram_contamination` as the operator
-    to run per micro-batch — instead of silently OOMing executors
-    mid-stream. ``None`` disables the guard."""
-    _guard_gram_broadcast(test, text_col, n, max_broadcast_grams, "stream_contamination")
-    # clamp to >= 1: the batch operator's inner join on gram hash can
-    # only produce pairs with at least one shared gram, so min_overlap=0
-    # already behaves as 1 there; without the clamp the cross-join form
-    # would emit every zero-overlap (doc, test) pair — |corpus|x|test|
-    # rows the batch operator never produces
-    min_overlap = max(1, min_overlap)
-    t = test.select(
-        F.col(test_id_col),
-        F.array_sort(
-            F.transform(
-                word_ngrams(F.col(text_col), n), lambda g: F.xxhash64(g)
-            )
-        ).alias("t_grams"),
-    ).withColumn("n_test_grams", F.size("t_grams"))
-    c = stream_docs.select(
-        F.col(id_col),
-        F.transform(word_ngrams(F.col(text_col), n), lambda g: F.xxhash64(g)).alias(
-            "c_grams"
-        ),
-    )
-    joined = c.crossJoin(F.broadcast(t))
-    n_overlap = F.size(F.array_intersect("c_grams", "t_grams"))
-    return (
-        joined.withColumn("n_overlap", n_overlap)
-        .filter(F.col("n_overlap") >= min_overlap)
-        .select(
-            id_col,
-            test_id_col,
-            "n_overlap",
-            F.round(
-                F.col("n_overlap") / F.greatest("n_test_grams", F.lit(1)), 6
-            ).alias("contamination"),
-        )
     )

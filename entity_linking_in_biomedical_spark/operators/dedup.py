@@ -748,7 +748,6 @@ def semantic_dedup(
     cosine_threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_cluster: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
     with k-means as the blocking stage — exact cosine comparison runs
@@ -774,10 +773,7 @@ def semantic_dedup(
       kmeans.py). No join, no UDF.
     - pair stage: ONE shuffle per side keyed on the cluster id; pairs
       are O(sum_c |c|^2), so size k ~ n / target_cluster_size (the
-      paper uses ~11k clusters for 100M docs). ``max_cluster`` is the
-      skew valve: clusters larger than it skip pairwise entirely (all
-      their rows are KEPT — conservative for training data, identical
-      rule to the LSH ``max_bucket`` drop), via a k-row broadcast join.
+      paper uses ~11k clusters for 100M docs).
     - the dup-id set joins back id-only; vectors never ride a second
       shuffle.
     """
@@ -787,20 +783,10 @@ def semantic_dedup(
     base = pin(embeddings.select(F.col(id_col), F.col(vec_col)))
     centroids = kmeans_fit(base, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     assigned = kmeans_score(base, centroids, vec_col=vec_col, out_col="__cl")
-    pairable = assigned
-    if max_cluster is not None:
-        big = (
-            assigned.groupBy("__cl")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_cluster)
-        )
-        pairable = assigned.join(
-            F.broadcast(big.select("__cl")), "__cl", "left_anti"
-        )
-    left = pairable.select(
+    left = assigned.select(
         F.col("__cl"), F.col(id_col).alias("__a"), F.col(vec_col).alias("__av")
     )
-    right = pairable.select(
+    right = assigned.select(
         F.col("__cl"), F.col(id_col).alias("__b"), F.col(vec_col).alias("__bv")
     )
     dup_ids = (

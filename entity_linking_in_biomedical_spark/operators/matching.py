@@ -243,12 +243,10 @@ def stitch_churn_stats(
 def repair_bridged_clusters(
     scored_edges: DataFrame,
     min_bridge_score: float = 0.95,
-    min_support: int = 1,
-    max_out_degree: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Split chain-merged clusters: drop every match edge that is both
-    UNCORROBORATED (triangle support < ``min_support`` — no third
-    record confirms the pair) and WEAK (score < ``min_bridge_score``),
+    UNCORROBORATED (in no triangle — no third record confirms the pair)
+    and WEAK (score < ``min_bridge_score``),
     then re-close -> (assignments(node, cluster_id), cc_iterations).
 
     This is the repair transform behind the ``match_graph_diagnostics``
@@ -277,13 +275,11 @@ def repair_bridged_clusters(
         .groupBy("src", "dst")
         .agg(F.max("score").alias("score"))
     )
-    supp = edge_triangle_support(
-        e.select("src", "dst"), max_out_degree=max_out_degree
-    )
+    supp = edge_triangle_support(e.select("src", "dst"))
     kept = (
         e.join(supp, ["src", "dst"])
         .filter(
-            (F.col("support") >= F.lit(int(min_support)))
+            (F.col("support") >= 1)
             | (F.col("score") >= F.lit(float(min_bridge_score)))
         )
         .select("src", "dst")

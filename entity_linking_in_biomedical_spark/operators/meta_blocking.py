@@ -38,20 +38,11 @@ def meta_block_prune(
     max_block: int = 50,
     min_common: int = 2,
     top_k: int | None = None,
-    scheme: str = "cbs",
-    min_weight: float | None = None,
 ) -> DataFrame:
     """``blocks``: long frame (item id, blocking key), one row per
-    membership (duplicates ignored). -> (a_id, b_id, common_blocks[,
-    weight]) with a_id < b_id, weighted and pruned.
-
-    ``scheme``: 'cbs' (common-blocks count, the default) or 'jaccard'
-    (common / (|blocks(a)| + |blocks(b)| - common) over the PURGED
-    block sets — Papadakis' JS scheme, which normalizes away item
-    length so long shingle-rich items don't dominate). Jaccard adds a
-    ``weight`` column, one per-node block-count aggregate and two
-    broadcast-sized joins; ``min_weight`` prunes on it (WEP), and CNP's
-    top-k ranks by it."""
+    membership (duplicates ignored). -> (a_id, b_id, common_blocks)
+    with a_id < b_id, weighted by the CBS count and pruned; CNP's top-k
+    ranks by it."""
     # Lazy checkpoints make single evaluation structural (the surf_keys
     # discipline): without them the self-join's two sides each re-run
     # the caller's (often expensive) key derivation — e.g. a shingle
@@ -77,34 +68,6 @@ def meta_block_prune(
         .filter(F.col("common_blocks") >= min_common)
     )
     cols = ["a_id", "b_id", "common_blocks"]
-    rank = [F.desc("common_blocks")]
-    if scheme == "jaccard":
-        nblocks = kept.groupBy("id").agg(F.count("*").alias("nb"))
-        edges = (
-            edges.join(
-                nblocks.select(F.col("id").alias("a_id"), F.col("nb").alias("na")),
-                "a_id",
-            )
-            .join(
-                nblocks.select(F.col("id").alias("b_id"), F.col("nb").alias("nb")),
-                "b_id",
-            )
-            .withColumn(
-                "weight",
-                F.round(
-                    F.col("common_blocks")
-                    / (F.col("na") + F.col("nb") - F.col("common_blocks")),
-                    6,
-                ),
-            )
-            .drop("na", "nb")
-        )
-        if min_weight is not None:
-            edges = edges.filter(F.col("weight") >= min_weight)
-        cols = ["a_id", "b_id", "common_blocks", "weight"]
-        rank = [F.desc("weight"), F.desc("common_blocks")]
-    elif scheme != "cbs":
-        raise ValueError(f"unknown meta-blocking scheme: {scheme!r}")
     if top_k is not None:
         edges = pin(edges)
         # CNP: keep each node's top_k heaviest edges (an edge survives
@@ -113,7 +76,7 @@ def meta_block_prune(
             edges.select(F.col("b_id").alias("node"), *cols)
         )
         w = Window.partitionBy("node").orderBy(
-            *rank, F.asc("a_id"), F.asc("b_id")
+            F.desc("common_blocks"), F.asc("a_id"), F.asc("b_id")
         )
         edges = (
             per.withColumn("rk", F.row_number().over(w))

@@ -290,17 +290,15 @@ def dsir_weights(
     id_col: str = "doc_id",
     alpha: float = 1.0,
     bucket_hex: int = DSIR_BUCKET_HEX,
-    reuse: bool = True,
 ) -> DataFrame:
     """(id, n_grams, weight) for every POOL doc (``target_col`` false)
     with at least one token: weight = sum over gram occurrences of
     log p_target(bucket) / p_pool(bucket), both add-``alpha`` smoothed
     over the 16^bucket_hex bucket space. Higher = more target-like.
 
-    ``reuse=True`` lazily localCheckpoints the featurized per-doc
-    frame, which is referenced three times (target fit, pool fit,
-    weighting) — without it the explode+groupBy would run three times.
-    Pass False when the caller persists it some other way.
+    The featurized per-doc frame is lazily localCheckpointed: it is
+    referenced three times (target fit, pool fit, weighting), and
+    without the barrier the explode+groupBy would run three times.
     """
     from ..functions.text_metrics import tokens
 
@@ -319,8 +317,7 @@ def dsir_weights(
         .groupBy(id_col, "__t", "b")
         .agg(F.count(F.lit(1)).alias("k"))
     )
-    if reuse:
-        feat = pin(feat)
+    feat = pin(feat)
     tgt = feat.filter(F.col("__t")).groupBy("b").agg(F.sum("k").alias("ct"))
     pool = feat.filter(~F.col("__t"))
     poolb = pool.groupBy("b").agg(F.sum("k").alias("cq"))

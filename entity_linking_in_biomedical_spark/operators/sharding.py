@@ -3,26 +3,21 @@ the last step of a training-data run, where the consumer is a data
 loader that wants shards of roughly ``shard_size`` units (bytes /
 tokens) each, deterministically reproducible across reruns.
 
-Two assignment rules, different guarantees:
+Assignment rule, :func:`contiguous_shards` — exact size packing: docs
+are laid on a deterministic global line (ordered by md5(seed:id), the
+same partition-independent order the samplers use) and cut every
+``shard_size`` units, so every shard's total lands in
+[shard_size - max_doc, shard_size + max_doc). The required GLOBAL
+prefix sum must not be a single-partition window at 100 TB — it is the
+shared two-level distributed prefix sum (functions/prefix_sum.py, same
+machinery as pack_sequences), with the md5 key's first two hex chars as
+the 256 order-partitioning buckets; shard_id = global_cum_before div
+shard_size (integer division — no float precision cliff at petabyte
+prefix sums).
 
-- :func:`hash_shards` — shard = xxhash64(id) mod n. Stateless, zero
-  shuffle, streaming-composable; shard sizes balanced in expectation
-  only (tight at millions of docs/shard, loose at thousands).
-- :func:`contiguous_shards` — exact size packing: docs are laid on a
-  deterministic global line (ordered by md5(seed:id), the same
-  partition-independent order the samplers use) and cut every
-  ``shard_size`` units, so every shard's total lands in
-  [shard_size - max_doc, shard_size + max_doc). The required GLOBAL
-  prefix sum must not be a single-partition window at 100 TB — it is
-  the shared two-level distributed prefix sum
-  (functions/prefix_sum.py, same machinery as pack_sequences), with
-  the md5 key's first two hex chars as the 256 order-partitioning
-  buckets; shard_id = global_cum_before div shard_size (integer
-  division — no float precision cliff at petabyte prefix sums).
-
-  Deterministic by construction (hash order, integer sums), so the
-  DuckDB oracle replays it with a plain global window and agrees
-  bit-for-bit, and a rerun/retry emits identical shards.
+Deterministic by construction (hash order, integer sums), so the
+DuckDB oracle replays it with a plain global window and agrees
+bit-for-bit, and a rerun/retry emits identical shards.
 
 :func:`shard_manifest` aggregates per-shard (docs, units) — the
 sidecar a loader consumes; :func:`write_shards` writes one directory
@@ -39,24 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.prefix_sum import bucketed_prefix_sum
 
 SHARD_BUCKETS_HEX = 2  # 16^2 = 256 order-partitioning buckets
-
-
-def hash_shards(
-    df: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-    out_col: str = "shard_id",
-) -> DataFrame:
-    """shard = xxhash64(id) mod n — expectation-balanced, zero-shuffle,
-    works on unbounded/streaming frames."""
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    return df.withColumn(
-        out_col,
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_shards)).cast(
-            "long"
-        ),
-    )
 
 
 def contiguous_shards(

@@ -62,24 +62,6 @@ def _plane_coeffs(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def srp_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """Single-table sign-random-projection bucket id (string of 0/1
-    bits) as a pure column expression. Kept for tests / tiny dims; the
-    UDF variants below are the production path (the unrolled expression
-    is n_planes x dim terms, which blows the codegen budget)."""
-    planes = _plane_coeffs(n_planes, dim)
-
-    def bit(p: int) -> Column:
-        coeffs = planes[p]
-        acc = F.lit(0.0)
-        # F.get is 0-indexed and null (not ANSI error) out of bounds
-        for d, c in enumerate(coeffs):
-            acc = acc + F.coalesce(F.get(vec, d).cast("double"), F.lit(0.0)) * F.lit(c)
-        return F.when(acc >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    return F.concat(*[bit(p) for p in range(n_planes)])
-
-
 def srp_table_keys_udf(
     vec: Column,
     n_tables: int = 8,
@@ -97,9 +79,8 @@ def srp_table_keys_udf(
     multiprobe-LSH recall boost at (1 + multiprobe) x key cost instead
     of more tables (which would multiply the *database* explode too).
 
-    One numpy matmul per Arrow batch; shares srp_bucket's deterministic
-    hyperplane family, so table 0 of a ``bits``-bit index equals
-    srp_bucket(vec, bits)."""
+    One numpy matmul per Arrow batch over the deterministic md5-seeded
+    hyperplane family of :func:`_plane_coeffs`."""
     planes = np.array(_plane_coeffs(n_tables * bits, dim))  # (T*b, d)
 
     @F.pandas_udf("array<string>")

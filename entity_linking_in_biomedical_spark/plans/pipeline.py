@@ -36,7 +36,7 @@ from ..operators.clustering import connected_components
 from ..operators.mentions import extract_mentions
 from ..operators.scoring import THRESHOLD, fit_idf, score_pairs
 from ..operators.skew import cap_per_key, drop_hot_keys
-from ..session import pin
+from ..session import pin, sql_conf
 from .resume import StageStore, stage_signature
 
 # The mention-mention rule (the snapshot fold's cross-snapshot probe
@@ -132,25 +132,35 @@ def _check_columns(inputs: dict[str, DataFrame | None]) -> None:
             )
 
 
-def _embedding_rows(embeddings: DataFrame) -> int:
-    """Row count of the embeddings lookup, from one aggregate that also
-    checks the vectors: ragged lengths (a zero-length vector among full
-    ones included) or a NaN/±inf component raise a ``ValueError`` here
-    instead of giving a null or NaN ``dot`` later. This is the run's one
-    embeddings job; the input fingerprint and the broadcast gate both
-    read its count. A null vector is allowed (its pairs score with the
-    neutral dot)."""
+def _embedding_rows(embeddings: DataFrame) -> tuple[int, int]:
+    """(rows, vector length) of the embeddings lookup, from one
+    aggregate that also checks it: a null or empty norm, ragged vector
+    lengths (a zero-length vector among full ones included) or a
+    NaN/±inf component raise a ``ValueError`` here instead of giving an
+    unmatched lookup row or a null or NaN ``dot`` later. This is the
+    run's one embeddings job; the input fingerprint and the broadcast
+    gate both read it. A null vector is allowed (its pairs score with
+    the neutral dot)."""
     v = F.col("embedding")
     size = F.when(v.isNotNull(), F.size(v))
     finite = F.forall(v, lambda x: ~F.isnan(x) & (F.abs(x) != float("inf")))
     row = embeddings.agg(
         F.count("*").alias("rows"),
+        F.count(F.when(F.col("norm").isNull() | (F.col("norm") == ""), 1)).alias(
+            "no_norm"
+        ),
         F.min(size).alias("min_dim"),
         F.max(size).alias("max_dim"),
         F.min_by("norm", size).alias("shortest"),
         F.max_by("norm", size).alias("longest"),
         F.min(F.when(~finite, F.col("norm"))).alias("non_finite"),
     ).collect()[0]
+    if row["no_norm"]:
+        raise ValueError(
+            f"embeddings hold {row['no_norm']} row(s) with a null or empty "
+            f"norm; every vector must be keyed by the normalized surface it "
+            f"embeds"
+        )
     if row["min_dim"] != row["max_dim"]:
         raise ValueError(
             f"embeddings are ragged: vector lengths range from {row['min_dim']} "
@@ -162,7 +172,7 @@ def _embedding_rows(embeddings: DataFrame) -> int:
             f"embeddings hold a NaN or infinite component (norm "
             f"{row['non_finite']!r}); every component must be finite"
         )
-    return row["rows"]
+    return row["rows"], row["max_dim"] or 0
 
 
 def _input_fingerprint(df: DataFrame, rows: int | None = None) -> list:
@@ -203,8 +213,8 @@ def run_pipeline(
     here.
     ``embeddings``: optional (norm string, embedding array<float>)
     lookup used for the dense dot-product feature. Its vectors must all
-    have one length and finite components, or a ``ValueError`` names
-    the problem (see :func:`_embedding_rows`).
+    have one length and finite components, and each a non-empty norm,
+    or a ``ValueError`` names the problem (see :func:`_embedding_rows`).
     ``out_dir``: when set, each stage commits a Parquet snapshot +
     manifest there and re-runs resume from the last committed stage
     whose inputs are unchanged. It is a filesystem path visible to the
@@ -223,7 +233,9 @@ def run_pipeline(
         }
     )
     store = StageStore(spark, out_dir)
-    emb_rows = None if embeddings is None else _embedding_rows(embeddings)
+    emb_rows, emb_dim = (
+        (None, None) if embeddings is None else _embedding_rows(embeddings)
+    )
     p: dict = {}
     # input-identity fingerprints (semanticHash of each source plan:
     # covers paths + upstream transformations) fold into every stage
@@ -247,10 +259,9 @@ def run_pipeline(
         p["split"] = True
 
     # ---- stage 1: mentions -------------------------------------------
-    sig_mentions = stage_signature("mentions", p, [])
     mentions = store.get_or_compute(
         "mentions",
-        sig_mentions,
+        stage_signature("mentions", p),
         lambda: extract_mentions(documents, abbr_map),
     )
 
@@ -271,11 +282,10 @@ def run_pipeline(
     surf_keys = surface_blocking_keys(mentions)
 
     # ---- stage 2: blocking -------------------------------------------
-    sig_cands = stage_signature("candidates", p, [sig_mentions])
     cands = store.get_or_compute(
         "candidates",
-        sig_cands,
-        lambda: block_candidates(mentions, names, surface_keys=surf_keys),
+        stage_signature("candidates", p),
+        lambda: block_candidates(surf_keys, names),
     )
 
     # ---- stage 3: pairwise scoring -----------------------------------
@@ -285,10 +295,15 @@ def run_pipeline(
     # broadcast the side that fits, decided by size, not by hope): the
     # checkpointed lookup hides its statistics from the planner, so
     # without the hint every attach was a sort-merge join that shuffled
-    # the pair frame. The embeddings check's row count gates the hint; at
-    # corpus scale (per-surface embeddings) the count exceeds the cap and
-    # the joins stay shuffled — identical results either way.
-    emb_bcast = emb_rows is not None and emb_rows <= 200_000
+    # the pair frame. The hint goes on when the lookup's vectors (rows ×
+    # length × 8 bytes, both from the embeddings check) fit the session's
+    # autoBroadcastJoinThreshold, the bound Spark itself broadcasts by; at
+    # corpus scale (per-surface embeddings) they do not and the joins
+    # stay shuffled — identical results either way.
+    emb_bcast = (
+        emb_rows is not None
+        and emb_rows * emb_dim * 8 <= sql_conf(spark).autoBroadcastJoinThreshold()
+    )
 
     def _emb_side(key: str, out: str) -> DataFrame:
         e = embeddings.select(F.col("norm").alias(key), F.col("embedding").alias(out))
@@ -328,8 +343,9 @@ def run_pipeline(
             F.max("score").alias("score"), F.min("block_key").alias("block_key")
         )
 
-    sig_me = stage_signature("me_scores", p, [sig_cands])
-    me_scores = store.get_or_compute("me_scores", sig_me, compute_me)
+    me_scores = store.get_or_compute(
+        "me_scores", stage_signature("me_scores", p), compute_me
+    )
 
     def compute_mm() -> DataFrame:
         # mention-mention channel: distinct surface pairs sharing a
@@ -358,8 +374,9 @@ def run_pipeline(
         scored = score_pairs(pairs, idf)
         return scored.select("a_norm", "b_norm", "block_key", "score")
 
-    sig_mm = stage_signature("mm_scores", p, [sig_mentions])
-    mm_scores = store.get_or_compute("mm_scores", sig_mm, compute_mm)
+    mm_scores = store.get_or_compute(
+        "mm_scores", stage_signature("mm_scores", p), compute_mm
+    )
 
     # ---- stage 4: transitive clustering ------------------------------
     def compute_assign() -> DataFrame:
@@ -403,8 +420,9 @@ def run_pipeline(
         )
         return assign.withColumn("cc_iterations", F.lit(iters))
 
-    sig_assign = stage_signature("assignments", p, [sig_me, sig_mm])
-    assignments = store.get_or_compute("assignments", sig_assign, compute_assign)
+    assignments = store.get_or_compute(
+        "assignments", stage_signature("assignments", p), compute_assign
+    )
     cc_iterations = (
         assignments.select(F.max("cc_iterations")).collect()[0][0]
         if "cc_iterations" in assignments.columns

@@ -8,16 +8,16 @@ shared mount on a cluster):
 
   <out_dir>/<stage>/data/...parquet      the snapshot
   <out_dir>/<stage>/_MANIFEST.json       commit record: stage signature
-                                         (md5 over params + parent
-                                         signatures), the stage schema,
+                                         (md5 over the stage name and
+                                         its params), the stage schema,
                                          total rows, and per-file row
                                          counts from the Parquet footers
 
-A stage is *committed* iff the manifest exists and its signature matches
-the requested computation; committed stages are read back instead of
-recomputed. The manifest is written after the data (write-then-commit
-ordering), so a crash mid-write leaves an uncommitted, restartable
-stage.
+A stage is *committed* iff the manifest exists, records the stage
+schema, and its signature matches the requested computation; committed
+stages are read back instead of recomputed. The manifest is written
+after the data (write-then-commit ordering), so a crash mid-write
+leaves an uncommitted, restartable stage.
 
 Snapshots are not bucketed or registered in any catalog: of the
 pipeline's joins, only the ``assignments`` window over
@@ -37,21 +37,23 @@ from pyspark.sql.types import StructType
 from ..session import pin
 
 
-def stage_signature(stage: str, params: dict, parents: list[str]) -> str:
-    """md5 of the stage name, its parameters and its parents'
-    signatures. A signature covers inputs only: run_pipeline's
-    ``params`` are each source DataFrame's fingerprint
-    (``params["input_fp"]``) and whether a split filter applies, so
-    re-running into the same out_dir with *different inputs* recomputes
-    instead of serving the stale committed snapshot. The match rules
-    (the blocking key set and caps, the scoring weights and thresholds:
-    module constants in operators/blocking.py, operators/scoring.py and
-    plans/pipeline.py) are code, so changing one calls for a fresh
-    out_dir. A fingerprint does not see in-place content changes under
-    an unchanged path — for that, use a fresh out_dir per dataset
-    version (documented contract)."""
+def stage_signature(stage: str, params: dict) -> str:
+    """md5 of the stage name and its parameters. A signature covers
+    inputs only: run_pipeline's ``params`` are each source DataFrame's
+    fingerprint (``params["input_fp"]``) and whether a split filter
+    applies, so re-running into the same out_dir with *different
+    inputs* recomputes instead of serving the stale committed snapshot.
+    Every stage's params are the whole input identity, so a parent
+    stage's signature, itself a function of the same params, would add
+    nothing. The match rules (the blocking key set and caps, the
+    scoring weights and thresholds: module constants in
+    operators/blocking.py, operators/scoring.py and plans/pipeline.py)
+    are code, so changing one calls for a fresh out_dir. A fingerprint
+    does not see in-place content changes under an unchanged path — for
+    that, use a fresh out_dir per dataset version (documented
+    contract)."""
     payload = json.dumps(
-        {"stage": stage, "params": params, "parents": parents},
+        {"stage": stage, "params": params},
         sort_keys=True,
         default=str,
     )
@@ -104,22 +106,22 @@ class StageStore:
     def committed(self, stage: str, signature: str) -> bool:
         if self.out_dir is None:
             return False
-        # a corrupt manifest means the stage is not trustworthy: treat
-        # it as uncommitted and recompute
+        # a corrupt manifest, or one without the stage schema that load
+        # reads with, means the stage is not trustworthy: treat it as
+        # uncommitted and recompute
         m = self._manifest(stage)
-        return m is not None and m.get("signature") == signature
+        return (
+            m is not None
+            and bool(m.get("schema"))
+            and m.get("signature") == signature
+        )
 
     def load(self, stage: str) -> DataFrame:
         """Read a committed snapshot back with the schema its manifest
-        records, so the read submits no schema-inference job. A manifest
-        without one (corrupt, or written before manifests carried the
-        schema) falls back to a plain Parquet read."""
+        records, so the read submits no schema-inference job."""
         dpath, _ = self._paths(stage)
-        schema = (self._manifest(stage) or {}).get("schema")
-        reader = self.spark.read
-        if schema:
-            reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(dpath)
+        schema = StructType.fromJson(self._manifest(stage)["schema"])
+        return self.spark.read.schema(schema).parquet(dpath)
 
     def commit(self, stage: str, signature: str, df: DataFrame) -> DataFrame:
         """Write snapshot, record schema and row counts, commit manifest,

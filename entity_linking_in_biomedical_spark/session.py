@@ -46,6 +46,14 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager, storageLevel=barrier_level())
 
 
+def sql_conf(spark: SparkSession):
+    """The session's live ``SQLConf`` (a py4j handle). Its getters
+    return typed values, e.g. ``autoBroadcastJoinThreshold()`` and
+    ``filesMaxPartitionBytes()`` as byte counts, where ``spark.conf.get``
+    returns the raw string with a unit suffix (``"10485760b"``)."""
+    return spark._jsparkSession.sessionState().conf()
+
+
 # Confs the engine relies on, whatever starts the session: get_spark
 # sets them, and the CLI's spark-submit path layers them on the
 # submitted conf (engine_builder).

@@ -10,6 +10,7 @@ from entity_linking_in_biomedical_spark.operators.blocking import (
     blocking_keys,
     deletion_keys,
     entity_names,
+    surface_blocking_keys,
 )
 
 
@@ -72,7 +73,7 @@ def _names(spark, pairs):
 def test_exact_and_typo_candidates(spark):
     mentions = _mentions(spark, ["melanoma", "melanona", "zzz999xx"])
     names = _names(spark, [("C1", "melanoma"), ("C2", "carcinoma")])
-    got = block_candidates(mentions, names)
+    got = block_candidates(surface_blocking_keys(mentions), names)
     pairs = {(r["norm"], r["cui"]) for r in got.collect()}
     assert ("melanoma", "C1") in pairs
     assert ("melanona", "C1") in pairs  # typo found via del/lsh channel
@@ -86,7 +87,7 @@ def test_hot_key_cap_drops_mega_blocks(spark, monkeypatch):
     monkeypatch.setattr(B, "MAX_KEY_FREQ", 50)
     mentions = _mentions(spark, ["shared name"])
     names = _names(spark, [(f"C{i}", "shared name") for i in range(100)])
-    got = block_candidates(mentions, names)
+    got = block_candidates(surface_blocking_keys(mentions), names)
     assert got.count() == 0
 
 
@@ -97,7 +98,7 @@ def test_top_k_cap(spark, monkeypatch):
     mentions = _mentions(spark, ["akx"])
     # 40 near-matching entities; TOP_K=5 keeps 5
     names = _names(spark, [(f"C{i:02d}", "ak" + chr(97 + i % 26)) for i in range(40)])
-    got = block_candidates(mentions, names)
+    got = block_candidates(surface_blocking_keys(mentions), names)
     assert got.filter(F.col("norm") == "akx").count() <= 5
 
 
@@ -152,7 +153,9 @@ def test_blocking_skew_invariant_guard(spark, corpus):
     docs, ents, _, abbr, _ = corpus.to_spark(spark)
     mentions = extract_mentions(docs, abbr)
     names = entity_names(ents)
-    cands = block_candidates(mentions, names, skew_assert=True)  # no raise
+    cands = block_candidates(
+        surface_blocking_keys(mentions), names, skew_assert=True
+    )  # no raise
     assert max_candidates_per_surface(cands) <= blocking_skew_bound()
 
 
@@ -172,7 +175,7 @@ def test_blocking_skew_guard_trips_when_bound_shrinks(spark, corpus, monkeypatch
     names = B.entity_names(ents)
     monkeypatch.setattr(B, "blocking_skew_bound", lambda *a, **k: 0)
     with pytest.raises(AssertionError, match="skew invariant"):
-        B.block_candidates(mentions, names, skew_assert=True)
+        B.block_candidates(B.surface_blocking_keys(mentions), names, skew_assert=True)
 
 
 _RESTART_SCRIPT = """

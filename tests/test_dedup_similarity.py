@@ -488,18 +488,3 @@ def test_semantic_dedup_blocking_is_cluster_local(spark):
     got = {r["vec_id"]: (r["cluster"], r["kept"]) for r in out}
     assert got[2][0] != got[3][0], "test premise: pair split across clusters"
     assert got[2][1] == 1 and got[3][1] == 1
-
-
-def test_semantic_dedup_max_cluster_skips_pairwise(spark):
-    """Clusters above the skew valve keep ALL rows (pairwise skipped),
-    smaller clusters still prune."""
-    from entity_linking_in_biomedical_spark.operators.dedup import semantic_dedup
-
-    # ids 0 and 1 are the first-2-by-id k-means init, one per group
-    big = [(i, [1.0, 0.0, 0.001 * i]) for i in (0, 2, 3, 4, 5, 6)]  # all near-dup
-    small = [(1, [0.0, 1.0, 0.0]), (11, [0.0, 0.999, 0.04])]
-    df = spark.createDataFrame(big + small, "vec_id int, embedding array<double>")
-    out = semantic_dedup(df, k=2, iters=1, cosine_threshold=0.9, max_cluster=4)
-    got = {r["vec_id"]: r["kept"] for r in out.collect()}
-    assert all(got[i] == 1 for i in (0, 2, 3, 4, 5, 6)), "big cluster must be exempt"
-    assert got[1] == 1 and got[11] == 0

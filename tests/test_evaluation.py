@@ -305,43 +305,6 @@ def test_em_fit_degenerate_single_pattern_no_nan():
     assert all(not math.isnan(x) for x in flat)
 
 
-def test_meta_block_prune_jaccard_scheme(spark):
-    """Jaccard weights normalize by block-set size: a pair sharing 2 of
-    2 blocks outranks a pair sharing 2 of many, and min_weight prunes
-    on the normalized value."""
-    from entity_linking_in_biomedical_spark.operators.meta_blocking import (
-        meta_block_prune,
-    )
-
-    rows = (
-        # a,b: each in exactly the 2 shared blocks -> jaccard 1.0
-        [("a", "s1"), ("a", "s2"), ("b", "s1"), ("b", "s2")]
-        # c,d: share 2 blocks but each member of 4 SURVIVING blocks
-        # (jaccard is over the purged sets, so every block needs >= 2
-        # members) -> 2/(4+4-2) = 1/3
-        + [("c", f"t{i}") for i in range(4)]
-        + [("d", f"t{i}") for i in range(2)]
-        + [("d", "u1"), ("d", "u2"), ("e", "t0"), ("e", "t1")]
-        + [("f", "t2"), ("f", "t3"), ("g", "u1"), ("g", "u2")]
-    )
-    blocks = spark.createDataFrame(rows, "doc_id string, bk string")
-    out = meta_block_prune(
-        blocks, max_block=10, min_common=2, scheme="jaccard"
-    ).collect()
-    got = {(r["a_id"], r["b_id"]): (r["common_blocks"], r["weight"]) for r in out}
-    assert got[("a", "b")] == (2, 1.0)
-    assert got[("c", "d")][0] == 2 and got[("c", "d")][1] == pytest.approx(
-        2 / (4 + 4 - 2)
-    )
-    pruned = meta_block_prune(
-        blocks, max_block=10, min_common=2, scheme="jaccard", min_weight=0.5
-    ).collect()
-    keys = {(r["a_id"], r["b_id"]) for r in pruned}
-    assert ("a", "b") in keys and ("c", "d") not in keys
-    with pytest.raises(ValueError):
-        meta_block_prune(blocks, scheme="nope")
-
-
 def _pure_card(pairs):
     """Pure-python twin of cluster_pair_metrics for differential
     property testing."""

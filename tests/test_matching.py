@@ -146,23 +146,6 @@ def test_repair_splits_weak_chain_keeps_triangle(spark):
     }
 
 
-def test_repair_min_support_two_needs_two_triangles(spark):
-    # diamond a-b-c-d with both diagonals: edge (b,c) sits in 2 triangles,
-    # rim edges in 1 -> min_support=2 keeps only (b,c)
-    rows = [
-        ("a", "b", 0.5),
-        ("b", "c", 0.5),
-        ("c", "d", 0.5),
-        ("a", "c", 0.5),
-        ("b", "d", 0.5),
-    ]
-    assign, _ = repair_bridged_clusters(
-        _edges(spark, rows), min_bridge_score=2.0, min_support=2
-    )
-    got = {r["node"]: r["cluster_id"] for r in assign.collect()}
-    assert got == {"a": "a", "b": "b", "c": "b", "d": "d"}
-
-
 def test_repair_all_nodes_survive_as_singletons(spark):
     assign, _ = repair_bridged_clusters(
         _edges(spark, [("x", "y", 0.1)]), min_bridge_score=0.95

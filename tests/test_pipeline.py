@@ -193,12 +193,16 @@ def test_missing_input_column_fails_before_any_job(spark, corpus, name, column):
         ("nan", "NaN or infinite"),
         ("inf", "NaN or infinite"),
         ("-inf", "NaN or infinite"),
+        ("null-norm", "null or empty norm"),
+        ("empty-norm", "null or empty norm"),
     ],
 )
 def test_bad_embeddings_fail_at_the_boundary(spark, corpus, bad, problem):
-    """One vector of another length (a zero-length one included) or a
-    non-finite component raises one ValueError naming the problem,
-    instead of a null or NaN dot feature."""
+    """One vector of another length (a zero-length one included), a
+    non-finite component, or a vector keyed by a null or empty norm
+    raises one ValueError naming the problem (and the bad vector's
+    norm), instead of a null or NaN dot feature or a lookup row no
+    surface can match."""
     docs, ents, _, abbr, _ = corpus.to_spark(spark)
     emb = corpus.embeddings_df(spark)
     vec = list(emb.first()["embedding"])
@@ -208,10 +212,58 @@ def test_bad_embeddings_fail_at_the_boundary(spark, corpus, bad, problem):
         "nan": [float("nan")] + vec[1:],
         "inf": vec[:-1] + [float("inf")],
         "-inf": [float("-inf")] + vec[1:],
-    }[bad]
-    emb = emb.unionByName(spark.createDataFrame([("zz bad vector", bad_vec)], emb.schema))
-    with pytest.raises(ValueError, match=f"{problem}.*'zz bad vector'"):
+    }.get(bad, vec)
+    norm = {"null-norm": None, "empty-norm": ""}.get(bad, "zz bad vector")
+    match = problem if norm != "zz bad vector" else f"{problem}.*'zz bad vector'"
+    emb = emb.unionByName(spark.createDataFrame([(norm, bad_vec)], emb.schema))
+    with pytest.raises(ValueError, match=match):
         run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr)
+
+
+@pytest.mark.parametrize("threshold, hinted", [(None, True), ("-1", False)])
+def test_embedding_broadcast_follows_the_session_threshold(
+    spark, corpus, monkeypatch, threshold, hinted
+):
+    """The me/mm embedding joins carry a broadcast hint exactly when the
+    lookup's vectors (rows × length × 8 bytes) fit the session's
+    spark.sql.autoBroadcastJoinThreshold; -1 (broadcast off) leaves
+    them unhinted."""
+    import entity_linking_in_biomedical_spark.plans.pipeline as P
+
+    class Stop(Exception):
+        pass
+
+    def stop(*args, **kwargs):
+        raise Stop
+
+    def emb_hints(df):
+        # a broadcast hint directly over the a_emb/b_emb projection of
+        # the lookup (other broadcasts, e.g. the hot-key cap, don't count)
+        lines = df._jdf.queryExecution().analyzed().toString().splitlines()
+        return sum(
+            "ResolvedHint (strategy=broadcast)" in a and "_emb#" in b
+            for a, b in zip(lines, lines[1:])
+        )
+
+    docs, ents, _, abbr, _ = corpus.to_spark(spark)
+    emb = corpus.embeddings_df(spark)
+    seen, orig_score = [], P.score_pairs
+    monkeypatch.setattr(
+        P, "score_pairs", lambda pairs, idf: seen.append(pairs) or orig_score(pairs, idf)
+    )
+    # both scoring stages are planned before clustering: stop there
+    monkeypatch.setattr(P, "connected_components", stop)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        with pytest.raises(Stop):
+            run_pipeline(spark, docs, ents, embeddings=emb, abbr_map=abbr)
+    finally:
+        spark.conf.set(key, old)
+    assert len(seen) == 2  # me pairs, mm pairs
+    assert [emb_hints(df) for df in seen] == ([2, 2] if hinted else [0, 0])
 
 
 @pytest.mark.parametrize("persist", [False, True])

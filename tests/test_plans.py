@@ -86,11 +86,14 @@ def test_blocking_has_no_cartesian(spark, corpus):
     from entity_linking_in_biomedical_spark.operators.blocking import (
         block_candidates,
         entity_names,
+        surface_blocking_keys,
     )
     from entity_linking_in_biomedical_spark.operators.mentions import extract_mentions
 
     docs, ents, *_ = corpus.to_spark(spark)
-    cands = block_candidates(extract_mentions(docs), entity_names(ents))
+    cands = block_candidates(
+        surface_blocking_keys(extract_mentions(docs)), entity_names(ents)
+    )
     plan = plan_of(cands)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -285,11 +288,12 @@ def test_lm_nll_scan_count_bounded(spark):
     assert scans <= 2, f"LM self-score plan re-derives the corpus: {scans} scans"
 
 
-def test_round5_new_ops_stay_jvm_side_and_partial_agg(spark):
+def test_round5_new_ops_stay_jvm_side_and_partial_agg(spark, monkeypatch):
     """DSIR weighting, the LR feature/gradient pass, and the k-means
     E-step/M-step are pure column-expression plans: zero Python/Arrow
     boundaries, broadcast for the model-sized side, map-side partial
     aggregation before every shuffle."""
+    from entity_linking_in_biomedical_spark.operators import sampling
     from entity_linking_in_biomedical_spark.operators.classifier import (
         quality_features,
     )
@@ -300,7 +304,11 @@ def test_round5_new_ops_stay_jvm_side_and_partial_agg(spark):
         [(i, f"some text {i}", i % 3 == 0) for i in range(30)],
         "doc_id int, text string, is_tgt boolean",
     )
-    w = dsir_weights(docs, "is_tgt", reuse=False)
+    # dsir_weights pins its featurized frame; without the barrier the
+    # plan shows the featurize aggregate the barrier would hide
+    monkeypatch.setattr(sampling, "pin", lambda df: df)
+    w = dsir_weights(docs, "is_tgt")
+    monkeypatch.undo()
     plan = plan_of(w)
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "partial" in plan  # featurize + weight groupBys combine map-side

@@ -32,11 +32,11 @@ def parquet_files(path) -> set[str]:
 def test_stage_store_roundtrip(spark, tmp_path):
     store = StageStore(spark, str(tmp_path))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    sig = stage_signature("s1", {"p": 1}, [])
+    sig = stage_signature("s1", {"p": 1})
     out = store.commit("s1", sig, df)
     assert out.count() == 2
     assert store.committed("s1", sig)
-    assert not store.committed("s1", stage_signature("s1", {"p": 2}, []))
+    assert not store.committed("s1", stage_signature("s1", {"p": 2}))
     m = json.load(open(tmp_path / "s1" / "_MANIFEST.json"))
     assert m["rows"] == 2 and sum(m["partition_rows"].values()) == 2
     # a plain stage keys its footer counts by file
@@ -58,7 +58,7 @@ def test_commit_submits_no_job_beyond_its_write(spark, tmp_path):
     df.write.parquet(str(tmp_path / "bare"))
     bare_jobs = next_job_id(spark) - before
 
-    sig = stage_signature("s1", {"p": 1}, [])
+    sig = stage_signature("s1", {"p": 1})
     before = next_job_id(spark)
     out = store.commit("s1", sig, df)
     assert next_job_id(spark) - before == bare_jobs
@@ -75,19 +75,26 @@ def test_commit_submits_no_job_beyond_its_write(spark, tmp_path):
 
 def test_corrupt_manifest_treated_as_uncommitted(spark, tmp_path):
     """A truncated/corrupt _MANIFEST.json (external tampering, partial
-    copy of a user-supplied out_dir) must read as NOT committed — the
-    stage recomputes instead of the pipeline crashing — and load() must
-    degrade to a plain parquet read of whatever data exists."""
+    copy of a user-supplied out_dir), or one without the stage schema
+    that load() reads with, must read as NOT committed: the stage
+    recomputes instead of the pipeline crashing."""
     store = StageStore(spark, str(tmp_path))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    sig = stage_signature("s1", {"p": 1}, [])
+    sig = stage_signature("s1", {"p": 1})
     store.commit("s1", sig, df)
     assert store.committed("s1", sig)
 
     mpath = tmp_path / "s1" / "_MANIFEST.json"
+    good = json.loads(mpath.read_text())
     mpath.write_text('{"signature": "tru')  # truncated mid-write
     assert not store.committed("s1", sig)
-    assert store.load("s1").count() == 2  # data files still readable
+    mpath.write_text(json.dumps({k: v for k, v in good.items() if k != "schema"}))
+    assert not store.committed("s1", sig)
+
+    out = store.get_or_compute("s1", sig, lambda: df)
+    assert out.count() == 2
+    assert not store.metrics[-1].get("resumed")
+    assert store.committed("s1", sig)  # the recompute committed it again
 
 
 def test_stage_store_rejects_uri_out_dir(spark, corpus, tmp_path):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from entity_linking_in_biomedical_spark.operators.sharding import (
     contiguous_shards,
-    hash_shards,
     shard_manifest,
     write_shards,
 )
@@ -23,13 +22,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id string, text string").withColumn(
         "sz", F.length("text").cast("long")
     )
-
-
-def test_hash_shards_range_and_determinism(spark, docs):
-    a = hash_shards(docs, 8).select("doc_id", "shard_id").collect()
-    b = hash_shards(docs.repartition(7), 8).select("doc_id", "shard_id").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert {r["shard_id"] for r in a} <= set(range(8))
 
 
 def _expected_contiguous(rows, shard_size, seed="shard"):
@@ -97,7 +89,5 @@ def test_write_shards_roundtrip(spark, docs, tmp_path):
 
 
 def test_validation(spark, docs):
-    with pytest.raises(ValueError):
-        hash_shards(docs, 0)
     with pytest.raises(ValueError):
         contiguous_shards(docs, 0, "sz")

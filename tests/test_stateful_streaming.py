@@ -1,83 +1,8 @@
-"""Streaming decontamination: the stateless stream-static forms
-(``stream_contamination``, ``scrub_stream``) agree with their batch
-operators, and their broadcast budget fails at construction time."""
+"""Streaming decontamination: the stateless stream-static scrub
+(``scrub_stream``) agrees with its batch operator, and its broadcast
+budget fails at construction time."""
 
 from __future__ import annotations
-
-
-def test_stream_contamination_matches_batch(spark, tmp_path):
-    """Online decontamination (stateless stream-static cross with
-    broadcast test grams) agrees exactly with the batch operator on
-    the same input, running as a real streaming query."""
-    from entity_linking_in_biomedical_spark.operators.contamination import (
-        ngram_contamination,
-        stream_contamination,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus_rows = [
-        ("c1", f"intro words {base} trailing text one"),   # contains eval1's window
-        ("c2", "totally different content with no shared grams at all here"),
-        ("c3", f"{base} {base}"),                           # repeated phrase: dedup per doc
-    ]
-    test_rows = [
-        ("eval1", base),
-        ("eval2", "nothing matches this evaluation document words"),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id string, text string")
-    test = spark.createDataFrame(test_rows, "test_id string, text string")
-
-    want = {
-        (r["doc_id"], r["test_id"]): (r["n_overlap"], r["contamination"])
-        for r in ngram_contamination(corpus, test, n=8).collect()
-    }
-    assert want, "batch operator must flag the planted overlap"
-
-    src = str(tmp_path / "stream_src")
-    corpus.write.parquet(src)
-    stream = spark.readStream.schema(corpus.schema).parquet(src)
-    q = (
-        stream_contamination(stream, test, n=8)
-        .writeStream.format("memory")
-        .queryName("contam_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["doc_id"], r["test_id"]): (r["n_overlap"], r["contamination"])
-        for r in spark.sql("select * from contam_stream").collect()
-    }
-    assert got == want
-
-
-def test_stream_contamination_broadcast_guard(spark, tmp_path):
-    """A test side whose distinct-gram total exceeds the broadcast
-    budget must raise at stream-construction time (not OOM mid-stream),
-    and the error must name the batch operator to run per micro-batch."""
-    import pytest
-
-    from entity_linking_in_biomedical_spark.operators.contamination import (
-        stream_contamination,
-    )
-
-    test = spark.createDataFrame(
-        [("eval1", " ".join(f"w{i}" for i in range(40)))],
-        "test_id string, text string",
-    )
-    src = str(tmp_path / "guard_src")
-    spark.createDataFrame(
-        [("c1", "some text")], "doc_id string, text string"
-    ).write.parquet(src)
-    stream = spark.readStream.schema("doc_id string, text string").parquet(src)
-
-    # 40 tokens, n=8 -> 33 distinct grams; budget of 10 trips the guard
-    with pytest.raises(ValueError, match="ngram_contamination"):
-        stream_contamination(stream, test, n=8, max_broadcast_grams=10)
-
-    # same budget, guard disabled: construction succeeds
-    stream_contamination(stream, test, n=8, max_broadcast_grams=None)
 
 
 def test_scrub_stream_matches_batch(spark, tmp_path):
@@ -136,11 +61,14 @@ def test_scrub_stream_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_scrub_stream_broadcast_guard(spark, tmp_path):
-    """scrub_stream shares stream_contamination's construction-time
-    broadcast budget."""
+def test_scrub_stream_broadcast_guard(spark, tmp_path, monkeypatch):
+    """A test side whose distinct-gram total exceeds the broadcast
+    budget must raise at stream-construction time (not OOM mid-stream),
+    and the error must name the batch operator to run per
+    micro-batch."""
     import pytest
 
+    from entity_linking_in_biomedical_spark.operators import contamination
     from entity_linking_in_biomedical_spark.operators.contamination import (
         scrub_stream,
     )
@@ -155,8 +83,11 @@ def test_scrub_stream_broadcast_guard(spark, tmp_path):
     ).write.parquet(src)
     stream = spark.readStream.schema("doc_id string, text string").parquet(src)
 
-    # the guard must name the SCRUB family's batch operator, not the
-    # detection family's (different output contract)
+    # 40 tokens, n=8 -> 33 distinct grams: a budget of 33 passes, 32
+    # trips the guard, which must name the SCRUB family's batch operator
+    # (not the detection family's: different output contract)
+    monkeypatch.setattr(contamination, "MAX_BROADCAST_GRAMS", 33)
+    scrub_stream(stream, test, n=8)
+    monkeypatch.setattr(contamination, "MAX_BROADCAST_GRAMS", 32)
     with pytest.raises(ValueError, match="scrub_contamination"):
-        scrub_stream(stream, test, n=8, max_broadcast_grams=10)
-    scrub_stream(stream, test, n=8, max_broadcast_grams=None)
+        scrub_stream(stream, test, n=8)
